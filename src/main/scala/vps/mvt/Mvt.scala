@@ -313,9 +313,8 @@ object Mvt {
         case _             => r.skip(wt)
       }
     }
-    val feats = rawFeatures.map { case (b, s, e) =>
-      decodeFeature(new PbReader(b, s, e), keys.toIndexedSeq, values.toIndexedSeq)
-    }
+    val (keyTable, valueTable) = (keys.toIndexedSeq, values.toIndexedSeq)
+    val feats = rawFeatures.map { case (b, s, e) => decodeFeature(new PbReader(b, s, e), keyTable, valueTable) }
     MvtLayer(name, extent, version, feats.toSeq)
   }
 
@@ -365,10 +364,10 @@ object Mvt {
     val attrs = tags.grouped(2).collect {
       case mutable.ArrayBuffer(k, v) if k < keys.length && v < values.length => keys(k) -> values(v)
     }.toSeq
-    MvtFeature(id, decodeGeometry(geomType, cmds.toSeq), attrs)
+    MvtFeature(id, decodeGeometry(geomType, cmds.toArray), attrs)
   }
 
-  def decodeGeometry(geomType: Int, cmds: Seq[Long]): Geometry = {
+  def decodeGeometry(geomType: Int, cmds: Array[Long]): Geometry = {
     val f = Geo.factory
     var cx = 0L
     var cy = 0L

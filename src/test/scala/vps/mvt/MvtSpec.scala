@@ -113,6 +113,27 @@ class MvtSpec extends AnyFunSuite {
     }
   }
 
+  test("a 100k-vertex line and a 2k-feature layer round trip in linear time") {
+    // a lawnmower path over 100 rows of 1000 columns: every vertex distinct
+    val line = Geo.factory.createLineString(Array.tabulate(100000) { i =>
+      val (row, col) = (i / 1000, i % 1000)
+      new Coordinate((if (row % 2 == 0) col else 999 - col).toDouble, row.toDouble)
+    })
+    val points = (0 until 2000).map(i => MvtFeature(Some(i.toLong), Geo.point(i % 64 * 60.0, i / 64 * 60.0),
+      Seq(s"k${i % 50}" -> MvtValue.I64(i), "name" -> MvtValue.Str(s"f$i"))))
+    val tile = MvtTile(Seq(
+      MvtLayer("line", 4096, 2, Seq(MvtFeature(Some(1L), line, Seq.empty))),
+      MvtLayer("points", 4096, 2, points)))
+    val t0 = System.nanoTime()
+    val back = roundTrip(tile)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(back.layers.map(_.name) === Seq("line", "points"))
+    assert(back.layers.head.features.head.geometry.equalsExact(line))
+    assert(back.layers(1).features === points)
+    // a decoder that indexes a linked list by position takes minutes here
+    assert(seconds < 10, s"round trip took $seconds s")
+  }
+
   private def dedupe(pts: Array[Coordinate]): Array[Coordinate] =
     pts.foldLeft(Vector.empty[Coordinate]) { (acc, c) =>
       if (acc.nonEmpty && acc.last.equals2D(c)) acc else acc :+ c
