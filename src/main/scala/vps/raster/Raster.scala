@@ -58,41 +58,12 @@ object Raster {
       .as[RasterTile]
   }
 
-  /** Reference implementation of [[rasterize]] that shuffles every point row
-    * to its tile's reducer — kept ONLY as the byte-equality oracle for
-    * RasterSpec (same [[burn]] kernel, opposite shuffle shape). Do not use at
-    * scale: a hot tile floods one reducer with O(points) rows.
-    */
-  private[vps] def rasterizePointShuffle(
-      input: DataFrame,
-      zoom: Int,
-      resolution: Int = 256,
-      weightCol: Option[String] = None): Dataset[RasterTile] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    val weighted = weightCol.map(c => input.withColumn("_w", col(c).cast("double")))
-      .getOrElse(input.withColumn("_w", lit(1.0)))
-
-    weighted
-      .select(col("geom"), col("_w"), explode(tile_keys(col("geom"), zoom)).as("k"))
-      .select(st_asWKB(col("geom")).as("wkb"), col("_w"), col("k.x").as("x"), col("k.y").as("y"))
-      .as[(Array[Byte], Double, Int, Int)]
-      .groupByKey(r => (r._3, r._4))
-      .mapGroups[RasterTile] { (key: (Int, Int), rows: Iterator[(Array[Byte], Double, Int, Int)]) =>
-        val (x, y) = key
-        val env = TileMath.tileEnvelopeLatLng(zoom, x, y)
-        val cells = new Array[Double](resolution * resolution)
-        rows.foreach { case (wkb, w, _, _) => burn(Wkb.read(wkb), w, env, resolution, cells) }
-        RasterTile(zoom, x, y, resolution, cells.map(_.toFloat))
-      }
-  }
-
-  /** Burn one geometry into a tile grid (shared by both rasterize paths and
-    * [[GridBurn]]): points increment their containing cell; other geometries
-    * burn every cell whose box intersects the geometry. Cells accumulate in
-    * DOUBLE (rounded to float once at output), so weights that are not
-    * exactly float-representable don't make the result depend on
-    * partial-merge arrival order.
+  /** Burn one geometry into a tile grid (the kernel of [[GridBurn]], and of
+    * the point-shuffle oracle in the tests): points increment their
+    * containing cell; other geometries burn every cell whose box intersects
+    * the geometry. Cells accumulate in DOUBLE (rounded to float once at
+    * output), so weights that are not exactly float-representable don't make
+    * the result depend on partial-merge arrival order.
     *
     * Cost shape: polygons and lines burn via [[burnScan]] — JTS is consulted
     * only for the O(perimeter) boundary-candidate cells and the interior

@@ -449,14 +449,14 @@ object StUnionAgg {
     * JTS's own cascaded union (and even envelope-disjoint binary union) is
     * SUPER-LINEAR in the component count of its inputs — measured 318 us/box
     * at n=1.25e4 vs 1363 at n=5e4 for UnaryUnionOp over fully disjoint boxes
-    * ([[vps.tools.JtsUnionProbe]]) — because every intermediate overlay
-    * re-nodes the accumulated component set. Here components are first
-    * clustered by envelope overlap (STRtree + union-find, O(n log n)); a real
-    * overlay union runs only WITHIN each cluster (where boundaries can
-    * actually dissolve), and cluster results — provably disjoint across
-    * clusters — are concatenated without noding. Disjoint-heavy dissolve
-    * groups become ~linear; fully-overlapping input degenerates to exactly
-    * the cascaded union it would run anyway.
+    * (BENCH/BASELINE.md, "Dissolve cost shape fix") — because every
+    * intermediate overlay re-nodes the accumulated component set. Here
+    * components are first clustered by envelope overlap (STRtree +
+    * union-find, O(n log n)); a real overlay union runs only WITHIN each
+    * cluster (where boundaries can actually dissolve), and cluster results —
+    * provably disjoint across clusters — are concatenated without noding.
+    * Disjoint-heavy dissolve groups become ~linear; fully-overlapping input
+    * degenerates to exactly the cascaded union it would run anyway.
     */
   def clusterUnion(geoms: Seq[Geometry]): Geometry = {
     val comps = scala.collection.mutable.ArrayBuffer.empty[Geometry]

@@ -1,11 +1,10 @@
 package vps.tiling
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.locationtech.jts.geom.Geometry
+import org.apache.spark.storage.StorageLevel
 
-import vps.geom.{Wkb}
-import vps.mvt.{Mvt, MvtFeature, MvtTile, MvtValue, TileBuilder}
+import vps.mvt.{Mvt, TileBuilder}
 import vps.sql.functions._
 
 /** The per-zoom tiling fold of the reference (`VectorPipe.scala:88-197`,
@@ -13,10 +12,8 @@ import vps.sql.functions._
   * inside the Dataset API — no `.rdd` hop, no Kryo; geometry rides the WKB UDT
   * through Tungsten.
   *
-  * Exchange strategy is pluggable (see [[TilePipeline.PackStrategy]]): the
-  * default fuses clip + MVT command-int encode map-side and exchanges
-  * pre-encoded fragments ONCE, keyed by tile; the salted two-phase variants
-  * (SURVEY.md §4) remain for A/B measurement, all byte-identical.
+  * One exchange per zoom: clip + MVT command-int encode run fused map-side and
+  * the pre-encoded fragments are exchanged ONCE, keyed by tile.
   */
 /** One encoded tile. */
 final case class TileRow(zoom: Int, x: Int, y: Int, mvt: Array[Byte], features: Int)
@@ -24,56 +21,18 @@ final case class TileRow(zoom: Int, x: Int, y: Int, mvt: Array[Byte], features: 
 /** One packed feature. `layer` is null in single-layer mode (resolved to
   * Options.layerName at encode time), so the common case pays one null bit per
   * feature, not a repeated string. `payload` is the PRE-ENCODED MVT geometry
-  * (command ints in tile-local coords), not WKB: smaller through the merge
-  * shuffle (a point is ~4-8 varint bytes vs 21 WKB bytes) and phase 2 never
+  * (command ints in tile-local coords), not WKB: smaller through the tile
+  * shuffle (a point is ~4-8 varint bytes vs 21 WKB bytes) and the reducer never
   * re-parses geometry. `area` rides along only when Options.orderAreas needs
   * it (0.0 otherwise).
   */
 private[tiling] final case class Feat(
     id: Long, layer: String, gt: Int, area: Double, payload: Array[Byte])
 
-/** Phase-1 output: packed features of one (tile, salt) bucket (salt dropped —
-  * the final per-layer id sort makes partial order irrelevant).
-  */
-private[tiling] final case class PackedTile(x: Int, y: Int, feats: Array[Feat])
-
 object TilePipeline {
 
   type TileRow = vps.tiling.TileRow
   val TileRow = vps.tiling.TileRow
-
-  /** How fragments travel from the map side to the tile encoder. All
-    * strategies produce byte-identical tiles (spec-gated); they differ in
-    * exchange count and map-side combining:
-    *
-    * - [[PackStrategy.SinglePhase]] (default): clip + encode fragments
-    *   map-side (fused generator), ONE exchange keyed by tile, encode in the
-    *   reducer. Fewest shuffles and stage barriers; measured fastest at
-    *   bench scale. A tile's encode is single-threaded under every strategy
-    *   (one MVT = one byte stream), so the salted split buys no encode
-    *   parallelism — keep zooms with huge per-tile feature counts in check
-    *   with a `reduce` decimation hook, as the reference does.
-    * - [[PackStrategy.SaltedSort]]: round-2 shape — salted two-phase
-    *   (pack per (tile, salt), merge per tile), sort-based phase 1.
-    * - [[PackStrategy.SaltedHash]]: two-phase with a hash-agg phase 1
-    *   (collect_list): partial aggregation merges fragments MAP-SIDE, so the
-    *   exchange carries one packed row per (tile, salt, map partition).
-    *   Measured SLOWER at every zoom tried (z5 and z8): collecting
-    *   aggregates shrink row count but not bytes, and each fragment pays an
-    *   object-buffer copy — map-side combine only pays for genuinely
-    *   reducing aggregates. Kept as an A/B variant; requires
-    *   `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` raised
-    *   above the per-partition group count.
-    * - [[PackStrategy.WkbPhase1]]: A/B baseline — clipped WKB through a
-    *   salted exchange, transform+encode reduce-side.
-    */
-  sealed trait PackStrategy
-  object PackStrategy {
-    case object SinglePhase extends PackStrategy
-    case object SaltedSort extends PackStrategy
-    case object SaltedHash extends PackStrategy
-    case object WkbPhase1 extends PackStrategy
-  }
 
   final case class Options(
       layerName: String = "features",
@@ -84,7 +43,6 @@ object TilePipeline {
         */
       layerColumn: Option[String] = None,
       extent: Int = 4096,
-      saltBuckets: Int = 8,
       orderAreas: Boolean = false,
       simplify: Boolean = true,
       /** Douglas-Peucker by default (north-star spec); set true for JTS
@@ -92,15 +50,6 @@ object TilePipeline {
         */
       preserveTopology: Boolean = false,
       clipTimeoutMs: Long = 5000,
-      /** Force an extra shuffle by (tile, salt) BEFORE clipping, so pathological
-        * geometries clustered in input partitions get spread first (the
-        * reference's repartition-then-clip). Off by default: the phase-1
-        * groupByKey exchange already distributes by (tile, salt), and clipping
-        * map-side removes a full-corpus shuffle.
-        */
-      spreadBeforeClip: Boolean = false,
-      /** Exchange/pack strategy — see [[PackStrategy]]. */
-      strategy: PackStrategy = PackStrategy.SinglePhase,
       /** Counts clip timeouts/topology failures (original geometry passes
         * through, never silently dropped) across the whole pipeline.
         */
@@ -218,114 +167,37 @@ object TilePipeline {
 
   /** Fragment-encode, exchange, tile-encode — shared tail of both keyed entry
     * points. Input: (id: long, layer: string-or-null, geom, x, y).
-    * Strategy dispatch per [[PackStrategy]].
+    *
+    * clip -> tile-local transform -> command-int encode run fused map-side in
+    * one generator, so geometry is parsed once per (feature, tile) and empty
+    * clips vanish there; then ONE exchange keyed by tile, and the reducer
+    * encodes each tile directly. A tile's encode is single-threaded (one MVT
+    * is one byte stream): keep zooms with huge per-tile feature counts in
+    * check with a `reduce` decimation hook, as the reference does.
     */
   private def packAndEncode(keyed: DataFrame, zoom: Int, opts: Options): Dataset[TileRow] = {
     val spark = keyed.sparkSession
     import spark.implicits._
-
-    if (opts.strategy == PackStrategy.SinglePhase) {
-      // clip -> transform -> command-int encode fused map-side, then ONE
-      // exchange keyed by tile and the reducer encodes each tile directly:
-      // no salt split, no second aggregation, one stage barrier fewer
-      val base = if (opts.spreadBeforeClip) keyed.repartition(col("x"), col("y")) else keyed
-      val frags = base
-        .select(col("x"), col("y"), col("id"), col("layer"),
-          explode(tile_fragments(col("geom"), zoom, col("x"), col("y"),
-            opts.extent, opts.orderAreas, opts.clipTimeoutMs, opts.errors)).as("f"))
-        .select(col("x"), col("y"), col("id"), col("layer"),
-          col("f.geomType").as("gt"), col("f.area").as("area"), col("f.payload").as("payload"))
-      return frags
-        .as[(Int, Int, Long, String, Int, Double, Array[Byte])]
-        .groupByKey(r => (r._1, r._2))
-        .mapGroups[TileRow] { (key: (Int, Int), rows: Iterator[(Int, Int, Long, String, Int, Double, Array[Byte])]) =>
-          val feats = rows.map { case (_, _, id, layer, gt, area, payload) =>
-            Feat(id, layer, gt, area, payload)
-          }.toArray
-          encodeTile(zoom, key._1, key._2, feats, opts)
-        }
-    }
-
-    val exploded = keyed
-      .withColumn("salt", pmod(col("id"), lit(opts.saltBuckets)).cast("int"))
-
-    val spread =
-      if (opts.spreadBeforeClip) exploded.repartition(col("x"), col("y"), col("salt"))
-      else exploded
-
-    implicit val packedEnc = Encoders.product[PackedTile]
-    val packed: Dataset[PackedTile] = if (opts.strategy == PackStrategy.WkbPhase1) {
-      // A/B alternative: clipped WKB through the exchange, encode in phase 1
-      val clipped = spread
-        .withColumn("geom", st_clipToTile(col("geom"), lit(zoom), col("x"), col("y")))
-        .where(!st_isEmpty(col("geom")))
-      clipped
-        .select(col("x"), col("y"), col("salt"), col("id"), col("layer"), st_asWKB(col("geom")).as("wkb"))
-        .as[(Int, Int, Int, Long, String, Array[Byte])]
-        .groupByKey(r => (r._1, r._2, r._3))
-        .mapGroups[PackedTile] { (key: (Int, Int, Int), rows: Iterator[(Int, Int, Int, Long, String, Array[Byte])]) =>
-          val (x, y, _) = key
-          val toTile = TileBuilder.lonLatToTile(zoom, x, y, opts.extent)
-          val feats = rows.map { case (_, _, _, id, layer, wkb) =>
-            val g = toTile.transform(Wkb.read(wkb))
-            val (geomType, payload) = Mvt.encodeGeometryPacked(g)
-            Feat(id, layer, geomType, if (opts.orderAreas) g.getArea else 0.0, payload)
-          }.toArray
-          PackedTile(x, y, feats)
-        }
-    } else {
-      // clip -> tile-local transform -> MVT command-int encode, fused in ONE
-      // generator BEFORE the tile exchange: the shuffle carries pre-encoded
-      // fragments (points: ~4-8 bytes vs 21-byte WKB), geometry is parsed
-      // exactly once per (feature, tile), and empty clips vanish without a
-      // pushdown-duplicated isEmpty predicate
-      val frags = spread
-        .select(col("x"), col("y"), col("salt"), col("id"), col("layer"),
-          explode(tile_fragments(col("geom"), zoom, col("x"), col("y"),
-            opts.extent, opts.orderAreas, opts.clipTimeoutMs, opts.errors)).as("f"))
-        .select(col("x"), col("y"), col("salt"), col("id"), col("layer"),
-          col("f.geomType").as("gt"), col("f.area").as("area"), col("f.payload").as("payload"))
-
-      if (opts.strategy == PackStrategy.SaltedSort) {
-        // round-2 shape: sort-based groupByKey pack per (tile, salt)
-        frags
-          .as[(Int, Int, Int, Long, String, Int, Double, Array[Byte])]
-          .groupByKey(r => (r._1, r._2, r._3))
-          .mapGroups[PackedTile] { (key: (Int, Int, Int), rows: Iterator[(Int, Int, Int, Long, String, Int, Double, Array[Byte])]) =>
-            val (x, y, _) = key
-            PackedTile(x, y, rows.map { case (_, _, _, id, layer, gt, area, payload) =>
-              Feat(id, layer, gt, area, payload)
-            }.toArray)
-          }
-      } else {
-        // SaltedHash: collect_list's partial aggregation merges fragments per
-        // (tile, salt) MAP-SIDE before the exchange (the shuffle carries one
-        // packed row per (tile, salt, map partition), not one row per
-        // fragment) — wins when per-partition rows >> tiles x salts
-        frags
-          .groupBy(col("x"), col("y"), col("salt"))
-          .agg(collect_list(struct(col("id"), col("layer"), col("gt"),
-            col("area"), col("payload"))).as("feats"))
-          .select(col("x"), col("y"), col("feats"))
-          .as[PackedTile]
+    keyed
+      .select(col("x"), col("y"), col("id"), col("layer"),
+        explode(tile_fragments(col("geom"), zoom, col("x"), col("y"),
+          opts.extent, opts.orderAreas, opts.clipTimeoutMs, opts.errors)).as("f"))
+      .select(col("x"), col("y"), col("id"), col("layer"),
+        col("f.geomType").as("gt"), col("f.area").as("area"), col("f.payload").as("payload"))
+      .as[(Int, Int, Long, String, Int, Double, Array[Byte])]
+      .groupByKey(r => (r._1, r._2))
+      .mapGroups[TileRow] { (key: (Int, Int), rows: Iterator[(Int, Int, Long, String, Int, Double, Array[Byte])]) =>
+        val feats = rows.map { case (_, _, id, layer, gt, area, payload) =>
+          Feat(id, layer, gt, area, payload)
+        }.toArray
+        encodeTile(zoom, key._1, key._2, feats, opts)
       }
-    }
-
-    // phase 2: merge packed buckets per tile (hash agg again — partials are
-    // already arrays, the merge shuffle is light), then one pass groups into
-    // named layers (sorted by name) with deterministic id order inside each
-    // layer and concatenates the pre-encoded fragments into layer + tile bytes
-    packed
-      .groupBy(col("x"), col("y"))
-      .agg(flatten(collect_list(col("feats"))).as("feats"))
-      .as[PackedTile]
-      .map(p => encodeTile(zoom, p.x, p.y, p.feats, opts))
   }
 
   /** Encode one tile from its merged features (deterministic: layers sorted by
     * name, features id-sorted inside each layer).
     */
-  private def encodeTile(zoom: Int, x: Int, y: Int, feats: Array[Feat], opts: Options): TileRow = {
+  private[tiling] def encodeTile(zoom: Int, x: Int, y: Int, feats: Array[Feat], opts: Options): TileRow = {
     val layers = feats
       .groupBy(f => if (f.layer == null) opts.layerName else f.layer)
       .toSeq.sortBy(_._1)
@@ -339,27 +211,14 @@ object TilePipeline {
     TileRow(zoom, x, y, bytes, layers.iterator.map(_._2).sum)
   }
 
-  /** Build the full pyramid [minZoom, maxZoom], coarsest last. `reduce` runs
-    * before each zoom (the reference's per-zoom decimation hook, e.g. weighted
-    * centroid binning); default keeps all features.
-    */
-  def pyramid(
-      input: DataFrame,
-      minZoom: Int,
-      maxZoom: Int,
-      opts: Options = Options(),
-      reduce: (DataFrame, Int) => DataFrame = (df, _) => df): Seq[(Int, Dataset[TileRow])] = {
-    require(minZoom <= maxZoom)
-    (maxZoom to minZoom by -1).map { z => z -> tileZoom(reduce(input, z), z, opts) }
-  }
-
   /** Pyramid via parent re-key (the reference's `reduceKeys` fold,
     * `VectorPipe.scala:118-122,195`): tile keys are computed from the input
     * ONCE at maxZoom; every coarser zoom derives its keys by halving the
     * previous frame's keys (exact: the z-1 tiles intersecting an envelope are
     * precisely the parents of the intersecting z tiles). The full-resolution
-    * input is scanned once, not once per zoom; frames are persisted between
-    * zooms (reference's optional DISK_ONLY persist, `VectorPipe.scala:188`).
+    * input is scanned once, not once per zoom; frames persist
+    * (MEMORY_AND_DISK) between zooms (the reference's optional persist,
+    * `VectorPipe.scala:188`).
     *
     * Keys ride UNEXPLODED as `keys: array<struct<x,y>>` — one row per
     * (id, layer) with the geometry stored once — and each re-key dedupes
@@ -368,21 +227,22 @@ object TilePipeline {
     * frame would pay a full-row dropDuplicates exchange (WKB included) per
     * zoom. The only exchange per zoom is packAndEncode's tile aggregation.
     *
-    * Output tiles are byte-identical to [[pyramid]] — see [[tileZoomKeyed]].
-    * `reduce` receives ALL input columns plus (id cast long, layer, keys) —
-    * "layer"/"keys" are reserved column names under this fold.
+    * Output tiles are byte-identical to [[tileZoom]] per zoom — see
+    * [[tileZoomKeyed]]. `reduce` receives ALL input columns plus (id cast
+    * long, layer, keys) — "layer"/"keys" are reserved column names under
+    * this fold.
     *
     * Materializes each zoom eagerly via `sink` (needed to unpersist frames
-    * deterministically); returns per-zoom (tiles, features) counts.
+    * deterministically); returns per-zoom (tiles, features) counts. Every
+    * frame and tile set it persists is unpersisted before it returns or
+    * throws, so a failing `sink` leaves the caller's cache as it was.
     */
   def pyramidRekey(
       input: DataFrame,
       minZoom: Int,
       maxZoom: Int,
       opts: Options = Options(),
-      reduce: (DataFrame, Int) => DataFrame = (df, _) => df,
-      persist: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)(
+      reduce: (DataFrame, Int) => DataFrame = (df, _) => df)(
       sink: (Int, Dataset[TileRow]) => Unit): Seq[(Int, Long, Long)] = {
     require(minZoom <= maxZoom)
     val layerExpr = opts.layerColumn
@@ -395,34 +255,31 @@ object TilePipeline {
       .withColumn("id", col("id").cast("long"))
       .withColumn("layer", layerExpr)
       .withColumn("keys", tile_keys(col("geom"), maxZoom))
-    val out = Seq.newBuilder[(Int, Long, Long)]
-    // NONE = recompute frames from lineage (no materialization): right when
-    // the input is already cached / cheap to rescan — the persist of a wide
-    // keys-array frame can cost more than re-deriving it (measured). DISK_ONLY
-    // mirrors the reference's option for sources too big to cache.
-    val doPersist = persist != org.apache.spark.storage.StorageLevel.NONE
-    var z = maxZoom
     var prev: Option[DataFrame] = None
-    while (z >= minZoom) {
-      if (doPersist) frame.persist(persist)
-      // tiles (encoded MVTs, small) are always cached: sink and stats would
-      // otherwise each run the tiling job
-      val tiles = tileZoomKeyed(reduce(frame, z), z, opts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sink(z, tiles)
-      val stats = tiles.toDF()
-        .agg(count(lit(1)), sum(col("features").cast("long"))).head()
-      out += ((z, stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1)))
-      tiles.unpersist()
-      prev.foreach(_.unpersist())
-      prev = Some(frame)
-      if (z > minZoom) {
+    var tiles: Option[Dataset[TileRow]] = None
+    val out = Seq.newBuilder[(Int, Long, Long)]
+    try {
+      for (z <- maxZoom to minZoom by -1) {
+        frame.persist(StorageLevel.MEMORY_AND_DISK)
+        // tiles (encoded MVTs, small) are cached: sink and stats would
+        // otherwise each run the tiling job
+        val t = tileZoomKeyed(reduce(frame, z), z, opts).persist(StorageLevel.MEMORY_AND_DISK)
+        tiles = Some(t)
+        sink(z, t)
+        val stats = t.toDF().agg(count(lit(1)), sum(col("features").cast("long"))).head()
+        out += ((z, stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1)))
+        t.unpersist()
+        tiles = None
+        prev.foreach(_.unpersist())
+        prev = Some(frame)
         // re-key: halve + dedupe the key array per row — no shuffle
-        frame = frame.withColumn("keys", parent_tile_keys(col("keys")))
+        if (z > minZoom) frame = frame.withColumn("keys", parent_tile_keys(col("keys")))
       }
-      z -= 1
+      out.result()
+    } finally {
+      tiles.foreach(_.unpersist())
+      prev.foreach(_.unpersist())
+      frame.unpersist()
     }
-    prev.foreach(_.unpersist())
-    out.result()
   }
 }

@@ -53,7 +53,6 @@ object VectorPipe {
       minZoom: Int,
       maxZoom: Int,
       extent: Int = 4096,
-      saltBuckets: Int = 8,
       outputDir: Option[String] = None,
       /** Derive coarser zooms by halving the maxZoom keys per row (the
         * reference's `reduceKeys` fold): the input is scanned ONCE and the
@@ -68,9 +67,7 @@ object VectorPipe {
       /** Counts clip timeouts/failures across the run (rows pass through,
         * never dropped).
         */
-      errors: Option[vps.geom.ErrorChannel] = None,
-      /** Exchange/pack strategy — see [[TilePipeline.PackStrategy]]. */
-      strategy: TilePipeline.PackStrategy = TilePipeline.PackStrategy.SinglePhase)
+      errors: Option[vps.geom.ErrorChannel] = None)
 
   /** Run the pyramid over (id, geom [, layer-column]) input; writes
     * `z/x/y.mvt` + lineage when `outputDir` is set, always calls the
@@ -88,13 +85,11 @@ object VectorPipe {
       layerName = pipeline.layerName,
       layerColumn = pipeline.layerColumn,
       extent = options.extent,
-      saltBuckets = options.saltBuckets,
       orderAreas = pipeline.orderAreas,
       simplify = pipeline.simplify,
       preserveTopology = pipeline.preserveTopology,
       clipTimeoutMs = pipeline.clipTimeoutMs,
-      errors = options.errors,
-      strategy = options.strategy)
+      errors = options.errors)
     if (options.rekeyPyramid) {
       var out = Vector.empty[(Int, Dataset[TileRow])]
       TilePipeline.pyramidRekey(input, options.minZoom, options.maxZoom, opts,

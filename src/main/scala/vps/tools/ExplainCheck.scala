@@ -16,7 +16,7 @@ object ExplainCheck {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // GridBurn's partial aggregation stays hash-based (see GridBurn)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

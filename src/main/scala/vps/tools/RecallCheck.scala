@@ -13,7 +13,6 @@ object RecallCheck {
     val nQueries = args.lift(1).map(_.toInt).getOrElse(64)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet").cache()

@@ -18,7 +18,6 @@ object SoakTile {
       .config("spark.sql.shuffle.partitions", cpus * 2)
       .config("spark.local.dir",
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-soak-local" else "/tmp")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 22) // hash-agg tile pack (see TilePipeline)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = vps.docs.InterleavedDocs.fromDocuments(spark, dir, replication)

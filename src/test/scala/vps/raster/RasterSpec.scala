@@ -56,21 +56,21 @@ class RasterSpec extends AnyFunSuite {
     def grids(ds: org.apache.spark.sql.Dataset[Raster.RasterTile]) =
       ds.collect().map(t => ((t.x, t.y), t.cells.toSeq)).toMap
     assert(grids(Raster.rasterize(pts, 3, 64)) ===
-      grids(Raster.rasterizePointShuffle(pts, 3, 64)))
+      grids(RasterOracle.rasterizePointShuffle(pts, 3, 64)))
 
     val poly = Seq(
       (1L, "POLYGON ((0 0, 40 0, 40 40, 0 40, 0 0))", 2.5),
       (2L, "LINESTRING (-30 -30, 20 15)", 0.5))
       .toDF("id", "wkt", "wt").select($"id", st_geomFromWKT($"wkt").as("geom"), $"wt")
     assert(grids(Raster.rasterize(poly, 2, 32, weightCol = Some("wt"))) ===
-      grids(Raster.rasterizePointShuffle(poly, 2, 32, weightCol = Some("wt"))))
+      grids(RasterOracle.rasterizePointShuffle(poly, 2, 32, weightCol = Some("wt"))))
 
     // float-UNREPRESENTABLE weights (0.1): cells accumulate in double and
     // round to float once, so the two shuffle shapes (different merge orders)
     // still agree byte-for-byte, and the total matches the closed form
     val w01 = pts.withColumn("wt", lit(0.1))
     val a = grids(Raster.rasterize(w01, 3, 64, weightCol = Some("wt")))
-    assert(a === grids(Raster.rasterizePointShuffle(w01, 3, 64, weightCol = Some("wt"))))
+    assert(a === grids(RasterOracle.rasterizePointShuffle(w01, 3, 64, weightCol = Some("wt"))))
     val total = a.values.flatten.map(_.toDouble).sum
     assert(math.abs(total - 0.1 * pts.count()) < 1e-3, s"total=$total")
   }

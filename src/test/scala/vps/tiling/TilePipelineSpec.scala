@@ -37,9 +37,9 @@ class TilePipelineSpec extends AnyFunSuite {
     assert(decoded.layers.head.version === 2)
   }
 
-  test("tile bytes are deterministic across runs and salt settings") {
+  test("tile bytes are deterministic across runs and input partitionings") {
     val a = TilePipeline.tileZoom(geoms, 5).collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
-    val b = TilePipeline.tileZoom(geoms.repartition(7), 5, TilePipeline.Options(saltBuckets = 3))
+    val b = TilePipeline.tileZoom(geoms.repartition(7), 5)
       .collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
     assert(a.keySet === b.keySet)
     a.foreach { case (k, bytes) => assert(b(k) === bytes, s"tile $k differs") }
@@ -61,7 +61,7 @@ class TilePipelineSpec extends AnyFunSuite {
   }
 
   test("pyramid: parent zoom has same or fewer tiles; totals preserved for points") {
-    val levels = TilePipeline.pyramid(geoms, 2, 4)
+    val levels = TileOracle.pyramid(geoms, 2, 4)
     val counts = levels.map { case (z, ds) =>
       val ts = ds.collect(); z -> (ts.length, ts.map(_.features.toLong).sum)
     }.toMap
@@ -70,37 +70,31 @@ class TilePipelineSpec extends AnyFunSuite {
     assert(counts(2)._1 <= counts(3)._1 && counts(3)._1 <= counts(4)._1)
   }
 
-  test("all pack strategies produce byte-identical tiles") {
+  test("tileZoom is byte-identical to the clipped-WKB tile oracle") {
     val poly = Seq((424242L, "POLYGON ((-10 -10, 10 -10, 10 10, -10 10, -10 -10))"))
       .toDF("id", "wkt").select($"id", st_geomFromWKT($"wkt").as("geom"))
     val input = geoms.unionByName(poly)
-    val fused = TilePipeline.tileZoom(input, 5).collect() // SinglePhase default
+    val fused = TilePipeline.tileZoom(input, 5).collect()
       .map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
-    Seq(TilePipeline.PackStrategy.WkbPhase1, TilePipeline.PackStrategy.SaltedSort,
-      TilePipeline.PackStrategy.SaltedHash).foreach { strat =>
-      val alt = TilePipeline.tileZoom(input, 5, TilePipeline.Options(strategy = strat))
-        .collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
-      assert(alt.keySet === fused.keySet, s"$strat key set")
-      fused.foreach { case (k, bytes) => assert(alt(k) === bytes, s"tile $k differs ($strat)") }
-    }
+    val oracle = TileOracle.tileZoom(input, 5).collect()
+      .map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
+    assert(oracle.size > 10)
+    assert(fused.keySet === oracle.keySet)
+    oracle.foreach { case (k, bytes) => assert(fused(k) === bytes, s"tile $k differs") }
   }
 
-  test("pathological hot tile: 50k features on ONE tile key encode correctly under every strategy") {
+  test("pathological hot tile: 50k features on ONE tile key encode correctly") {
     val n = 50000
     // a dense grid inside one z2 tile
     val pts = spark.range(0, n).toDF("id")
       .select($"id", st_point(
         lit(10.0) + ($"id" % 250).cast("double") * 0.0001,
         lit(10.0) + ($"id" / 250).cast("double") * 0.0001).as("geom"))
-    Seq(TilePipeline.PackStrategy.SinglePhase, TilePipeline.PackStrategy.SaltedSort)
-      .foreach { strat =>
-        val tiles = TilePipeline.tileZoom(pts, 2,
-          TilePipeline.Options(strategy = strat)).collect()
-        assert(tiles.length === 1, s"$strat: all features must land on one tile")
-        assert(tiles.head.features === n, s"$strat")
-        val decoded = Mvt.decode(tiles.head.mvt)
-        assert(decoded.layers.head.features.size === n, s"$strat decode")
-      }
+    val tiles = TilePipeline.tileZoom(pts, 2).collect()
+    assert(tiles.length === 1, "all features must land on one tile")
+    assert(tiles.head.features === n)
+    val decoded = Mvt.decode(tiles.head.mvt)
+    assert(decoded.layers.head.features.size === n)
   }
 
   test("multi-layer tiles: features split into named layers by a string column") {
@@ -135,7 +129,7 @@ class TilePipelineSpec extends AnyFunSuite {
     val poly = Seq((999999L, "POLYGON ((-10 -10, 10 -10, 10 10, -10 10, -10 -10))"))
       .toDF("id", "wkt").select($"id", st_geomFromWKT($"wkt").as("geom"))
     val input = geoms.unionByName(poly)
-    val baseline = TilePipeline.pyramid(input, 2, 5).map { case (z, ds) =>
+    val baseline = TileOracle.pyramid(input, 2, 5).map { case (z, ds) =>
       z -> ds.collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
     }.toMap
     var rekeyed = Map.empty[Int, Map[(Int, Int), Seq[Byte]]]
@@ -151,6 +145,19 @@ class TilePipelineSpec extends AnyFunSuite {
     }
     // reported stats line up with the observed tiles
     stats.foreach { case (z, nTiles, _) => assert(nTiles === baseline(z).size.toLong) }
+  }
+
+  test("pyramidRekey unpersists its frames and tiles when the sink throws") {
+    geoms.count() // the caller's own cache, materialized before the call
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val err = intercept[IllegalStateException] {
+      TilePipeline.pyramidRekey(geoms, 2, 4) { (z, ds) =>
+        ds.count() // materializes this zoom's tiles and its frame
+        if (z == 3) throw new IllegalStateException(s"sink failed at zoom $z")
+      }
+    }
+    assert(err.getMessage === "sink failed at zoom 3")
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted)
   }
 
   test("sink writes z/x/y.mvt, lineage commits, resume skips rewrites") {
