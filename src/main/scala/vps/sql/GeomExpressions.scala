@@ -66,6 +66,7 @@ case class StPoint(left: Expression, right: Expression)
 case class StGeomFromWkt(child: Expression, errors: Option[vps.geom.ErrorChannel] = None)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = GeometryUDT.Instance
+  override def nullable: Boolean = true // malformed input is null even when the child never is
   override def nullSafeEval(s: Any): Any =
     try Wkb.write(Wkt.read(s.asInstanceOf[UTF8String].toString))
     catch { case _: Exception => errors.foreach(_.increment()); null }
@@ -196,9 +197,11 @@ case class StBoundary(child: Expression) extends GeomUnaryFallback {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** Shared shape for the binary constructive overlay ops (JTS OverlayNG
-  * under the hood); results canonicalized with norm() so output bytes do not
-  * depend on argument-evaluation artifacts.
+/** Shared shape for the binary constructive overlay ops. They run JTS's
+  * default `Geometry` overlay, which in JTS 1.20 is the legacy overlay, not
+  * OverlayNG (only the tile clip, `vps.kernels.Clip`, uses OverlayNG).
+  * Results are canonicalized with norm() so output bytes do not depend on
+  * argument-evaluation artifacts.
   */
 abstract class GeomBinaryOp extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = GeometryUDT.Instance

@@ -2,7 +2,9 @@ package vps.kernels
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.geom._
-import vps.geom.{Geo, Wkt}
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import vps.geom.{Geo, TileMath, Wkt}
 
 class KernelSpec extends AnyFunSuite {
   private def line(pts: (Double, Double)*): LineString =
@@ -128,6 +130,34 @@ class KernelSpec extends AnyFunSuite {
     assert(c.getEnvelopeInternal.getMaxX === 10.0)
   }
 
+  test("clip: a polygon overlapping the tile and sharing an edge with its boundary keeps polygon parts only") {
+    // a strip inside the tile (5..10 x 2..3) plus an outside lobe whose west
+    // edge runs along the tile's east boundary from (10,6) to (10,8)
+    val p = Wkt.read("POLYGON ((5 2, 12 2, 12 8, 10 8, 10 6, 11 6, 11 3, 5 3, 5 2))")
+    val c = Clip(p, env)
+    assert(c.getGeometryType === "Polygon")
+    assert(c.getArea === 5.0)
+    assert(c.getEnvelopeInternal === new Envelope(5, 10, 2, 3))
+  }
+
+  test("clip: an interrupt during the guarded clip propagates instead of counting as a failure") {
+    val big = KernelSpec.star(5, 5, 5, KernelSpec.spread(200000), hole = false)
+    assert(big.getNumPoints >= Clip.TimeoutGuardMinPoints)
+    Thread.currentThread().interrupt()
+    try assertThrows[InterruptedException](Clip.timedIntersect(big, Geo.factory.toGeometry(env)))
+    finally Thread.interrupted() // clear the flag for the rest of the suite
+  }
+
+  test("clip properties: inside the tile, family preserved, measure equals the legacy overlay") {
+    val prop = Prop.forAll(KernelSpec.clipCase) { case (g, tile) =>
+      val failures = KernelSpec.clipViolations(g, tile)
+      Prop(failures.isEmpty) :| failures.mkString("; ")
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(400)
+      .withInitialSeed(Seed(20261017L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   // ---- Simplify ----
 
   test("simplify: DP with tolerance 0 is identity on valid lines") {
@@ -148,5 +178,97 @@ class KernelSpec extends AnyFunSuite {
   test("simplify: zoom tolerance shrinks with zoom") {
     assert(Simplify.toleranceForZoom(14) < Simplify.toleranceForZoom(8))
     assert(Simplify.toleranceForZoom(8) === 360.0 / 256 / 4096)
+  }
+}
+
+object KernelSpec {
+  /** `n` vertex angle jitters and radius factors for [[star]], both in [0, 1). */
+  def spread(n: Int, seed: Long = 7L): Seq[(Double, Double)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n)((rnd.nextDouble(), rnd.nextDouble()))
+  }
+
+  /** Star polygon around (cx, cy): vertex i sits at angle (i + jitter/4) of
+    * 2π/n and radius r·(1 − depth·factor), so for n ≥ 8 and depth ≤ 0.7 the
+    * ring is simple and contains the disc of radius 0.25·r; the optional hole
+    * is a 16-gon of radius 0.15·r.
+    */
+  def star(cx: Double, cy: Double, r: Double, vs: Seq[(Double, Double)], hole: Boolean,
+      depth: Double = 0.7): Polygon = {
+    val n = vs.length
+    val step = 2 * math.Pi / n
+    val shell = vs.zipWithIndex.map { case ((jit, fac), i) =>
+      val a = (i + jit / 4) * step
+      val rr = r * (1 - depth * fac)
+      new Coordinate(cx + rr * math.cos(a), cy + rr * math.sin(a))
+    }
+    val holes =
+      if (!hole) Array.empty[LinearRing]
+      else {
+        val h = (0 until 16).map { i =>
+          val a = -i * 2 * math.Pi / 16
+          new Coordinate(cx + 0.15 * r * math.cos(a), cy + 0.15 * r * math.sin(a))
+        }
+        Array(Geo.factory.createLinearRing((h :+ h.head).toArray))
+      }
+    Geo.factory.createPolygon(Geo.factory.createLinearRing((shell :+ shell.head).toArray), holes)
+  }
+
+  /** Random walk from (x, y): each step has length in [0, 0.2·r]. */
+  def walk(x: Double, y: Double, r: Double, steps: Seq[(Double, Double)]): LineString = {
+    val pts = steps.scanLeft(new Coordinate(x, y)) { case (c, (dir, len)) =>
+      val a = dir * 2 * math.Pi
+      val l = 0.2 * r * (1 - len)
+      new Coordinate(c.x + l * math.cos(a), c.y + l * math.sin(a))
+    }
+    Geo.factory.createLineString(pts.toArray)
+  }
+
+  private val unitPair = Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0))
+
+  /** A star polygon (with or without a hole) or a random-walk line sized
+    * 0.2-3 tiles, and a z6-z16 tile picked through a point of its envelope.
+    */
+  val clipCase: Gen[(Geometry, Envelope)] = for {
+    zoom <- Gen.choose(6, 16)
+    cx <- Gen.choose(-170.0, 170.0)
+    cy <- Gen.choose(-60.0, 60.0)
+    size <- Gen.choose(0.2, 3.0)
+    kind <- Gen.choose(0, 2)
+    n <- Gen.choose(8, 400)
+    vs <- Gen.listOfN(n, unitPair)
+    uv <- unitPair
+  } yield {
+    val r = size * 360.0 / (1 << zoom)
+    val g: Geometry = if (kind == 2) walk(cx, cy, r, vs) else star(cx, cy, r, vs, hole = kind == 1)
+    val e = g.getEnvelopeInternal
+    val px = e.getMinX + uv._1 * e.getWidth
+    val py = e.getMinY + uv._2 * e.getHeight
+    (g, TileMath.tileEnvelopeLatLng(zoom, TileMath.tileX(px, zoom), TileMath.tileY(py, zoom)))
+  }
+
+  /** What [[Clip]] of `g` to `tile` breaks, empty when nothing: every result
+    * coordinate inside the tile (1e-12°), the input family kept, and the
+    * area (areal) or length (linear) of the legacy `Geometry.intersection`,
+    * after the same part filter, within 1e-9 relative. A pass-through result
+    * is right only when the legacy intersection is empty too.
+    */
+  def clipViolations(g: Geometry, tile: Envelope): Seq[String] = {
+    val areal = g.getDimension == 2
+    val c = Clip(g, tile)
+    val legacyRaw = g.intersection(Geo.factory.toGeometry(tile))
+    if (c eq g) return if (legacyRaw.isEmpty) Nil else Seq(s"passed through, legacy gave $legacyRaw")
+    val legacy = Clip.collectParts(legacyRaw, if (areal) classOf[Polygon] else classOf[LineString])
+    val out = Seq.newBuilder[String]
+    val grown = new Envelope(tile)
+    grown.expandBy(1e-12)
+    c.getCoordinates.find(p => !grown.contains(p)).foreach(p => out += s"coordinate $p outside")
+    val family = if (areal) Set("Polygon", "MultiPolygon") else Set("LineString", "MultiLineString")
+    if (!family(c.getGeometryType)) out += s"family ${g.getGeometryType} -> ${c.getGeometryType}"
+    val (got, want) =
+      if (areal) (c.getArea, legacy.map(_.getArea).sum) else (c.getLength, legacy.map(_.getLength).sum)
+    if (math.abs(got - want) > 1e-9 * math.max(math.abs(got), math.abs(want)))
+      out += s"measure $got vs legacy $want"
+    out.result()
   }
 }

@@ -85,6 +85,19 @@ class GeomExpressionSpec extends AnyFunSuite {
     assert(ch.count === 2)
   }
 
+  test("malformed WKT from a non-nullable child becomes null inside an executor task") {
+    // a non-nullable child (when/otherwise over literals) over a parallelized
+    // frame, so the projection runs in tasks and is not folded on the driver
+    val ids = spark.sparkContext.parallelize(0 until 40, 4).toDF("id")
+    val wkt = when($"id" % 2 === 0, "POINT (1 2)").otherwise("POINT (1")
+    assert(!ids.select(wkt).schema.head.nullable)
+    val geoms = ids.select(st_geomFromWKT(wkt).as("g"))
+    assert(geoms.schema.head.nullable)
+    val rows = geoms.collect()
+    assert(rows.length === 40)
+    assert(rows.count(_.isNullAt(0)) === 20)
+  }
+
   test("clip failure channel stays silent on clean clips") {
     val ch = vps.geom.GeomErrors.channel(spark, "clip-test")
     val z = 8; val x = 128; val y = 128

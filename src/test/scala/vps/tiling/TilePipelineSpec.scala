@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import vps.SparkTestSession
 import vps.docs.InterleavedDocs
-import vps.geom.TileMath
+import vps.geom.{Geo, TileMath, Wkb}
+import vps.kernels.KernelSpec
 import vps.mvt.Mvt
 import vps.sql.functions._
 
@@ -81,6 +82,40 @@ class TilePipelineSpec extends AnyFunSuite {
     assert(oracle.size > 10)
     assert(fused.keySet === oracle.keySet)
     oracle.foreach { case (k, bytes) => assert(fused(k) === bytes, s"tile $k differs") }
+  }
+
+  test("a 10k-vertex star multipolygon with a hole over z13 tiles: oracle bytes and conserved area") {
+    val zoom = 13
+    val w = 360.0 / (1 << zoom) // tile width in degrees
+    val mp = Geo.factory.createMultiPolygon(Array(
+      KernelSpec.star(8.3, 46.7, 2.5 * w, KernelSpec.spread(9000, 11), hole = true, depth = 0.1),
+      KernelSpec.star(8.3 + 4 * w, 46.7, 0.6 * w, KernelSpec.spread(1000, 12), hole = false)))
+    assert(mp.isValid && mp.getNumPoints >= 10000)
+    val input = Seq((7L, Wkb.write(mp))).toDF("id", "wkb").select($"id", st_geomFromWKB($"wkb").as("geom"))
+
+    val fused = TilePipeline.tileZoom(input, zoom).collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
+    val oracle = TileOracle.tileZoom(input, zoom).collect().map(t => (t.x, t.y) -> t.mvt.toSeq).toMap
+    assert(fused.keySet === oracle.keySet)
+    oracle.foreach { case (k, bytes) => assert(fused(k) === bytes, s"tile $k differs") }
+
+    // unsimplified per-tile clips partition the polygon; a key of the
+    // envelope that the polygon misses gets the original (pass-through)
+    val clips = input.select(explode(tile_keys($"geom", zoom)).as("k"), $"geom")
+      .select($"k.x", $"k.y", st_asWKB(st_clipToTile($"geom", lit(zoom), $"k.x", $"k.y")))
+      .as[(Int, Int, Array[Byte])].collect()
+    var covered = 0
+    var area = 0.0
+    clips.foreach { case (x, y, wkb) =>
+      val env = TileMath.tileEnvelopeLatLng(zoom, x, y)
+      val c = Wkb.read(wkb)
+      if (mp.intersects(Geo.factory.toGeometry(env))) {
+        assert(env.contains(c.getEnvelopeInternal), s"tile ($x,$y) clip leaves the tile")
+        if (c.getArea > 0) covered += 1
+        area += c.getArea
+      } else assert(c.equalsExact(mp), s"tile ($x,$y) misses the polygon but is not the original")
+    }
+    assert(covered >= 16, s"$covered tiles")
+    assert(math.abs(area - mp.getArea) <= 1e-9 * mp.getArea, s"sum $area vs ${mp.getArea}")
   }
 
   test("pathological hot tile: 50k features on ONE tile key encode correctly") {
