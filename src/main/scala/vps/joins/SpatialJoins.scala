@@ -151,8 +151,8 @@ object SpatialJoins {
     // content-hash cache (a lossy cast would silently empty the join).
     // Id-uniqueness contract: polyIdCol should bind each id to ONE geometry
     // row; a violation (multipart regions as several rows per id) is caught
-    // by the keyed cache's per-hit length+head/tail WKB check and re-prepared
-    // — correct results, degraded caching (see StIntersectsKeyed).
+    // by the keyed cache's per-hit full WKB comparison (`Arrays.equals`) and
+    // re-prepared — correct results, degraded caching (see StIntersectsKeyed).
     val keyed = polygons.schema(polyIdCol).dataType match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true

@@ -143,7 +143,7 @@ object Dedup {
       carryText: Boolean = false): DataFrame = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val texts = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    // band buckets computed in one expression pass (see MinHashBands)
+    // band buckets computed in one expression pass (see TextOps.minhashBands)
     val banded = texts.select(col("id"),
       posexplode(minhash_bands(col("text"), numHashes, bands, shingle)).as(Seq("band", "bucket")))
 

@@ -11,8 +11,8 @@ import vps.text.functions.hash_uniform
   * cluster size changes. At 100-TB scale a holdout split must be a PURE
   * FUNCTION of each row's identity or the eval set silently contaminates the
   * training set across re-runs. Every operator here derives its randomness as
-  * `splitmix64(id ^ salt)` mapped to `[0,1)` ([[vps.text.HashUniform]], real
-  * whole-stage codegen), so results reproduce across runs, engines, and
+  * `splitmix64(id ^ salt)` mapped to `[0,1)` (`hash_uniform`, [[vps.text.TextOps.hashUniform]],
+  * inside whole-stage codegen), so results reproduce across runs, engines, and
   * partitionings — the DuckDB oracle recomputes them bit-for-bit.
   *
   * 100-TB shape: all three operators are stateless map-side filters /

@@ -382,8 +382,7 @@ object Raster {
     // shuffle row. The interpreted tile_keys+explode pipeline was measured
     // NOT thread-scaling (its per-row allocations saturate the shared memory
     // subsystem before the cores do). The geometry UDT feeds GridPointKey
-    // directly (its sqlType is binary) — st_asWKB is CodegenFallback and
-    // would evict this projection from whole-stage codegen.
+    // directly (its sqlType is binary), so no st_asWKB call is needed.
     val keyed = weighted
       .select(cb(GridPointKey(ex(col("geom")), zoom, resolution)).as("pk"),
         col("_w"))

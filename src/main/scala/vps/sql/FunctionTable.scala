@@ -1,0 +1,114 @@
+package vps.sql
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.vps.{ColumnBridge, Constructor, Kernel, SqlFunction}
+
+import vps.geom.{CellId, GeometryUDT, TileMath}
+import vps.text.{ArrayPairs, CollectCapped, TextOps}
+
+/** The engine's SQL surface, declared once. [[VpsExtensions]] injects and
+  * [[functions.register]] registers exactly these rows, and the Column APIs
+  * (`vps.sql.functions`, `vps.text.functions`) build their expressions from
+  * them.
+  *
+  * A stateless function is a [[Kernel]] row: a static method on a Scala
+  * object over Catalyst's internal values, its argument types (the analyzer
+  * casts to them) and its result type. A [[Constructor]] row keeps an
+  * expression class of its own, for a function that holds per-task state or
+  * a parsed constant, takes its result type from its input, or aggregates.
+  */
+object FunctionTable {
+  private val Geom = GeometryUDT.Instance
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Floats = ArrayType(FloatType)
+  private val TileKeys = ArrayType(GeomOps.TileKeyType, containsNull = false)
+  private val G = GeomOps.getClass
+  private val T = TextOps.getClass
+
+  val rows: Seq[SqlFunction] = Seq(
+    Kernel("st_point", G, "point", Seq(DoubleType, DoubleType), Geom),
+    Constructor("st_geomfromwkt", 1, e => StGeomFromWkt(e(0))),
+    Kernel("st_geomfromwkb", G, "bytes", Seq(Geom), Geom),
+    Kernel("st_aswkb", G, "bytes", Seq(Geom), BinaryType),
+    Kernel("st_astext", G, "asText", Seq(Geom), StringType),
+    Kernel("st_x", G, "stx", Seq(Geom), DoubleType),
+    Kernel("st_y", G, "sty", Seq(Geom), DoubleType),
+    Kernel("st_area", G, "area", Seq(Geom), DoubleType),
+    Kernel("st_length", G, "length", Seq(Geom), DoubleType),
+    Kernel("st_numpoints", G, "numPoints", Seq(Geom), IntegerType),
+    Kernel("st_numgeometries", G, "numGeometries", Seq(Geom), IntegerType),
+    Kernel("st_isempty", G, "isEmpty", Seq(Geom), BooleanType),
+    Kernel("st_isvalid", G, "isValid", Seq(Geom), BooleanType),
+    Kernel("st_geometrytype", G, "geometryType", Seq(Geom), StringType),
+    Kernel("st_centroid", G, "centroid", Seq(Geom), Geom),
+    Kernel("st_makevalid", G, "makeValid", Seq(Geom), Geom),
+    Kernel("st_buffer", G, "buffer", Seq(Geom, DoubleType), Geom),
+    Kernel("st_convexhull", G, "convexHull", Seq(Geom), Geom),
+    Kernel("st_envelope", G, "envelope", Seq(Geom), Geom),
+    Kernel("st_boundary", G, "boundary", Seq(Geom), Geom),
+    Kernel("st_intersection", G, "intersection", Seq(Geom, Geom), Geom),
+    Kernel("st_union", G, "union", Seq(Geom, Geom), Geom),
+    Kernel("st_difference", G, "difference", Seq(Geom, Geom), Geom),
+    Kernel("st_symdifference", G, "symDifference", Seq(Geom, Geom), Geom),
+    Kernel("st_distance", G, "distance", Seq(Geom, Geom), DoubleType),
+    Kernel("st_towebmercator", G, "toWebMercator", Seq(Geom), Geom),
+    Kernel("st_tolonlat", G, "toLonLat", Seq(Geom), Geom),
+    Constructor("st_reproject", 3, e => StReproject(e(0), e(1), e(2))),
+    Kernel("st_simplify", G, "simplify", Seq(Geom, DoubleType, BooleanType), Geom),
+    Constructor("st_cliptotile", 4, e => StClipToTile(e(0), e(1), e(2), e(3))),
+    Constructor("st_contains", 2, e => StContains(e(0), e(1))),
+    Constructor("st_intersects", 2, e => StIntersects(e(0), e(1))),
+    Constructor("st_within", 2, e => StWithin(e(0), e(1))),
+    Constructor("st_union_agg", 1, e => StUnionAgg(e(0)).toAggregateExpression()),
+    Kernel("tile_x", TileMath.getClass, "tileX", Seq(DoubleType, IntegerType), IntegerType),
+    Kernel("tile_y", TileMath.getClass, "tileY", Seq(DoubleType, IntegerType), IntegerType),
+    Kernel("tile_keys", G, "tileKeys", Seq(Geom, IntegerType), TileKeys),
+    Kernel("parent_tile_keys", G, "parentTileKeys", Seq(TileKeys), TileKeys),
+    Kernel("cell_at", CellId.getClass, "fromLonLat", Seq(DoubleType, DoubleType, IntegerType), LongType),
+    Kernel("cell_parent", CellId.getClass, "parent", Seq(LongType, IntegerType), LongType),
+    Kernel("cell_kring", G, "kRing", Seq(LongType, IntegerType), Longs),
+    Kernel("cells_of", G, "cellsOf", Seq(Geom, IntegerType), Longs),
+
+    Kernel("minhash_sig", T, "minhashSig", Seq(StringType, IntegerType, IntegerType), Longs),
+    Kernel("minhash_bands", T, "minhashBands",
+      Seq(StringType, IntegerType, IntegerType, IntegerType), Longs),
+    Kernel("simhash64", T, "simhash64", Seq(StringType), LongType),
+    Kernel("simhash_bands", T, "simhashBands", Seq(StringType), Longs),
+    Kernel("ngram_jaccard", T, "ngramJaccard", Seq(StringType, StringType, IntegerType), DoubleType),
+    Kernel("array_jaccard", T, "arrayJaccard", Seq(Longs, Longs), DoubleType),
+    Kernel("char_shingles", T, "shingleSet", Seq(StringType, IntegerType), Longs),
+    Kernel("winnow_fingerprints", T, "winnowFingerprints", Seq(StringType, IntegerType, IntegerType), Longs),
+    Kernel("term_counts", T, "termCounts", Seq(StringType),
+      MapType(StringType, LongType, valueContainsNull = false)),
+    Kernel("doc_fingerprint", T, "docFingerprint", Seq(StringType), LongType),
+    Kernel("lang_id", T, "language", Seq(StringType), StringType),
+    Kernel("random_projection", T, "randomProjection", Seq(Floats, IntegerType),
+      ArrayType(DoubleType, containsNull = false)),
+    Kernel("hyperplane_bands", T, "hyperplaneBands", Seq(Floats, IntegerType, IntegerType), Longs),
+    Kernel("cosine_sim", T, "cosineSim", Seq(Floats, Floats), DoubleType),
+    Kernel("hash_uniform", T, "hashUniform", Seq(LongType, LongType), DoubleType),
+    Constructor("array_pairs", 1, e => ArrayPairs(e(0))),
+    // bounded collect_list; the cap must be a foldable integer literal
+    Constructor("collect_capped", 2, e => CollectCapped(e(0), literalCap(e(1))).toAggregateExpression()))
+
+  private val byName: Map[String, SqlFunction] = rows.map(f => f.name -> f).toMap
+
+  /** The row `name` applied to Column arguments (the Column APIs' builder). */
+  private[vps] def call(name: String, args: Column*): Column =
+    ColumnBridge.column(byName(name)(args.map(ColumnBridge.expression)))
+
+  // checked BEFORE eval: a column-reference cap would otherwise die inside
+  // eval(InternalRow.empty) with an unhelpful unresolved/NPE-style error
+  private def literalCap(cap: Expression): Int = {
+    def bad(got: Any) = new IllegalArgumentException(
+      s"collect_capped: cap must be a foldable integer literal, got $got")
+    if (!cap.foldable) throw bad(cap.sql)
+    cap.eval(InternalRow.empty) match {
+      case n: Number => n.intValue()
+      case other => throw bad(other)
+    }
+  }
+}

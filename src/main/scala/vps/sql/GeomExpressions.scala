@@ -3,34 +3,46 @@ package vps.sql
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.geom.{Coordinate, CoordinateFilter, Geometry}
 
 import vps.geom.{CellId, Geo, GeometryUDT, TileMath, Wkb, Wkt}
 import vps.kernels.{Clip, Simplify}
 
-/** Native Catalyst expressions for the geometry/tiling operator surface
-  * (SURVEY.md §2.8 F20-F27). Geometry values travel as WKB inside the
-  * [[vps.geom.GeometryUDT]]; pure-math expressions (tile/cell ids) get real
-  * codegen, JTS-heavy ones use CodegenFallback (the JTS call dominates).
+/** Static kernels of the geometry/tiling SQL functions (SURVEY.md §2.8
+  * F20-F27), one per [[FunctionTable]] row; the table turns each into a
+  * `StaticInvoke`, so they all run inside whole-stage codegen. Geometry
+  * values travel as WKB inside the [[vps.geom.GeometryUDT]]; a geometry
+  * parameter is `AnyRef` (Catalyst looks UDT arguments up as `Object`)
+  * holding those bytes. Strings are `UTF8String`, arrays `ArrayData`.
   */
 object GeomOps {
-  // static helpers callable from generated Java (whole-stage codegen)
+  private def geom(b: AnyRef): Geometry = Wkb.read(b.asInstanceOf[Array[Byte]])
+
+  val TileKeyType: StructType =
+    StructType(Seq(StructField("x", IntegerType, nullable = false),
+      StructField("y", IntegerType, nullable = false)))
+
   def point(lon: Double, lat: Double): Array[Byte] = Wkb.write(Geo.point(lon, lat))
+  /** st_geomFromWKB and st_asWKB: WKB is the storage format (validated lazily). */
+  def bytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Array[Byte]]
+  def asText(b: AnyRef): UTF8String = UTF8String.fromString(Wkt.write(geom(b)))
+
   // plain 2-D point WKB (21 bytes): read the coordinate straight off the
-  // buffer — st_x/st_y over a point corpus are codegen'd hot-path calls and
-  // the full parse allocates a geometry per call (the allocation stream is
-  // what stops thread-scaling); bits are identical to what WKBReader yields
-  def stx(wkb: Array[Byte]): Double =
-    if (wkb.length == 21 && pointWkbType(wkb)) readPointDouble(wkb, 5)
-    else Wkb.read(wkb).getCoordinate.x
-  def sty(wkb: Array[Byte]): Double =
-    if (wkb.length == 21 && pointWkbType(wkb)) readPointDouble(wkb, 13)
-    else Wkb.read(wkb).getCoordinate.y
+  // buffer — st_x/st_y over a point corpus are hot-path calls and the full
+  // parse allocates a geometry per call (the allocation stream is what stops
+  // thread-scaling); bits are identical to what WKBReader yields
+  def stx(g: AnyRef): Double = {
+    val b = g.asInstanceOf[Array[Byte]]
+    if (b.length == 21 && pointWkbType(b)) readPointDouble(b, 5) else Wkb.read(b).getCoordinate.x
+  }
+  def sty(g: AnyRef): Double = {
+    val b = g.asInstanceOf[Array[Byte]]
+    if (b.length == 21 && pointWkbType(b)) readPointDouble(b, 13) else Wkb.read(b).getCoordinate.y
+  }
   private def pointWkbType(b: Array[Byte]): Boolean = {
     val bb = java.nio.ByteBuffer.wrap(b)
     if (b(0) == 1) bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -41,21 +53,111 @@ object GeomOps {
     if (b(0) == 1) bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.getDouble(off)
   }
-  def area(wkb: Array[Byte]): Double = Wkb.read(wkb).getArea
-  def length(wkb: Array[Byte]): Double = Wkb.read(wkb).getLength
-  def numPoints(wkb: Array[Byte]): Int = Wkb.read(wkb).getNumPoints
-  def isEmpty(wkb: Array[Byte]): Boolean = Wkb.read(wkb).isEmpty
-}
 
-case class StPoint(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = GeometryUDT.Instance
-  override def nullSafeEval(lon: Any, lat: Any): Any =
-    GeomOps.point(lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat) => s"vps.sql.GeomOps.point($lon, $lat)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+  def area(b: AnyRef): Double = geom(b).getArea
+  def length(b: AnyRef): Double = geom(b).getLength
+  def numPoints(b: AnyRef): Int = geom(b).getNumPoints
+  def numGeometries(b: AnyRef): Int = geom(b).getNumGeometries
+  def isEmpty(b: AnyRef): Boolean = geom(b).isEmpty
+  /** True when the geometry is valid under the OGC rules (JTS isValid). */
+  def isValid(b: AnyRef): Boolean = geom(b).isValid
+  def geometryType(b: AnyRef): UTF8String = UTF8String.fromString(geom(b).getGeometryType)
+  def centroid(b: AnyRef): Array[Byte] = Wkb.write(geom(b).getCentroid)
+  /** Repair invalid geometries (self-intersecting rings, bowties, duplicate
+    * points) via JTS GeometryFixer — the column-level bad-geometry tolerance
+    * that complements the ErrorChannel path: fix what is fixable instead of
+    * nulling it. Valid input passes through structurally unchanged.
+    */
+  def makeValid(b: AnyRef): Array[Byte] = {
+    val g = geom(b)
+    Wkb.write(if (g.isValid) g else org.locationtech.jts.geom.util.GeometryFixer.fix(g))
+  }
+  /** Buffer by a distance in the geometry's coordinate units (JTS BufferOp,
+    * default quadrant segments). Negative distances shrink polygons.
+    */
+  def buffer(b: AnyRef, d: Double): Array[Byte] = Wkb.write(geom(b).buffer(d))
+  def convexHull(b: AnyRef): Array[Byte] = Wkb.write(geom(b).convexHull())
+  /** Envelope as a polygon (JTS getEnvelope: point/degenerate inputs shrink). */
+  def envelope(b: AnyRef): Array[Byte] = Wkb.write(geom(b).getEnvelope)
+  /** Topological boundary (polygon -> rings, line -> endpoints). */
+  def boundary(b: AnyRef): Array[Byte] = Wkb.write(geom(b).getBoundary)
+  def distance(a: AnyRef, b: AnyRef): Double = geom(a).distance(geom(b))
+
+  // The binary constructive overlay ops run JTS's default `Geometry` overlay,
+  // which in JTS 1.20 is the legacy overlay, not OverlayNG (only the tile
+  // clip, `vps.kernels.Clip`, uses OverlayNG). Results are canonicalized with
+  // norm() so output bytes do not depend on argument-evaluation artifacts.
+  def intersection(a: AnyRef, b: AnyRef): Array[Byte] = Wkb.write(geom(a).intersection(geom(b)).norm())
+  def union(a: AnyRef, b: AnyRef): Array[Byte] = Wkb.write(geom(a).union(geom(b)).norm())
+  def difference(a: AnyRef, b: AnyRef): Array[Byte] = Wkb.write(geom(a).difference(geom(b)).norm())
+  def symDifference(a: AnyRef, b: AnyRef): Array[Byte] = Wkb.write(geom(a).symDifference(geom(b)).norm())
+
+  /** Closed-form EPSG:4326 -> EPSG:3857 (the reference's st_reprojectGeom defaults). */
+  def toWebMercator(b: AnyRef): Array[Byte] = transformed(b, TileMath.lonToMercX, TileMath.latToMercY)
+  def toLonLat(b: AnyRef): Array[Byte] = transformed(b, TileMath.mercXToLon, TileMath.mercYToLat)
+  private def transformed(b: AnyRef, fx: Double => Double, fy: Double => Double): Array[Byte] = {
+    val g = geom(b)
+    g.apply(new CoordinateFilter {
+      override def filter(c: Coordinate): Unit = { c.x = fx(c.x); c.y = fy(c.y) }
+    })
+    g.geometryChanged()
+    Wkb.write(g)
+  }
+
+  def simplify(b: AnyRef, tolerance: Double, preserveTopology: Boolean): Array[Byte] = {
+    val g = geom(b)
+    Wkb.write(
+      if (preserveTopology) Simplify.topologyPreserving(g, tolerance)
+      else Simplify.douglasPeucker(g, tolerance))
+  }
+
+  def kRing(cell: Long, k: Int): ArrayData = new GenericArrayData(CellId.kRing(cell, k).toArray)
+
+  /** All ZXY keys whose tile intersects the geometry envelope (reference
+    * `keyTo`). Every map-side keying pipeline (tiles pack, rasterize, pyramid)
+    * runs this per row, so it fast-paths plain 2-D point WKB (21 bytes -> the
+    * single (tileX, tileY) key, no JTS parse — identical by construction:
+    * keysForGeometry of a point's degenerate envelope IS that one key) and
+    * builds the array data directly.
+    */
+  def tileKeys(g: AnyRef, zoom: Int): ArrayData = {
+    val wkb = g.asInstanceOf[Array[Byte]]
+    if (wkb.length == 21) {
+      val bb = java.nio.ByteBuffer.wrap(wkb)
+      if (wkb(0) == 1) bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      if (bb.getInt(1) == 1) {
+        val px = bb.getDouble(5)
+        val py = bb.getDouble(13)
+        return new GenericArrayData(
+          Array[Any](InternalRow(TileMath.tileX(px, zoom), TileMath.tileY(py, zoom))))
+      }
+    }
+    val ks = TileMath.keysForGeometry(Wkb.read(wkb), zoom)
+    val out = new Array[Any](ks.length)
+    var i = 0
+    while (i < ks.length) { out(i) = InternalRow(ks(i)._1, ks(i)._2); i += 1 }
+    new GenericArrayData(out)
+  }
+
+  /** Parent-tile re-key (reference `reduceKeys`): (x,y) -> (x/2, y/2), deduplicated. */
+  def parentTileKeys(keys: ArrayData): ArrayData = {
+    val seen = scala.collection.mutable.LinkedHashSet.empty[(Int, Int)]
+    var i = 0
+    while (i < keys.numElements) {
+      val r = keys.getStruct(i, 2)
+      seen += ((r.getInt(0) / 2, r.getInt(1) / 2))
+      i += 1
+    }
+    new GenericArrayData(seen.map { case (x, y) => InternalRow(x, y) }.toArray)
+  }
+
+  /** All cell ids at `level` whose tile intersects the geometry envelope —
+    * the polygon-side key generator for cell-partitioned spatial joins.
+    */
+  def cellsOf(b: AnyRef, level: Int): ArrayData = {
+    val keys = TileMath.keysForGeometry(geom(b), level)
+    new GenericArrayData(keys.map { case (x, y) => CellId.pack(level, x.toLong, y.toLong) }.toArray)
+  }
 }
 
 /** WKT parse; malformed input yields null (row kept) and, when an error
@@ -71,211 +173,6 @@ case class StGeomFromWkt(child: Expression, errors: Option[vps.geom.ErrorChannel
     try Wkb.write(Wkt.read(s.asInstanceOf[UTF8String].toString))
     catch { case _: Exception => errors.foreach(_.increment()); null }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-case class StAsText(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(b: Any): Any =
-    UTF8String.fromString(Wkt.write(Wkb.read(b.asInstanceOf[Array[Byte]])))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StGeomFromWkb(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override def nullSafeEval(b: Any): Any = b // WKB is the storage format; validate lazily
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StAsWkb(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(b: Any): Any = b
-  // identity on the UDT's stored bytes — codegen'd so projections carrying
-  // st_asWKB stay inside whole-stage codegen (a CodegenFallback MARKER, even
-  // with a real doGenCode, evicts the hosting plan from WSCG)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => b)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Base for unary geometry expressions. Subclasses that define codegen
-  * extend this DIRECTLY (the CodegenFallback marker trait alone — even with
-  * doGenCode overridden — makes CollapseCodegenStages evict the hosting
-  * plan from whole-stage codegen); interpreted ones extend
-  * [[GeomUnaryFallback]].
-  */
-abstract class GeomUnary extends UnaryExpression {
-  protected def evalGeom(g: Geometry): Any
-  override def nullSafeEval(b: Any): Any = evalGeom(Wkb.read(b.asInstanceOf[Array[Byte]]))
-}
-
-abstract class GeomUnaryFallback extends GeomUnary with CodegenFallback
-
-case class StX(child: Expression) extends GeomUnary {
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"vps.sql.GeomOps.stx($c)")
-  override def dataType: DataType = DoubleType
-  override protected def evalGeom(g: Geometry): Any = g.getCoordinate.x
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StY(child: Expression) extends GeomUnary {
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"vps.sql.GeomOps.sty($c)")
-  override def dataType: DataType = DoubleType
-  override protected def evalGeom(g: Geometry): Any = g.getCoordinate.y
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StArea(child: Expression) extends GeomUnary {
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"vps.sql.GeomOps.area($c)")
-  override def dataType: DataType = DoubleType
-  override protected def evalGeom(g: Geometry): Any = g.getArea
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StLength(child: Expression) extends GeomUnary {
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"vps.sql.GeomOps.length($c)")
-  override def dataType: DataType = DoubleType
-  override protected def evalGeom(g: Geometry): Any = g.getLength
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StNumPoints(child: Expression) extends GeomUnary {
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"vps.sql.GeomOps.numPoints($c)")
-  override def dataType: DataType = IntegerType
-  override protected def evalGeom(g: Geometry): Any = g.getNumPoints
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StCentroid(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override protected def evalGeom(g: Geometry): Any = Wkb.write(g.getCentroid)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-/** Repair invalid geometries (self-intersecting rings, bowties, duplicate
-  * points) via JTS GeometryFixer — the column-level bad-geometry tolerance
-  * that complements the ErrorChannel path: fix what is fixable instead of
-  * nulling it. Valid input passes through structurally unchanged.
-  */
-case class StMakeValid(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override protected def evalGeom(g: Geometry): Any =
-    Wkb.write(if (g.isValid) g else org.locationtech.jts.geom.util.GeometryFixer.fix(g))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-/** True when the geometry is valid under the OGC rules (JTS isValid). */
-case class StIsValid(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = BooleanType
-  override protected def evalGeom(g: Geometry): Any = g.isValid
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-/** Buffer by a distance in the geometry's coordinate units (JTS BufferOp,
-  * default quadrant segments). Negative distances shrink polygons.
-  */
-case class StBuffer(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override def nullSafeEval(g: Any, d: Any): Any =
-    Wkb.write(Wkb.read(g.asInstanceOf[Array[Byte]]).buffer(d.asInstanceOf[Double]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-/** Convex hull (JTS). */
-case class StConvexHull(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override protected def evalGeom(g: Geometry): Any = Wkb.write(g.convexHull())
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-/** Envelope as a polygon (JTS getEnvelope: point/degenerate inputs shrink). */
-case class StEnvelope(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override protected def evalGeom(g: Geometry): Any = Wkb.write(g.getEnvelope)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-/** Topological boundary (polygon -> rings, line -> endpoints). */
-case class StBoundary(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override protected def evalGeom(g: Geometry): Any = Wkb.write(g.getBoundary)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Shared shape for the binary constructive overlay ops. They run JTS's
-  * default `Geometry` overlay, which in JTS 1.20 is the legacy overlay, not
-  * OverlayNG (only the tile clip, `vps.kernels.Clip`, uses OverlayNG).
-  * Results are canonicalized with norm() so output bytes do not depend on
-  * argument-evaluation artifacts.
-  */
-abstract class GeomBinaryOp extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  protected def op(a: Geometry, b: Geometry): Geometry
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Wkb.write(op(Wkb.read(a.asInstanceOf[Array[Byte]]),
-      Wkb.read(b.asInstanceOf[Array[Byte]])).norm())
-}
-case class StIntersection(left: Expression, right: Expression) extends GeomBinaryOp {
-  override protected def op(a: Geometry, b: Geometry): Geometry = a.intersection(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StUnion(left: Expression, right: Expression) extends GeomBinaryOp {
-  override protected def op(a: Geometry, b: Geometry): Geometry = a.union(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StDifference(left: Expression, right: Expression) extends GeomBinaryOp {
-  override protected def op(a: Geometry, b: Geometry): Geometry = a.difference(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StSymDifference(left: Expression, right: Expression) extends GeomBinaryOp {
-  override protected def op(a: Geometry, b: Geometry): Geometry = a.symDifference(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-/** Number of components in a (multi-)geometry (JTS getNumGeometries). */
-case class StNumGeometries(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = IntegerType
-  override protected def evalGeom(g: Geometry): Any = g.getNumGeometries
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StIsEmpty(child: Expression) extends GeomUnary {
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"vps.sql.GeomOps.isEmpty($c)")
-  override def dataType: DataType = BooleanType
-  override protected def evalGeom(g: Geometry): Any = g.isEmpty
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-case class StGeometryType(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = StringType
-  override protected def evalGeom(g: Geometry): Any = UTF8String.fromString(g.getGeometryType)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Closed-form EPSG:4326 -> EPSG:3857 (the reference's st_reprojectGeom defaults). */
-case class StToWebMercator(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override protected def evalGeom(g: Geometry): Any = {
-    val copy = g.copy()
-    copy.apply(new org.locationtech.jts.geom.CoordinateFilter {
-      override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
-        val x = TileMath.lonToMercX(c.x); val y = TileMath.latToMercY(c.y)
-        c.x = x; c.y = y
-      }
-    })
-    copy.geometryChanged()
-    Wkb.write(copy)
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class StToLonLat(child: Expression) extends GeomUnaryFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override protected def evalGeom(g: Geometry): Any = {
-    val copy = g.copy()
-    copy.apply(new org.locationtech.jts.geom.CoordinateFilter {
-      override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
-        val x = TileMath.mercXToLon(c.x); val y = TileMath.mercYToLat(c.y)
-        c.x = x; c.y = y
-      }
-    })
-    copy.geometryChanged()
-    Wkb.write(copy)
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** General closed-form reprojection between EPSG:4326 / EPSG:3857 / UTM
@@ -632,138 +529,6 @@ case class StWithin(left: Expression, right: Expression)
       .contains(Wkb.readProbe(a.asInstanceOf[Array[Byte]], probePoint))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
-case class StDistance(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Wkb.read(a.asInstanceOf[Array[Byte]]).distance(Wkb.read(b.asInstanceOf[Array[Byte]]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-// ---------- tile / cell math (codegen'd: pure arithmetic hot path) ----------
-
-case class TileXOf(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(DoubleType, IntegerType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(lon: Any, z: Any): Any =
-    TileMath.tileX(lon.asInstanceOf[Double], z.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, z) => s"vps.geom.TileMath.tileX($lon, $z)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class TileYOf(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(DoubleType, IntegerType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(lat: Any, z: Any): Any =
-    TileMath.tileY(lat.asInstanceOf[Double], z.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lat, z) => s"vps.geom.TileMath.tileY($lat, $z)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** H3/S2-style cell id of a lon/lat at a level — codegen'd Z-order packing. */
-case class CellAt(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(lon: Any, lat: Any, lvl: Any): Any =
-    CellId.fromLonLat(lon.asInstanceOf[Double], lat.asInstanceOf[Double], lvl.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat, lvl) => s"vps.geom.CellId.fromLonLat($lon, $lat, $lvl)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(f, s, t)
-}
-
-case class CellParent(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(LongType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(cell: Any, lvl: Any): Any =
-    CellId.parent(cell.asInstanceOf[Long], lvl.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, l) => s"vps.geom.CellId.parent($c, $l)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-object CellKRing {
-  /** Public + static: called from generated code. */
-  def ring(cell: Long, k: Int): org.apache.spark.sql.catalyst.util.ArrayData =
-    new GenericArrayData(CellId.kRing(cell, k).toArray)
-}
-case class CellKRing(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(LongType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(cell: Any, k: Any): Any = CellKRing.ring(cell.asInstanceOf[Long], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, k) => s"vps.sql.CellKRing.ring($c, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-object TileKeysOf {
-  val elementType: StructType =
-    StructType(Seq(StructField("x", IntegerType, nullable = false),
-      StructField("y", IntegerType, nullable = false)))
-
-  /** Shared eval: every map-side keying pipeline (tiles pack, rasterize,
-    * pyramid) runs this per row, so it fast-paths plain 2-D point WKB
-    * (21 bytes -> the single (tileX, tileY) key, no JTS parse — identical
-    * by construction: keysForGeometry of a point's degenerate envelope IS
-    * that one key) and builds the array data directly. Public + static:
-    * called from generated code.
-    */
-  def keys(wkb: Array[Byte], zoom: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    if (wkb.length == 21) {
-      val bb = java.nio.ByteBuffer.wrap(wkb)
-      if (wkb(0) == 1) bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      if (bb.getInt(1) == 1) {
-        val px = bb.getDouble(5)
-        val py = bb.getDouble(13)
-        return new GenericArrayData(
-          Array[Any](InternalRow(TileMath.tileX(px, zoom), TileMath.tileY(py, zoom))))
-      }
-    }
-    val ks = TileMath.keysForGeometry(Wkb.read(wkb), zoom)
-    val out = new Array[Any](ks.length)
-    var i = 0
-    while (i < ks.length) { out(i) = InternalRow(ks(i)._1, ks(i)._2); i += 1 }
-    new GenericArrayData(out)
-  }
-}
-
-/** All ZXY keys whose tile intersects the geometry envelope (reference
-  * `keyTo`). Codegen'd (static call, NOT CodegenFallback): a fallback here
-  * evicts every keying projection/generator from whole-stage codegen, and
-  * this sits on the tiles/rasterize map side at one call per row.
-  */
-case class TileKeysOf(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(GeometryUDT.Instance, IntegerType)
-  override def dataType: DataType = ArrayType(TileKeysOf.elementType, containsNull = false)
-  override def nullSafeEval(b: Any, z: Any): Any =
-    TileKeysOf.keys(b.asInstanceOf[Array[Byte]], z.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, z) => s"vps.sql.TileKeysOf.keys($b, $z)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** Parent-tile re-key helper (reference `reduceKeys`): (x,y) -> (x/2, y/2). */
-case class ParentTileKeys(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(TileKeysOf.elementType, containsNull = false)
-  override def nullSafeEval(arr: Any): Any = {
-    val a = arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val seen = scala.collection.mutable.LinkedHashSet.empty[(Int, Int)]
-    (0 until a.numElements).foreach { i =>
-      val r = a.getStruct(i, 2)
-      seen += ((r.getInt(0) / 2, r.getInt(1) / 2))
-    }
-    new GenericArrayData(seen.map { case (x, y) => InternalRow(x, y) }.toArray)
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
 
 /** Dimension-preserving clip of a lon/lat geometry to tile (z, x, y). An
   * attached error channel counts intersection timeouts/failures (where the
@@ -783,21 +548,6 @@ case class StClipToTile(first: Expression, second: Expression, third: Expression
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): Expression =
     copy(first = f, second = s, third = t, fourth = q)
-}
-
-case class StSimplify(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(GeometryUDT.Instance, DoubleType, BooleanType)
-  override def dataType: DataType = GeometryUDT.Instance
-  override def nullSafeEval(b: Any, tol: Any, preserve: Any): Any = {
-    val g = Wkb.read(b.asInstanceOf[Array[Byte]])
-    val s =
-      if (preserve.asInstanceOf[Boolean]) Simplify.topologyPreserving(g, tol.asInstanceOf[Double])
-      else Simplify.douglasPeucker(g, tol.asInstanceOf[Double])
-    Wkb.write(s)
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(f, s, t)
 }
 
 object TileFragments {
@@ -847,77 +597,79 @@ case class TileFragments(children: Seq[Expression],
     copy(children = cs)
 }
 
-/** Column-facing API (the engine's `functions._`). */
+/** Column-facing API (the engine's `functions._`): each stateless function is
+  * its [[FunctionTable]] row applied to the columns; the row's argument types
+  * give the implicit casts.
+  */
 object functions {
   import org.apache.spark.sql.functions.lit
-
   import org.apache.spark.sql.vps.ColumnBridge
+  import FunctionTable.call
   private def c(e: Expression): Column = ColumnBridge.column(e)
   private def ex(col: Column): Expression = ColumnBridge.expression(col)
 
-  def st_point(lon: Column, lat: Column): Column =
-    c(StPoint(ex(lon.cast("double")), ex(lat.cast("double"))))
-  def st_geomFromWKT(wkt: Column): Column = c(StGeomFromWkt(ex(wkt)))
+  def st_point(lon: Column, lat: Column): Column = call("st_point", lon, lat)
+  def st_geomFromWKT(wkt: Column): Column = call("st_geomfromwkt", wkt)
   /** Tolerant parse: malformed WKT -> null geometry (row kept) + one tick on
     * the error channel's accumulator.
     */
   def st_geomFromWKT(wkt: Column, errors: vps.geom.ErrorChannel): Column =
     c(StGeomFromWkt(ex(wkt), Some(errors)))
-  def st_geomFromWKB(wkb: Column): Column = c(StGeomFromWkb(ex(wkb)))
-  def st_asText(g: Column): Column = c(StAsText(ex(g)))
-  def st_asWKB(g: Column): Column = c(StAsWkb(ex(g)))
-  def st_x(g: Column): Column = c(StX(ex(g)))
-  def st_y(g: Column): Column = c(StY(ex(g)))
-  def st_area(g: Column): Column = c(StArea(ex(g)))
-  def st_length(g: Column): Column = c(StLength(ex(g)))
-  def st_numPoints(g: Column): Column = c(StNumPoints(ex(g)))
-  def st_centroid(g: Column): Column = c(StCentroid(ex(g)))
-  def st_isEmpty(g: Column): Column = c(StIsEmpty(ex(g)))
-  def st_geometryType(g: Column): Column = c(StGeometryType(ex(g)))
-  def st_toWebMercator(g: Column): Column = c(StToWebMercator(ex(g)))
-  def st_toLonLat(g: Column): Column = c(StToLonLat(ex(g)))
+  def st_geomFromWKB(wkb: Column): Column = call("st_geomfromwkb", wkb)
+  def st_asText(g: Column): Column = call("st_astext", g)
+  def st_asWKB(g: Column): Column = call("st_aswkb", g)
+  def st_x(g: Column): Column = call("st_x", g)
+  def st_y(g: Column): Column = call("st_y", g)
+  def st_area(g: Column): Column = call("st_area", g)
+  def st_length(g: Column): Column = call("st_length", g)
+  def st_numPoints(g: Column): Column = call("st_numpoints", g)
+  def st_centroid(g: Column): Column = call("st_centroid", g)
+  def st_isEmpty(g: Column): Column = call("st_isempty", g)
+  def st_geometryType(g: Column): Column = call("st_geometrytype", g)
+  def st_toWebMercator(g: Column): Column = call("st_towebmercator", g)
+  def st_toLonLat(g: Column): Column = call("st_tolonlat", g)
   /** Reproject between EPSG:4326, EPSG:3857, UTM (EPSG:326xx/327xx) and
     * Lambert conformal conic grids (EPSG:2154/3034/3978).
     */
   def st_reproject(g: Column, fromCrs: String, toCrs: String): Column =
-    c(StReproject(ex(g), ex(lit(fromCrs)), ex(lit(toCrs))))
-  def st_makeValid(g: Column): Column = c(StMakeValid(ex(g)))
-  def st_numGeometries(g: Column): Column = c(StNumGeometries(ex(g)))
-  def st_buffer(g: Column, dist: Column): Column = c(StBuffer(ex(g), ex(dist.cast("double"))))
-  def st_convexHull(g: Column): Column = c(StConvexHull(ex(g)))
-  def st_envelope(g: Column): Column = c(StEnvelope(ex(g)))
-  def st_boundary(g: Column): Column = c(StBoundary(ex(g)))
-  def st_intersection(a: Column, b: Column): Column = c(StIntersection(ex(a), ex(b)))
-  def st_union(a: Column, b: Column): Column = c(StUnion(ex(a), ex(b)))
-  def st_difference(a: Column, b: Column): Column = c(StDifference(ex(a), ex(b)))
-  def st_symDifference(a: Column, b: Column): Column = c(StSymDifference(ex(a), ex(b)))
-  def st_isValid(g: Column): Column = c(StIsValid(ex(g)))
+    call("st_reproject", g, lit(fromCrs), lit(toCrs))
+  def st_makeValid(g: Column): Column = call("st_makevalid", g)
+  def st_numGeometries(g: Column): Column = call("st_numgeometries", g)
+  def st_buffer(g: Column, dist: Column): Column = call("st_buffer", g, dist)
+  def st_convexHull(g: Column): Column = call("st_convexhull", g)
+  def st_envelope(g: Column): Column = call("st_envelope", g)
+  def st_boundary(g: Column): Column = call("st_boundary", g)
+  def st_intersection(a: Column, b: Column): Column = call("st_intersection", a, b)
+  def st_union(a: Column, b: Column): Column = call("st_union", a, b)
+  def st_difference(a: Column, b: Column): Column = call("st_difference", a, b)
+  def st_symDifference(a: Column, b: Column): Column = call("st_symdifference", a, b)
+  def st_isValid(g: Column): Column = call("st_isvalid", g)
   /** Aggregate dissolve: `groupBy(key).agg(st_union_agg(geom))`. */
-  def st_union_agg(g: Column): Column = c(StUnionAgg(ex(g)).toAggregateExpression())
-  def st_contains(a: Column, b: Column): Column = c(StContains(ex(a), ex(b)))
-  def st_intersects(a: Column, b: Column): Column = c(StIntersects(ex(a), ex(b)))
+  def st_union_agg(g: Column): Column = call("st_union_agg", g)
+  def st_contains(a: Column, b: Column): Column = call("st_contains", a, b)
+  def st_intersects(a: Column, b: Column): Column = call("st_intersects", a, b)
   /** [[StIntersectsKeyed]]: `key` must uniquely identify geometry `a` within
     * the query; the prepared-geometry cache probes by the key in O(1).
     */
   def st_intersects_keyed(key: Column, a: Column, b: Column): Column =
     c(StIntersectsKeyed(ex(key.cast("long")), ex(a), ex(b)))
-  def st_within(a: Column, b: Column): Column = c(StWithin(ex(a), ex(b)))
-  def st_distance(a: Column, b: Column): Column = c(StDistance(ex(a), ex(b)))
-  def tile_x(lon: Column, zoom: Column): Column = c(TileXOf(ex(lon.cast("double")), ex(zoom.cast("int"))))
-  def tile_y(lat: Column, zoom: Column): Column = c(TileYOf(ex(lat.cast("double")), ex(zoom.cast("int"))))
+  def st_within(a: Column, b: Column): Column = call("st_within", a, b)
+  def st_distance(a: Column, b: Column): Column = call("st_distance", a, b)
+  def tile_x(lon: Column, zoom: Column): Column = call("tile_x", lon, zoom)
+  def tile_y(lat: Column, zoom: Column): Column = call("tile_y", lat, zoom)
   def tile_x(lon: Column, zoom: Int): Column = tile_x(lon, lit(zoom))
   def tile_y(lat: Column, zoom: Int): Column = tile_y(lat, lit(zoom))
-  def cell_at(lon: Column, lat: Column, level: Int): Column =
-    c(CellAt(ex(lon.cast("double")), ex(lat.cast("double")), ex(lit(level))))
-  def cell_parent(cell: Column, level: Int): Column = c(CellParent(ex(cell), ex(lit(level))))
-  def cell_kring(cell: Column, k: Column): Column = c(CellKRing(ex(cell), ex(k)))
+  /** H3/S2-style cell id of a lon/lat at a level (Z-order packing). */
+  def cell_at(lon: Column, lat: Column, level: Int): Column = call("cell_at", lon, lat, lit(level))
+  def cell_parent(cell: Column, level: Int): Column = call("cell_parent", cell, lit(level))
+  def cell_kring(cell: Column, k: Column): Column = call("cell_kring", cell, k)
   def cell_kring(cell: Column, k: Int): Column = cell_kring(cell, lit(k))
-  def cells_of(g: Column, level: Int): Column = c(CellsOf(ex(g), ex(lit(level))))
-  def tile_keys(g: Column, zoom: Column): Column = c(TileKeysOf(ex(g), ex(zoom)))
+  def cells_of(g: Column, level: Int): Column = call("cells_of", g, lit(level))
+  def tile_keys(g: Column, zoom: Column): Column = call("tile_keys", g, zoom)
   def tile_keys(g: Column, zoom: Int): Column = tile_keys(g, lit(zoom))
-  def parent_tile_keys(keys: Column): Column = c(ParentTileKeys(ex(keys)))
+  def parent_tile_keys(keys: Column): Column = call("parent_tile_keys", keys)
   def st_clipToTile(g: Column, z: Column, x: Column, y: Column): Column =
-    c(StClipToTile(ex(g), ex(z), ex(x), ex(y)))
+    call("st_cliptotile", g, z, x, y)
   /** 0-or-1 pre-encoded MVT fragments; consume with `explode` (see
     * [[TileFragments]]).
     */
@@ -928,53 +680,13 @@ object functions {
   def st_clipToTile(g: Column, z: Column, x: Column, y: Column, errors: vps.geom.ErrorChannel): Column =
     c(StClipToTile(ex(g), ex(z), ex(x), ex(y), Some(errors)))
   def st_simplify(g: Column, tolerance: Column, preserveTopology: Boolean = true): Column =
-    c(StSimplify(ex(g), ex(tolerance), ex(lit(preserveTopology))))
+    call("st_simplify", g, tolerance, lit(preserveTopology))
 
-  /** Register SQL names so `spark.sql("SELECT st_point(...)")` works. */
+  /** Register every [[FunctionTable]] row as a temporary function, so
+    * `spark.sql("SELECT st_point(...)")` works in this session.
+    */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def r(name: String, f: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, f, "scala_udf")
-    r("st_point", e => StPoint(e(0), e(1)))
-    r("st_geomfromwkt", e => StGeomFromWkt(e(0)))
-    r("st_astext", e => StAsText(e(0)))
-    r("st_x", e => StX(e(0)))
-    r("st_y", e => StY(e(0)))
-    r("st_area", e => StArea(e(0)))
-    r("st_makevalid", e => StMakeValid(e(0)))
-    r("st_buffer", e => StBuffer(e(0), e(1)))
-    r("st_convexhull", e => StConvexHull(e(0)))
-    r("st_numgeometries", e => StNumGeometries(e(0)))
-    r("st_isvalid", e => StIsValid(e(0)))
-    r("st_union_agg", e => StUnionAgg(e(0)).toAggregateExpression())
-    r("st_envelope", e => StEnvelope(e(0)))
-    r("st_boundary", e => StBoundary(e(0)))
-    r("st_intersection", e => StIntersection(e(0), e(1)))
-    r("st_union", e => StUnion(e(0), e(1)))
-    r("st_difference", e => StDifference(e(0), e(1)))
-    r("st_symdifference", e => StSymDifference(e(0), e(1)))
-    r("st_contains", e => StContains(e(0), e(1)))
-    r("st_intersects", e => StIntersects(e(0), e(1)))
-    r("st_distance", e => StDistance(e(0), e(1)))
-    r("tile_x", e => TileXOf(e(0), e(1)))
-    r("tile_y", e => TileYOf(e(0), e(1)))
-    r("cell_at", e => CellAt(e(0), e(1), e(2)))
-    r("cell_kring", e => CellKRing(e(0), e(1)))
-    r("tile_keys", e => TileKeysOf(e(0), e(1)))
-    r("st_reproject", e => StReproject(e(0), e(1), e(2)))
+    FunctionTable.rows.foreach(f => reg.createOrReplaceTempFunction(f.name, f(_), "scala_udf"))
   }
-}
-
-/** All cell ids at `level` whose tile intersects the geometry envelope —
-  * the polygon-side key generator for cell-partitioned spatial joins.
-  */
-case class CellsOf(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(b: Any, lvl: Any): Any = {
-    val level = lvl.asInstanceOf[Int]
-    val keys = TileMath.keysForGeometry(Wkb.read(b.asInstanceOf[Array[Byte]]), level)
-    new GenericArrayData(keys.map { case (x, y) => CellId.pack(level, x.toLong, y.toLong) }.toArray)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }

@@ -3,8 +3,8 @@ package vps.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -193,8 +193,7 @@ object TextOps {
   }
 
   /** splitmix64(v ^ salt) >>> 11 scaled by 2^-53: uniform in [0,1), a PURE
-    * FUNCTION of (v, salt). Public static forwarder — whole-stage codegen
-    * calls it directly (see [[HashUniform]]).
+    * FUNCTION of (v, salt); the `hash_uniform` kernel.
     */
   def hashUniform(v: Long, salt: Long): Double =
     (mix64(v ^ salt) >>> 11) * (1.0 / (1L << 53))
@@ -230,146 +229,85 @@ object TextOps {
     }
     best
   }
-}
+  // ---- SQL kernels: one per FunctionTable row, over Catalyst's internal
+  // values (UTF8String, ArrayData, MapData); the table turns each into a
+  // StaticInvoke, so they run inside whole-stage codegen ----
 
-case class MinHashSig(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(s: Any, n: Any, k: Any): Any =
-    new GenericArrayData(TextOps.minhash(
-      s.asInstanceOf[UTF8String].toString, n.asInstanceOf[Int], k.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(f, s, t)
-}
+  def minhashSig(s: UTF8String, numHashes: Int, shingle: Int): ArrayData =
+    new GenericArrayData(minhash(s.toString, numHashes, shingle))
 
-/** MinHash LSH band hashes in ONE pass: sig once, then one 64-bit hash per
-  * band slice. (Composing minhash_sig + per-band slice as separate columns lets
-  * project-collapse inline the signature into each band lane — measured 16x
-  * recompute.)
-  */
-case class MinHashBands(first: Expression, second: Expression, third: Expression, fourth: Expression)
-    extends QuaternaryExpression with CodegenFallback with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(StringType, IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(s: Any, n: Any, b: Any, k: Any): Any = {
-    val numHashes = n.asInstanceOf[Int]
-    val bands = b.asInstanceOf[Int]
+  /** MinHash LSH band hashes in ONE pass: sig once, then one 64-bit hash per
+    * band slice. (Composing minhash_sig + per-band slice as separate columns lets
+    * project-collapse inline the signature into each band lane — measured 16x
+    * recompute.)
+    */
+  def minhashBands(s: UTF8String, numHashes: Int, bands: Int, shingle: Int): ArrayData = {
     val rows = numHashes / bands
-    val sig = TextOps.minhash(s.asInstanceOf[UTF8String].toString, numHashes, k.asInstanceOf[Int])
+    val sig = minhash(s.toString, numHashes, shingle)
     val out = new Array[Long](bands)
     var bi = 0
     while (bi < bands) {
       var h = 0x100000001b3L * (bi + 1)
       var j = 0
-      while (j < rows) { h = TextOps.mix64(h ^ sig(bi * rows + j)); j += 1 }
+      while (j < rows) { h = mix64(h ^ sig(bi * rows + j)); j += 1 }
       out(bi) = h
       bi += 1
     }
     new GenericArrayData(out)
   }
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Expression = copy(f, s, t, q)
-}
 
-case class SimHash64(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(s: Any): Any = TextOps.simhash(s.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+  def simhash64(s: UTF8String): Long = simhash(s.toString)
 
-/** (sig, band0..band3) in one pass — sibling of MinHashBands: computing band
-  * slices as separate columns re-evaluates simhash per band after
-  * project-collapse.
-  */
-case class SimHashBands(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(s: Any): Any = {
-    val sig = TextOps.simhash(s.asInstanceOf[UTF8String].toString)
+  /** (sig, band0..band3) in one pass — sibling of [[minhashBands]]: computing
+    * band slices as separate columns re-evaluates simhash per band after
+    * project-collapse.
+    */
+  def simhashBands(s: UTF8String): ArrayData = {
+    val sig = simhash(s.toString)
     new GenericArrayData(Array(sig, sig & 0xffffL, (sig >>> 16) & 0xffffL,
       (sig >>> 32) & 0xffffL, (sig >>> 48) & 0xffffL))
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
 
-case class NgramJaccard(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(StringType, StringType, IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any, n: Any): Any =
-    TextOps.jaccard(a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString,
-      n.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(f, s, t)
-}
+  def ngramJaccard(a: UTF8String, b: UTF8String, shingle: Int): Double =
+    jaccard(a.toString, b.toString, shingle)
 
-/** Exact Jaccard over two PRE-COMPUTED sorted distinct-shingle arrays (the
-  * [[CharShingles]] output): one linear merge intersection per pair. By
-  * definition `array_jaccard(char_shingles(a, k), char_shingles(b, k)) ==
-  * ngram_jaccard(a, b, k)` — same sets, same ratio — but the per-document
-  * shingle set is computed ONCE where the array column is materialized
-  * (e.g. a verify join's build side) instead of re-derived from text for
-  * every candidate pair; the LSH verify at bench SF measured ~12 s of CPU
-  * re-shingling behind a thrashing memo cache.
-  */
-case class ArrayJaccard(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val sa = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
-    val sb = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
-    TextOps.jaccardSorted(sa, sb)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
+  /** Exact Jaccard over two PRE-COMPUTED sorted distinct-shingle arrays (the
+    * [[shingleSet]] output): one linear merge intersection per pair. By
+    * definition `array_jaccard(char_shingles(a, k), char_shingles(b, k)) ==
+    * ngram_jaccard(a, b, k)` — same sets, same ratio — but the per-document
+    * shingle set is computed ONCE where the array column is materialized
+    * (e.g. a verify join's build side) instead of re-derived from text for
+    * every candidate pair; the LSH verify at bench SF measured ~12 s of CPU
+    * re-shingling behind a thrashing memo cache.
+    */
+  def arrayJaccard(a: ArrayData, b: ArrayData): Double = jaccardSorted(a.toLongArray(), b.toLongArray())
 
-/** Distinct sorted char n-gram hashes (array<long>) — the exact-overlap key
-  * set behind [[vps.ml.Decontam]]; same rolling-hash+splitmix64 pipeline as
-  * MinHash shingles, so the SQL oracle mirrors it with the established
-  * HUGEINT builders.
-  */
-case class CharShingles(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(s: Any, n: Any): Any =
-    new GenericArrayData(TextOps.sortedShingles(
-      s.asInstanceOf[UTF8String].toString, n.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
+  /** char_shingles: distinct sorted char n-gram hashes (array<long>) — the
+    * exact-overlap key set behind [[vps.ml.Decontam]]; same rolling-hash +
+    * splitmix64 pipeline as MinHash shingles, so the SQL oracle mirrors it with
+    * the established HUGEINT builders.
+    */
+  def shingleSet(s: UTF8String, n: Int): ArrayData = new GenericArrayData(sortedShingles(s.toString, n))
 
-/** Winnowing fingerprints ([[TextOps.winnow]]): array<long> of the distinct
-  * selected k-gram hashes, sorted. A per-row kernel (CodegenFallback like the
-  * other text kernels — it allocates arrays either way); the 100-TB shape is
-  * a pure map-side scan: fingerprint statistics fold over the array in-place
-  * and substring-level candidate pairs come from an (id, fp) explode into the
-  * same capped-bucket join the MinHash family uses.
-  */
-case class WinnowFingerprints(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(StringType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(s: Any, k: Any, w: Any): Any =
-    new GenericArrayData(TextOps.winnow(
-      s.asInstanceOf[UTF8String].toString, k.asInstanceOf[Int], w.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression =
-    copy(a, b, c)
-}
+  /** Winnowing fingerprints ([[winnow]]): array<long> of the distinct
+    * selected k-gram hashes, sorted. The 100-TB shape is a pure map-side scan:
+    * fingerprint statistics fold over the array in-place and substring-level
+    * candidate pairs come from an (id, fp) explode into the same capped-bucket
+    * join the MinHash family uses.
+    */
+  def winnowFingerprints(s: UTF8String, k: Int, w: Int): ArrayData =
+    new GenericArrayData(winnow(s.toString, k, w))
 
-/** Per-document term frequencies in one pass: map<term, count> over the
-  * lowercased single-space tokens (empties dropped) — semantically
-  * `explode + groupBy(doc, term).count` with the corpus-sized exchange
-  * deleted: the per-doc rollup happens in-row, so the only shuffle left in a
-  * vocabulary build is the vocabulary-sized term aggregation
-  * ([[vps.text.Vocab.termStatsFused]]).
-  */
-case class TermCounts(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
-  override def nullSafeEval(s: Any): Any = {
+  /** Per-document term frequencies in one pass: map<term, count> over the
+    * lowercased single-space tokens (empties dropped) — semantically
+    * `explode + groupBy(doc, term).count` with the corpus-sized exchange
+    * deleted: the per-doc rollup happens in-row, so the only shuffle left in a
+    * vocabulary build is the vocabulary-sized term aggregation
+    * ([[vps.text.Vocab.termStatsFused]]).
+    */
+  def termCounts(s: UTF8String): MapData = {
     // UTF8String.toLowerCase = the lower() builtin's exact semantics
-    val str = s.asInstanceOf[UTF8String].toLowerCase.toString
+    val str = s.toLowerCase.toString
     val counts = new java.util.LinkedHashMap[String, Long]()
     var i = 0
     val n = str.length
@@ -393,22 +331,54 @@ case class TermCounts(child: Expression) extends UnaryExpression with CodegenFal
       vals(idx) = e.getValue
       idx += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys, vals)
+    ArrayBasedMapData(keys, vals)
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
 
-case class DocFingerprint(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(s: Any): Any = TextOps.fingerprint(s.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
+  def docFingerprint(s: UTF8String): Long = fingerprint(s.toString)
 
-case class LangId(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(s: Any): Any =
-    UTF8String.fromString(TextOps.langId(s.asInstanceOf[UTF8String].toString))
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+  def language(s: UTF8String): UTF8String = UTF8String.fromString(langId(s.toString))
+
+  /** Johnson-Lindenstrauss random projection: embedding -> `outDim` doubles,
+    * each the dot with a fixed pseudo-random hyperplane in [-1,1)^dim (the
+    * SAME seed-free splitmix64 plane generator the LSH bands use, rows=1), so
+    * distances are preserved within the JL bound while downstream ANN /
+    * clustering work shrinks by dim/outDim. The plane matrix is derived, never
+    * shipped.
+    */
+  def randomProjection(vec: ArrayData, outDim: Int): ArrayData = {
+    val v = vec.toFloatArray()
+    val m = Hyperplanes.planes(outDim, 1, v.length)
+    val out = new Array[Double](outDim)
+    var p = 0
+    while (p < outDim) {
+      val plane = m(p)
+      var dot = 0.0
+      var d = 0
+      while (d < v.length) { dot += v(d) * plane(d); d += 1 }
+      out(p) = dot
+      p += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Multi-band random-hyperplane LSH buckets of a float-array embedding:
+    * array of `bands` longs, each the sign pattern of `rowsPerBand` fixed
+    * pseudo-random projections. OR-composition over bands happens downstream
+    * (explode + band equi-join).
+    */
+  def hyperplaneBands(vec: ArrayData, bands: Int, rowsPerBand: Int): ArrayData =
+    new GenericArrayData(Hyperplanes.bands(vec.toFloatArray(), bands, rowsPerBand))
+
+  /** Cosine similarity between two float-array embeddings. */
+  def cosineSim(a: ArrayData, b: ArrayData): Double = {
+    val va = a.toFloatArray()
+    val vb = b.toFloatArray()
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    val n = math.min(va.length, vb.length)
+    while (i < n) { dot += va(i) * vb(i); na += va(i) * va(i); nb += vb(i) * vb(i); i += 1 }
+    if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
+  }
 }
 
 /** All unordered pairs (i < j) of an array's elements, as array<struct<a, b>>.
@@ -454,10 +424,11 @@ object CollectCapped {
 }
 
 object KeepSmallest {
-  /** Binary max-heap over `(keyBits, id)` pairs (lexicographic; keyBits is
-    * `doubleToRawLongBits` of a non-negative double, which is order-
-    * preserving). Root = largest kept pair, so a better candidate replaces
-    * the root in O(log cap).
+  /** Binary max-heap over `(keyBits, id)` pairs, compared as signed longs
+    * (lexicographic). keyBits is the total-order transform of any double key
+    * (see [[KeepSmallest.update]]): signed-long order equals numeric order,
+    * -0.0 and +0.0 share a slot, and NaN of either sign sorts last. Root =
+    * largest kept pair, so a better candidate replaces the root in O(log cap).
     */
   final class Buffer(var n: Int, var keys: Array[Long], var ids: Array[Long]) {
     @inline private def gt(k1: Long, i1: Long, k2: Long, i2: Long): Boolean =
@@ -789,123 +760,45 @@ object Hyperplanes {
   }
 }
 
-/** Johnson-Lindenstrauss random projection: embedding -> `outDim` doubles,
-  * each the dot with a fixed pseudo-random hyperplane in [-1,1)^dim (the
-  * SAME seed-free splitmix64 plane generator the LSH bands use, rows=1), so
-  * distances are preserved within the JL bound while downstream ANN /
-  * clustering work shrinks by dim/outDim. Stateless map-side expression; the
-  * plane matrix is derived, never shipped.
-  */
-case class RandomProjection(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(vAny: Any, kAny: Any): Any = {
-    val arr = vAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val v = arr.toFloatArray()
-    val k = kAny.asInstanceOf[Int]
-    val m = Hyperplanes.planes(k, 1, v.length)
-    val out = new Array[Double](k)
-    var p = 0
-    while (p < k) {
-      val plane = m(p)
-      var dot = 0.0
-      var d = 0
-      while (d < v.length) { dot += v(d) * plane(d); d += 1 }
-      out(p) = dot
-      p += 1
-    }
-    new GenericArrayData(out)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
-/** Multi-band random-hyperplane LSH buckets of a float-array embedding:
-  * array of `bands` longs, each the sign pattern of `rowsPerBand` fixed
-  * pseudo-random projections. OR-composition over bands happens downstream
-  * (explode + band equi-join).
-  */
-case class HyperplaneBands(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any, b: Any, r: Any): Any = {
-    val vec = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toFloatArray()
-    new GenericArrayData(Hyperplanes.bands(vec, b.asInstanceOf[Int], r.asInstanceOf[Int]))
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(f, s, t)
-}
-
-/** Cosine similarity between two float-array embeddings. */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val va = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toFloatArray()
-    val vb = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toFloatArray()
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    val n = math.min(va.length, vb.length)
-    while (i < n) { dot += va(i) * vb(i); na += va(i) * va(i); nb += vb(i) * vb(i); i += 1 }
-    if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** splitmix64(id ^ salt) scaled to [0,1) — the deterministic uniform behind
-  * [[vps.ml.Sampling]]. A pure function of the row's identity, so samples and
-  * splits reproduce across runs, partitionings, and cluster sizes (unlike
-  * `df.sample`, which is partition-order dependent). Real codegen via the
-  * public static forwarder, so the hosting scan stays inside whole-stage
-  * codegen (the CodegenFallback marker alone would evict it).
-  */
-case class HashUniform(left: Expression, right: Expression)
-    extends BinaryExpression with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(v: Any, s: Any): Any =
-    TextOps.hashUniform(v.asInstanceOf[Long], s.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, s) => s"vps.text.TextOps.hashUniform($v, $s)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(l, r)
-}
-
 object functions {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.vps.ColumnBridge.{column => c, expression => ex}
+  import vps.sql.FunctionTable.call
 
-  def hash_uniform(id: Column, salt: Long): Column =
-    c(HashUniform(ex(id), ex(lit(salt))))
-  def char_shingles(text: Column, n: Int): Column =
-    c(CharShingles(ex(text), ex(lit(n))))
+  /** splitmix64(id ^ salt) scaled to [0,1) — the deterministic uniform behind
+    * [[vps.ml.Sampling]]: a pure function of the row's identity, so samples and
+    * splits reproduce across runs, partitionings, and cluster sizes (unlike
+    * `df.sample`, which is partition-order dependent).
+    */
+  def hash_uniform(id: Column, salt: Long): Column = call("hash_uniform", id, lit(salt))
+  def char_shingles(text: Column, n: Int): Column = call("char_shingles", text, lit(n))
   def minhash_sig(text: Column, numHashes: Int, shingle: Int): Column =
-    c(MinHashSig(ex(text), ex(lit(numHashes)), ex(lit(shingle))))
+    call("minhash_sig", text, lit(numHashes), lit(shingle))
   def minhash_bands(text: Column, numHashes: Int, bands: Int, shingle: Int): Column =
-    c(MinHashBands(ex(text), ex(lit(numHashes)), ex(lit(bands)), ex(lit(shingle))))
-  def simhash64(text: Column): Column = c(SimHash64(ex(text)))
+    call("minhash_bands", text, lit(numHashes), lit(bands), lit(shingle))
+  def simhash64(text: Column): Column = call("simhash64", text)
   /** [sig, band0, band1, band2, band3] in one pass. */
-  def simhash_bands(text: Column): Column = c(SimHashBands(ex(text)))
+  def simhash_bands(text: Column): Column = call("simhash_bands", text)
   def ngram_jaccard(a: Column, b: Column, shingle: Int): Column =
-    c(NgramJaccard(ex(a), ex(b), ex(lit(shingle))))
-  def array_jaccard(a: Column, b: Column): Column = c(ArrayJaccard(ex(a), ex(b)))
-  def doc_fingerprint(text: Column): Column = c(DocFingerprint(ex(text)))
+    call("ngram_jaccard", a, b, lit(shingle))
+  def array_jaccard(a: Column, b: Column): Column = call("array_jaccard", a, b)
+  def doc_fingerprint(text: Column): Column = call("doc_fingerprint", text)
   def winnow_fingerprints(text: Column, k: Int, w: Int): Column =
-    c(WinnowFingerprints(ex(text), ex(lit(k)), ex(lit(w))))
-  def term_counts(text: Column): Column = c(TermCounts(ex(text)))
-  def lang_id(text: Column): Column = c(LangId(ex(text)))
-  def cosine_sim(a: Column, b: Column): Column = c(CosineSim(ex(a), ex(b)))
-  def random_projection(v: Column, outDim: Int): Column =
-    c(RandomProjection(ex(v), ex(lit(outDim))))
+    call("winnow_fingerprints", text, lit(k), lit(w))
+  def term_counts(text: Column): Column = call("term_counts", text)
+  def lang_id(text: Column): Column = call("lang_id", text)
+  def cosine_sim(a: Column, b: Column): Column = call("cosine_sim", a, b)
+  def random_projection(v: Column, outDim: Int): Column = call("random_projection", v, lit(outDim))
   def hyperplane_bands(v: Column, bands: Int, rowsPerBand: Int): Column =
-    c(HyperplaneBands(ex(v), ex(lit(bands)), ex(lit(rowsPerBand))))
+    call("hyperplane_bands", v, lit(bands), lit(rowsPerBand))
   /** All unordered element pairs (i < j) as array<struct<a, b>>. */
-  def array_pairs(arr: Column): Column = c(ArrayPairs(ex(arr)))
+  def array_pairs(arr: Column): Column = call("array_pairs", arr)
+  /** Bounded top-k-smallest `(key, id)` aggregate ([[KeepSmallest]]). */
+  def keep_smallest(key: Column, id: Column, cap: Int): Column =
+    c(KeepSmallest(ex(key), ex(id), cap).toAggregateExpression())
   /** Bounded collect_list (bigint / struct-of-bigint elements): NULL once the
     * group exceeds `cap`, with O(cap) aggregation state everywhere.
     */
-  def keep_smallest(key: Column, id: Column, cap: Int): Column =
-    c(KeepSmallest(ex(key), ex(id), cap).toAggregateExpression())
   def collect_capped(e: Column, cap: Int): Column =
     c(CollectCapped(ex(e), cap).toAggregateExpression())
   /** Keep bucket rows with >= `minSize` elements; count NULL (capped-out)

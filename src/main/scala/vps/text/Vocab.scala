@@ -37,7 +37,7 @@ object Vocab {
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("tf_total"))
 
   /** [[termStats]] with the corpus-sized `(doc, term)` exchange deleted: the
-    * per-doc rollup happens in-row ([[TextExpressions TermCounts]] map), so
+    * per-doc rollup happens in-row (the `term_counts` map, [[vps.text.TextOps.termCounts]]), so
     * the exploded stream is already one row per (doc, distinct term) and the
     * ONLY shuffle is the vocabulary-sized term aggregation (map-side partial
     * combine first). Proven row-equal to the two-exchange form by spec; the

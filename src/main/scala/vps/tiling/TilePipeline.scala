@@ -222,7 +222,7 @@ object TilePipeline {
     *
     * Keys ride UNEXPLODED as `keys: array<struct<x,y>>` — one row per
     * (id, layer) with the geometry stored once — and each re-key dedupes
-    * parents per row with [[vps.sql.ParentTileKeys]] MAP-SIDE (the reference's
+    * parents per row with `parent_tile_keys` ([[vps.sql.GeomOps.parentTileKeys]]) MAP-SIDE (the reference's
     * per-row `reduceKeys`): zero shuffles between zooms, where an exploded
     * frame would pay a full-row dropDuplicates exchange (WKB included) per
     * zoom. The only exchange per zoom is packAndEncode's tile aggregation.
