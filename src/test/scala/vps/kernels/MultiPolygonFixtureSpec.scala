@@ -26,16 +26,15 @@ class MultiPolygonFixtureSpec extends AnyFunSuite {
     case _ => 0
   }
 
-  private def expectedWkts(id: Int): Seq[Geometry] = {
-    val f = new java.io.File(s"$resDir/relation-$id.wkt")
-    if (!f.exists) Seq.empty
-    else java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
+  private def fixtureFile(id: Int, ext: String) = new java.io.File(s"$resDir/relation-$id.$ext")
+
+  private def expectedWkts(id: Int): Seq[Geometry] =
+    java.nio.file.Files.readAllLines(fixtureFile(id, "wkt").toPath).asScala.toSeq
       .filter(_.nonEmpty).map(Wkt.read)
-  }
 
   private def buildFixture(id: Int): Seq[Geometry] = {
     val spark = SparkTestSession.spark
-    val rows = spark.read.orc(s"$resDir/relation-$id.orc")
+    val rows = spark.read.orc(fixtureFile(id, "orc").getPath)
       .select("changeset", "id", "type", "role", "geom")
       .collect() // single small file; preserves file row order
     // group by (changeset, id) in first-appearance order, preserving member order
@@ -54,6 +53,11 @@ class MultiPolygonFixtureSpec extends AnyFunSuite {
 
   fixtureIds.foreach { id =>
     test(s"relation $id matches osm2pgsql WKT") {
+      // the members and osm2pgsql's output exist only in the reference checkout:
+      // without both files there is nothing to compare, so the test cancels
+      Seq("orc", "wkt").map(fixtureFile(id, _)).foreach { f =>
+        assume(f.exists, s"fixture absent: ${f.getPath}")
+      }
       val actual = buildFixture(id)
       val expected = expectedWkts(id)
       assert(actual.size === expected.size, s"geometry count for $id")

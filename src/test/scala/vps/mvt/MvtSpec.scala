@@ -139,27 +139,124 @@ class MvtSpec extends AnyFunSuite {
       if (acc.nonEmpty && acc.last.equals2D(c)) acc else acc :+ c
     }.toArray
 
+  /** A tile written by hand from the public MVT 2.1 spec, never by our encoder: field tags
+    * from `vector_tile.proto`, geometry command streams from §4.3.5 "Example Geometry
+    * Encodings". Each length prefix counts the bytes of its own message. All varints are
+    * one byte except the extents, `uint_value` 300 and the ten-byte negative `int_value`.
+    */
+  private val specTile: Array[Byte] = Array[Int](
+    0x1a, 0x57,                                   // Tile.layers, 87 bytes
+      0x78, 0x02,                                 //   version 2
+      0x0a, 0x06, 'p', 'o', 'i', 'n', 't', 's',   //   name "points"
+      0x12, 0x0f,                                 //   features, 15 bytes
+        0x08, 0x01,                               //     id 1
+        0x12, 0x04, 0x00, 0x00, 0x01, 0x01,       //     tags name=park, rank=-1
+        0x18, 0x01,                               //     type POINT
+        0x22, 0x03, 9, 50, 34,                    //     geometry: Point
+      0x12, 0x11,                                 //   features, 17 bytes
+        0x08, 0x02,                               //     id 2
+        0x12, 0x04, 0x00, 0x00, 0x01, 0x02,       //     tags name=park, rank=300
+        0x18, 0x01,                               //     type POINT
+        0x22, 0x05, 17, 10, 14, 3, 9,             //     geometry: MultiPoint
+      0x1a, 0x04, 'n', 'a', 'm', 'e',             //   keys[0]
+      0x1a, 0x04, 'r', 'a', 'n', 'k',             //   keys[1]
+      0x22, 0x06, 0x0a, 0x04, 'p', 'a', 'r', 'k', //   values[0] string_value "park"
+      0x22, 0x0b, 0x20,                           //   values[1] int_value -1 (ten-byte varint)
+        0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0x01,
+      0x22, 0x03, 0x28, 0xac, 0x02,               //   values[2] uint_value 300
+      0x28, 0x80, 0x20,                           //   extent 4096
+    0x1a, 0x61,                                   // Tile.layers, 97 bytes
+      0x78, 0x02,                                 //   version 2
+      0x0a, 0x05, 'l', 'i', 'n', 'e', 's',        //   name "lines"
+      0x12, 0x14,                                 //   features, 20 bytes
+        0x08, 0x03,                               //     id 3
+        0x12, 0x04, 0x00, 0x00, 0x01, 0x01,       //     tags width=1.5f, oneway=true
+        0x18, 0x02,                               //     type LINESTRING
+        0x22, 0x08, 9, 4, 4, 18, 0, 16, 16, 0,    //     geometry: LineString
+      0x12, 0x18,                                 //   features, 24 bytes
+        0x08, 0x04,                               //     id 4
+        0x12, 0x02, 0x00, 0x02,                   //     tags width=2.5
+        0x18, 0x02,                               //     type LINESTRING
+        0x22, 0x0e,                               //     geometry: MultiLineString
+          9, 4, 4, 18, 0, 16, 16, 0, 9, 17, 17, 10, 4, 8,
+      0x1a, 0x05, 'w', 'i', 'd', 't', 'h',        //   keys[0]
+      0x1a, 0x06, 'o', 'n', 'e', 'w', 'a', 'y',   //   keys[1]
+      0x22, 0x05, 0x15, 0x00, 0x00, 0xc0, 0x3f,   //   values[0] float_value 1.5 (0x3fc00000 LE)
+      0x22, 0x02, 0x38, 0x01,                     //   values[1] bool_value true
+      0x22, 0x09, 0x19,                           //   values[2] double_value 2.5 (0x4004000000000000 LE)
+        0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x04, 0x40,
+      0x28, 0x80, 0x04,                           //   extent 512
+    0x1a, 0x56,                                   // Tile.layers, 86 bytes
+      0x78, 0x02,                                 //   version 2
+      0x0a, 0x08, 'p', 'o', 'l', 'y', 'g', 'o', 'n', 's', // name "polygons"
+      0x12, 0x13,                                 //   features, 19 bytes
+        0x08, 0x05,                               //     id 5
+        0x12, 0x02, 0x00, 0x00,                   //     tags level=-3
+        0x18, 0x03,                               //     type POLYGON
+        0x22, 0x09, 9, 6, 12, 18, 10, 12, 24, 44, 15, // geometry: Polygon
+      0x12, 0x25,                                 //   features, 37 bytes: no id, no tags
+        0x18, 0x03,                               //     type POLYGON
+        0x22, 0x21,                               //     geometry: MultiPolygon, 33 varints
+          9, 0, 0, 26, 20, 0, 0, 20, 19, 0, 15,
+          9, 22, 2, 26, 18, 0, 0, 18, 17, 0, 15,
+          9, 4, 13, 26, 0, 8, 8, 0, 0, 7, 15,
+      0x1a, 0x05, 'l', 'e', 'v', 'e', 'l',        //   keys[0]
+      0x22, 0x02, 0x30, 0x05,                     //   values[0] sint_value -3 (zigzag 5)
+      0x28, 0x80, 0x02                            //   extent 256
+  ).map(_.toByte)
+
+  /** What the spec states `specTile` holds: per layer (name, extent), then per feature
+    * (id, geometry, attributes). The geometries are §4.3.5's decodings of its streams. */
+  private val specTileContent: Seq[((String, Int), Seq[(Option[Long], String, Map[String, MvtValue])])] = Seq(
+    ("points", 4096) -> Seq(
+      (Some(1L), "POINT (25 17)", Map("name" -> MvtValue.Str("park"), "rank" -> MvtValue.I64(-1))),
+      (Some(2L), "MULTIPOINT ((5 7), (3 2))", Map("name" -> MvtValue.Str("park"), "rank" -> MvtValue.U64(300)))),
+    ("lines", 512) -> Seq(
+      (Some(3L), "LINESTRING (2 2, 2 10, 10 10)",
+        Map("width" -> MvtValue.F32(1.5f), "oneway" -> MvtValue.Bool(true))),
+      (Some(4L), "MULTILINESTRING ((2 2, 2 10, 10 10), (1 1, 3 5))", Map("width" -> MvtValue.F64(2.5)))),
+    ("polygons", 256) -> Seq(
+      (Some(5L), "POLYGON ((3 6, 8 12, 20 34, 3 6))", Map("level" -> MvtValue.S64(-3))),
+      (None, "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0)), " +
+        "((11 11, 20 11, 20 20, 11 20, 11 11), (13 13, 13 17, 17 17, 17 13, 13 13)))", Map.empty)))
+
   test("reference fixture tiles decode and re-encode losslessly") {
-    // RETRIEVED PUBLIC CONTENT: reference repo data fixtures, read-only
+    // the spec-derived tile always; RETRIEVED PUBLIC CONTENT: reference repo data fixtures,
+    // read-only, wherever they exist
     val dir = new java.io.File("/root/reference/data")
-    val fixtures = Seq("onepoint.mvt", "linestring.mvt", "polygon.mvt", "roads.mvt")
-      .map(n => new java.io.File(dir, n)).filter(_.exists)
+    val fixtures: Seq[(String, Array[Byte])] = ("spec-4.3.5" -> specTile) +:
+      Seq("onepoint.mvt", "linestring.mvt", "polygon.mvt", "roads.mvt")
+        .map(n => new java.io.File(dir, n)).filter(_.exists)
+        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath))
     assert(fixtures.nonEmpty, "no reference fixtures found")
-    fixtures.foreach { file =>
-      val bytes = java.nio.file.Files.readAllBytes(file.toPath)
+
+    // the spec-derived tile decodes to the content the spec states for it
+    val spec = Mvt.decode(specTile)
+    assert(spec.layers.map(l => (l.name, l.extent, l.version)) ===
+      specTileContent.map { case ((name, extent), _) => (name, extent, 2) })
+    spec.layers.zip(specTileContent).foreach { case (layer, (_, expected)) =>
+      assert(layer.features.size === expected.size, s"spec/${layer.name} feature count")
+      layer.features.zip(expected).foreach { case (f, (id, wkt, attrs)) =>
+        assert(f.geometry.equalsExact(Wkt.read(wkt)), s"spec/${layer.name}: got ${Wkt.write(f.geometry)}, want $wkt")
+        assert(f.attrs.toMap === attrs, s"spec/${layer.name} attrs of $wkt")
+        assert(f.id === id)
+      }
+    }
+
+    fixtures.foreach { case (name, bytes) =>
       val tile = Mvt.decode(bytes)
-      assert(tile.layers.nonEmpty, s"${file.getName}: no layers")
+      assert(tile.layers.nonEmpty, s"$name: no layers")
       val total = tile.layers.map(_.features.size).sum
-      assert(total > 0, s"${file.getName}: no features")
+      assert(total > 0, s"$name: no features")
       // re-encode -> decode -> identical geometry + attrs per layer
       val again = Mvt.decode(Mvt.encode(tile))
       assert(again.layers.map(_.name) === tile.layers.map(_.name))
       tile.layers.zip(again.layers).foreach { case (a, b) =>
         assert(a.extent === b.extent)
-        assert(a.features.size === b.features.size, s"${file.getName}/${a.name} feature count")
+        assert(a.features.size === b.features.size, s"$name/${a.name} feature count")
         a.features.zip(b.features).foreach { case (fa, fb) =>
-          assert(fa.geometry.norm().equalsExact(fb.geometry.norm()), s"${file.getName}/${a.name} geometry")
-          assert(fa.attrs.toMap === fb.attrs.toMap, s"${file.getName}/${a.name} attrs")
+          assert(fa.geometry.norm().equalsExact(fb.geometry.norm()), s"$name/${a.name} geometry")
+          assert(fa.attrs.toMap === fb.attrs.toMap, s"$name/${a.name} attrs")
           assert(fa.id === fb.id)
         }
       }
