@@ -137,8 +137,11 @@ object SpatialJoins {
       pointCol: String = "geom",
       polyCol: String = "geom",
       polyIdCol: String = "poly_id"): DataFrame = {
-    val pts = points.withColumn("_cell",
-      vps.sql.functions.cell_at(st_x(col(pointCol)), st_y(col(pointCol)), level))
+    // a non-nullable key (cell ids are never negative, so -1 joins nothing):
+    // a nullable one makes the optimizer push an inferred isnotnull filter
+    // below this projection, and the point's cell is then computed twice
+    val pts = points.withColumn("_cell", coalesce(
+      vps.sql.functions.cell_at(st_x(col(pointCol)), st_y(col(pointCol)), level), lit(-1L)))
     val pls = polygons
       .select(col(polyIdCol).as("poly_id"), col(polyCol).as("_poly_geom"))
       .withColumn("_cell", explode(cells_of(col("_poly_geom"), level)))

@@ -314,7 +314,7 @@ object Mvt {
       }
     }
     val (keyTable, valueTable) = (keys.toIndexedSeq, values.toIndexedSeq)
-    val feats = rawFeatures.map { case (b, s, e) => decodeFeature(new PbReader(b, s, e), keyTable, valueTable) }
+    val feats = rawFeatures.flatMap { case (b, s, e) => decodeFeature(new PbReader(b, s, e), keyTable, valueTable) }
     MvtLayer(name, extent, version, feats.toSeq)
   }
 
@@ -336,7 +336,11 @@ object Mvt {
     v
   }
 
-  private def decodeFeature(r: PbReader, keys: IndexedSeq[String], values: IndexedSeq[MvtValue]): MvtFeature = {
+  /** None for an `UNKNOWN` (type 0) feature, or a type outside the spec's
+    * enum: the spec leaves their geometry undefined, and every decoded
+    * feature must re-encode, so such features are dropped.
+    */
+  private def decodeFeature(r: PbReader, keys: IndexedSeq[String], values: IndexedSeq[MvtValue]): Option[MvtFeature] = {
     var id: Option[Long] = None
     var geomType = 0
     val tags = mutable.ArrayBuffer.empty[Int]
@@ -364,7 +368,8 @@ object Mvt {
     val attrs = tags.grouped(2).collect {
       case mutable.ArrayBuffer(k, v) if k < keys.length && v < values.length => keys(k) -> values(v)
     }.toSeq
-    MvtFeature(id, decodeGeometry(geomType, cmds.toArray), attrs)
+    if (geomType < GeomPoint || geomType > GeomPolygon) None
+    else Some(MvtFeature(id, decodeGeometry(geomType, cmds.toArray), attrs))
   }
 
   def decodeGeometry(geomType: Int, cmds: Array[Long]): Geometry = {

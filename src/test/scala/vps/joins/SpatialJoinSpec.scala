@@ -56,6 +56,14 @@ class SpatialJoinSpec extends AnyFunSuite {
     }
   }
 
+  test("pipCellJoin computes each point's cell once and drops points without geometry") {
+    val withNull = points.unionByName(Seq(-1L).toDF("id").select($"id", lit(null).cast(points.schema("geom").dataType).as("geom")))
+    val joined = SpatialJoins.pipCellJoin(withNull, polygons, 7)
+    assert(joined.select($"id", $"poly_id").as[(Long, Long)].collect().toSet === bruteForcePip())
+    val plan = joined.queryExecution.executedPlan.toString
+    assert("CellId.fromLonLat".r.findAllMatchIn(plan).size === 1, plan)
+  }
+
   test("keyed prepared-geometry cache cannot leak across queries reusing ids") {
     // two sequential cell joins bind poly_id=0 to DIFFERENT geometries; the
     // keyed cache is expression-instance state, so the second query must see

@@ -2,6 +2,8 @@ package vps.mvt
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.geom._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import vps.geom.{Geo, Wkt}
 import scala.util.Random
 
@@ -308,5 +310,76 @@ class MvtSpec extends AnyFunSuite {
           TileBuilder.orderRawFeatures(raw, orderAreas))))
       assert(viaRaw.toSeq === viaModel.toSeq, s"orderAreas=$orderAreas")
     }
+  }
+
+  test("UNKNOWN (type 0) features are dropped on decode, so a decoded tile re-encodes") {
+    // written by hand: one layer "l" holding the same point geometry ([9, 50, 34],
+    // POINT (25 17)) as an UNKNOWN feature, a POINT feature and a feature without
+    // a type field (the proto default, UNKNOWN)
+    val tile = Array[Int](
+      0x1a, 0x27,                               // Tile.layers, 39 bytes
+        0x78, 0x02,                             //   version 2
+        0x0a, 0x01, 'l',                        //   name "l"
+        0x12, 0x09,                             //   features, 9 bytes
+          0x08, 0x01,                           //     id 1
+          0x18, 0x00,                           //     type UNKNOWN
+          0x22, 0x03, 9, 50, 34,                //     geometry
+        0x12, 0x09,                             //   features, 9 bytes
+          0x08, 0x02,                           //     id 2
+          0x18, 0x01,                           //     type POINT
+          0x22, 0x03, 9, 50, 34,                //     geometry
+        0x12, 0x07,                             //   features, 7 bytes
+          0x08, 0x03,                           //     id 3, no type
+          0x22, 0x03, 9, 50, 34,                //     geometry
+        0x28, 0x80, 0x20                        //   extent 4096
+    ).map(_.toByte)
+    val decoded = Mvt.decode(tile)
+    assert(decoded.layers.map(l => (l.name, l.extent)) === Seq(("l", 4096)))
+    val feats = decoded.layers.head.features
+    assert(feats.map(_.id) === Seq(Some(2L)))
+    assert(feats.head.geometry.equalsExact(Wkt.read("POINT (25 17)")))
+    assert(roundTrip(decoded) === decoded)
+  }
+
+  test("property: decode after encode returns random integer-grid geometries") {
+    val f = Geo.factory
+    val coord = Gen.zip(Gen.choose(0, 4096), Gen.choose(0, 4096)).map { case (x, y) => new Coordinate(x, y) }
+    val line = Gen.choose(2, 12).flatMap(Gen.listOfN(_, coord))
+      .map(cs => dedupe(cs.toArray)).suchThat(_.length >= 2).map(f.createLineString)
+    // a rectangle with or without a hole strictly inside it, placed in one
+    // 1024-wide grid cell so that the parts of a multipolygon are disjoint
+    def rect(cell: Int): Gen[Polygon] = for {
+      x <- Gen.choose(0, 900); y <- Gen.choose(0, 900)
+      w <- Gen.choose(3, 120); h <- Gen.choose(3, 120); hole <- Gen.oneOf(true, false)
+    } yield {
+      val (x0, y0) = ((cell % 4) * 1024.0 + x, (cell / 4) * 1024.0 + y)
+      val shell = Geo.box(x0, y0, x0 + w, y0 + h).getExteriorRing.asInstanceOf[LinearRing]
+      val holes = if (hole) Array(Geo.box(x0 + 1, y0 + 1, x0 + w - 1, y0 + h - 1).getExteriorRing.asInstanceOf[LinearRing])
+        else Array.empty[LinearRing]
+      f.createPolygon(shell, holes)
+    }
+    val triangle = Gen.listOfN(3, coord).suchThat { cs =>
+      val Seq(a, b, c) = cs
+      (b.x - a.x) * (c.y - a.y) != (c.x - a.x) * (b.y - a.y)
+    }.map(cs => f.createPolygon((cs :+ cs.head).toArray))
+    val geometry: Gen[Geometry] = Gen.oneOf(
+      coord.map(f.createPoint),
+      Gen.choose(2, 8).flatMap(Gen.listOfN(_, coord)).map(cs => f.createMultiPointFromCoords(cs.distinct.toArray)),
+      line,
+      Gen.choose(2, 4).flatMap(Gen.listOfN(_, line)).map(ls => f.createMultiLineString(ls.toArray)),
+      Gen.oneOf(triangle, Gen.choose(0, 15).flatMap(rect)),
+      Gen.choose(2, 5).flatMap(n => Gen.sequence[Seq[Polygon], Polygon]((0 until n).map(rect)))
+        .map(ps => f.createMultiPolygon(ps.toArray)))
+    // MVT cannot tell a one-part multi geometry from a simple one
+    def unwrap(g: Geometry): Geometry =
+      if (g.getNumGeometries == 1 && g.isInstanceOf[GeometryCollection]) g.getGeometryN(0) else g
+    val prop = Prop.forAll(geometry) { g =>
+      val back = roundTrip(MvtTile(Seq(MvtLayer("l", 4096, 2, Seq(MvtFeature(Some(1L), g, Seq.empty))))))
+        .layers.head.features.head.geometry
+      Prop(unwrap(back).norm().equalsExact(unwrap(g).norm())) :| s"${Wkt.write(g)} -> ${Wkt.write(back)}"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(500)
+      .withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 }
