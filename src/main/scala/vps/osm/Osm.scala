@@ -1,23 +1,29 @@
 package vps.osm
 
 import java.sql.Timestamp
+import java.time.{LocalDate, ZoneId}
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, ObjectType}
+import org.apache.spark.sql.vps.ColumnBridge
 
-import vps.kernels.{MemberWay, OsmTimelines, RelationVersion, WayNode, WayVersion}
+import vps.kernels.{ElementRow, MemberWay, NodeRow, NodeVersion, OsmTimelines, RelationRef, RelationVersion, WayRef,
+  WayVersion}
 import vps.sql.TagFunctions._
-import vps.sql.functions.st_point
+import vps.sql.functions.st_geomFromWKB
 
 /** Full OSM history -> geometry reconstruction — the reference's core API
   * (`OSM.scala:22-43`, `internal/package.scala`) rebuilt on our kernels:
   *
   * - temporal resurrect + validity windows per element type (W1/W2)
   * - point geometries for interesting nodes (§3.1)
-  * - ways (K1, W3) and relations (K5 multipolygons, K6 routes): one routing
-  *   join of each element's distinct refs, then one keyed pass per element
-  *   ([[OsmTimelines]]) builds all its versions and minor versions
+  * - ways (K1, W3) and relations (K5 multipolygons, K6 routes): one keyed
+  *   pass per element ([[OsmTimelines]]) builds all its versions and minor
+  *   versions from the rows routed to it
   *
   * "Now", which closes open validity windows, is read when the DataFrame is
   * built, not when an action runs it.
@@ -50,171 +56,106 @@ object Osm {
         m.getField("role").as("role"))))
   }
 
-  /** Resurrect deleted-version state + validity interval for nodes (W1/W2). */
-  def preprocessNodes(history: DataFrame, extent: Option[(Double, Double, Double, Double)] = None): DataFrame = {
-    val filtered = extent match {
-      case Some((xmin, ymin, xmax, ymax)) =>
-        history.where(col("lat") > ymin && col("lat") < ymax)
-          .where(col("lon") > xmin && col("lon") < xmax)
-      case None => history
-    }
-    if (filtered.columns.contains("validUntil")) filtered
-    else {
-      val w = Window.partitionBy(col("id")).orderBy(col("version"))
-      filtered
-        .where(col("type") === "node")
-        .repartition(col("id"))
-        .withColumn("lat", asDouble(col("lat")))
-        .withColumn("lon", asDouble(col("lon")))
-        .select(
-          col("id"),
-          when(!col("visible") && lag(col("tags"), 1).over(w).isNotNull, lag(col("tags"), 1).over(w))
-            .otherwise(col("tags")).as("tags"),
-          when(!col("visible"), lag(col("lat"), 1).over(w)).otherwise(col("lat")).as("lat"),
-          when(!col("visible"), lag(col("lon"), 1).over(w)).otherwise(col("lon")).as("lon"),
-          col("changeset"), col("timestamp"),
-          lead(col("timestamp"), 1).over(w).as("validUntil"),
-          col("uid"), col("user"), col("version"), col("visible"),
-          (!(lag(col("lat"), 1).over(w) <=> col("lat") &&
-            lag(col("lon"), 1).over(w) <=> col("lon"))).as("geometryChanged"))
-    }
-  }
-
-  def preprocessWays(history: DataFrame): DataFrame = {
-    if (history.columns.contains("validUntil")) history
-    else {
-      val w = Window.partitionBy(col("id")).orderBy(col("version"))
-      history
-        .where(col("type") === "way")
-        .repartition(col("id"))
-        .select(
-          col("id"),
-          when(!col("visible") && lag(col("tags"), 1).over(w).isNotNull, lag(col("tags"), 1).over(w))
-            .otherwise(col("tags")).as("tags"),
-          when(!col("visible"), lag(col("nds.ref"), 1).over(w))
-            .otherwise(col("nds.ref")).as("nds"),
-          col("changeset"), col("timestamp"),
-          lead(col("timestamp"), 1).over(w).as("validUntil"),
-          col("uid"), col("user"), col("version"), col("visible"),
-          (!(lag(col("nds.ref"), 1).over(w) <=> col("nds.ref"))).as("geometryChanged"))
-    }
-  }
-
-  def preprocessRelations(history: DataFrame): DataFrame = {
-    if (history.columns.contains("validUntil")) history
-    else {
-      val w = Window.partitionBy(col("id")).orderBy(col("version"))
-      ensureCompressedMembers(history.where(col("type") === "relation"))
-        .repartition(col("id"))
-        .select(
-          col("id"),
-          when(!col("visible") && lag(col("tags"), 1).over(w).isNotNull, lag(col("tags"), 1).over(w))
-            .otherwise(col("tags")).as("tags"),
-          when(!col("visible"), lag(col("members"), 1).over(w)).otherwise(col("members")).as("members"),
-          col("changeset"), col("timestamp"),
-          lead(col("timestamp"), 1).over(w).as("validUntil"),
-          col("uid"), col("user"), col("version"), col("visible"))
-    }
-  }
-
-  /** Interesting nodes -> Point geometries; one row per (id, changeset): its
-    * last version, updated at its last time. A window over the id-partitioned
-    * nodes, so no shuffle of its own.
-    */
-  def constructPointGeometries(nodes: DataFrame): DataFrame = {
-    vps.geom.Geo.registerUDTs()
-    val byChangeset = Window.partitionBy(col("id"), col("changeset"))
-    preprocessNodes(nodes)
-      .where(size(removeSemiInterestingTags(col("tags"))) > 0)
-      .withColumn("updated", max(col("timestamp")).over(byChangeset))
-      .withColumn("last", max(col("version")).over(byChangeset))
-      .where(col("version") === col("last"))
-      .select(
-        lit(NodeType).as("_type"),
-        col("id"),
-        when(col("lon").isNotNull && col("lat").isNotNull, st_point(col("lon"), col("lat"))).as("geom"),
-        col("tags"), col("changeset"), col("updated"), col("validUntil"),
-        col("visible"), col("version").cast("int").as("version"))
-  }
-
   private def currentTime() = new Timestamp(System.currentTimeMillis())
 
-  /** The output columns after `_type`, as the kernels name them. */
-  private val ElementColumns = Seq("id", "geom", "tags", "changeset", "updated", "validUntil", "visible",
-    "version", "minorVersion").map(col)
-
-  /** (id, since, `refColumn`): each element's distinct `refs` over all its versions
-    * and its first version's time; an aggregate over id-partitioned versions, no shuffle.
+  /** `c` as a cogroup key, named `id`. The two sides of a cogroup must agree on
+    * its nullability, so a key is never null: a null id or ref groups under
+    * `Long.MinValue`, which no element has.
     */
-  private def lifetimeRefs(versions: DataFrame, refs: Column, refColumn: String): DataFrame =
-    versions.groupBy(col("id"))
-      .agg(min(col("timestamp")).as("since"), array_distinct(flatten(collect_list(refs))).as("refs"))
-      .select(col("id"), col("since"), explode(col("refs")).as(refColumn))
+  private def key(c: Column): Column = coalesce(c, lit(Long.MinValue)).as("id")
 
-  /** Way geometries, minor versions and `geometryChanged`; each way sees the
-    * geometry-changing versions of its nodes valid at or after its first version.
-    */
-  def reconstructWayGeometries(_ways: DataFrame, _nodes: DataFrame, now: Timestamp = currentTime()): DataFrame = {
-    val spark = _ways.sparkSession
-    import spark.implicits._
-    vps.geom.Geo.registerUDTs()
-    val ways = preprocessWays(_ways).select(col("id"), col("version"), col("changeset"), col("timestamp"),
-      col("validUntil"), col("tags"), col("nds"), col("visible"),
-      coalesce(isArea(col("tags")), lit(false)).as("isArea"))
-    val nodes = preprocessNodes(_nodes).where(col("geometryChanged")).select(
-      col("id").as("ref"), col("changeset"), col("timestamp"),
-      lead(col("timestamp"), 1).over(Window.partitionBy(col("id")).orderBy(col("version"))).as("validUntil"),
-      coalesce(col("lat"), lit(Double.NaN)).as("lat"), coalesce(col("lon"), lit(Double.NaN)).as("lon"))
-    val wayNodes = lifetimeRefs(ways, col("nds"), "ref").join(nodes, "ref")
-      .where(col("validUntil").isNull || col("validUntil") >= col("since") || col("timestamp") >= col("since"))
-    ways.groupBy(col("id")).as[Long, WayVersion]
-      .cogroup(wayNodes.groupBy(col("id")).as[Long, WayNode])((_, vs, ns) => OsmTimelines.way(vs, ns, now))
-      .select(lit(WayType).as("_type") +: ElementColumns :+ col("geometryChanged"): _*)
+  /** The output columns of a kernel's [[ElementRow]]s, the struct `prefix` (if any) holding them. */
+  private def output(elementType: Byte, prefix: String = ""): Seq[Column] = {
+    def c(name: String) = col(prefix + name).as(name)
+    Seq(lit(elementType).as("_type"), c("id"), st_geomFromWKB(col(prefix + "geom")).as("geom"), c("tags"),
+      c("changeset"), c("updated"), c("validUntil"), c("visible"), c("version"), c("minorVersion"))
   }
 
-  /** Multipolygon and route geometries over [[reconstructWayGeometries]]' rows;
-    * each relation sees its member ways' rows valid at or after its first version.
+  /** The reference's `OSM.toGeometry`: full history -> versioned geometries.
+    *
+    * Each element type's history goes through one keyed kernel pass
+    * ([[OsmTimelines]]). The way refs (node refs per way) and the relation
+    * refs (way members per relation) come straight from the raw versions and
+    * route each node's changes to its ways and each way's rows to its
+    * relations. The node pass and the way pass each feed two consumers behind
+    * one exchange, the second reading it as a reused exchange: the points and
+    * the ways for nodes, the output and the relation routing for ways. The
+    * output side reads that exchange through a typed filter, which reads the
+    * same columns as the other consumer and keeps later filters above it.
     */
-  def reconstructRelationGeometries(_relations: DataFrame, geoms: DataFrame,
-      now: Timestamp = currentTime()): DataFrame = {
-    val spark = _relations.sparkSession
-    import spark.implicits._
-    vps.geom.Geo.registerUDTs()
-    val relations = preprocessRelations(_relations)
-      .select(col("id"), col("version"), col("changeset"), col("timestamp"), col("validUntil"),
-        col("tags"), col("members"), col("visible"),
-        coalesce(isMultiPolygon(col("tags")), lit(false)).as("isMultiPolygon"),
-        coalesce(isRoute(col("tags")), lit(false)).as("isRoute"))
-      .where(col("isMultiPolygon") || col("isRoute"))
-    val wayRefs = transform(filter(col("members"), m => m.getField("type") === WayType), _.getField("ref"))
-    val memberWays = lifetimeRefs(relations, wayRefs, "wayId")
-      .join(geoms.select(col("id").as("wayId"), col("changeset"), col("updated"), col("validUntil"), col("geom"),
-        col("geometryChanged")), "wayId")
-      .where(col("validUntil").isNull || col("validUntil") >= col("since"))
-    relations.groupBy(col("id")).as[Long, RelationVersion]
-      .cogroup(memberWays.groupBy(col("id")).as[Long, MemberWay])((_, vs, ws) => OsmTimelines.relation(vs, ws, now))
-      .select(lit(RelationType).as("_type") +: ElementColumns: _*)
-  }
-
-  /** The reference's `OSM.toGeometry`: full history -> versioned geometries. */
   def toGeometry(input: DataFrame): DataFrame = {
+    val spark = input.sparkSession
+    import spark.implicits._
+    vps.geom.Geo.registerUDTs()
     val now = currentTime()
     val elements = input.withColumn("tags", removeUninterestingTags(col("tags")))
-    val nodes = preprocessNodes(elements)
-    val wayGeoms = reconstructWayGeometries(elements, nodes, now)
-    constructPointGeometries(nodes).withColumn("minorVersion", lit(0))
-      .union(wayGeoms.where(size(col("tags")) > 0).drop("geometryChanged"))
-      .union(reconstructRelationGeometries(elements, wayGeoms, now))
+    def versions(elementType: String, payload: Column*) = elements.where(col("type") === elementType)
+      .select(Seq(key(col("id")), col("version"), col("changeset"), col("timestamp"), col("tags")) ++ payload: _*)
+    val nodes = versions("node", asDouble(col("lat")).as("lat"), asDouble(col("lon")).as("lon"), col("visible"),
+      coalesce(size(removeSemiInterestingTags(col("tags"))) > 0, lit(false)).as("interesting"))
+    val ways = versions("way", col("nds.ref").as("nds"), col("visible"),
+      coalesce(isArea(col("tags")), lit(false)).as("isArea"))
+    // the `type` tag survives removeUninterestingTags, so the relation flags read the input's tags
+    val relations = ensureCompressedMembers(input.where(col("type") === "relation")).select(
+      key(col("id")), col("version"), col("changeset"), col("timestamp"),
+      removeUninterestingTags(col("tags")).as("tags"), col("members"), col("visible"),
+      coalesce(isMultiPolygon(col("tags")), lit(false)).as("isMultiPolygon"),
+      coalesce(isRoute(col("tags")), lit(false)).as("isRoute"))
+
+    val wayRefs = ways.select(explode(col("nds")).as("ref"), col("id").as("way"), col("timestamp").as("since"))
+      .select(key(col("ref")), col("way"), col("since"))
+    // a deleted version takes its members from the version before, so it keeps its refs
+    val relationRefs = relations.where(!col("visible") || col("isMultiPolygon") || col("isRoute")).select(
+      explode(transform(filter(col("members"), m => m.getField("type") === WayType), _.getField("ref"))).as("ref"),
+      col("id").as("relation"), col("timestamp").as("since"))
+      .select(key(col("ref")), col("relation"), col("since"))
+
+    val nodeRows = nodes.groupBy(col("id")).as[Long, NodeVersion]
+      .cogroup(wayRefs.groupBy(col("id")).as[Long, WayRef])((_, vs, ws) => OsmTimelines.node(vs, ws))
+      .repartition(col("id"))
+    val wayRows = ways.groupBy(col("id")).as[Long, WayVersion]
+      .cogroup(nodeRows.groupBy(col("id")).as[Long, NodeRow])((_, vs, ns) =>
+        OsmTimelines.way(vs, ns.flatMap(n => Option(n.change)), now))
+      .repartition(col("id"))
+    val memberWays = wayRows.groupBy(col("id")).as[Long, ElementRow]
+      .cogroup(relationRefs.groupBy(col("id")).as[Long, RelationRef])((_, ws, rs) => OsmTimelines.memberWays(ws, rs))
+    val relationRows = relations.groupBy(col("id")).as[Long, RelationVersion]
+      .cogroup(memberWays.groupBy(col("id")).as[Long, MemberWay])((_, vs, ms) => OsmTimelines.relation(vs, ms, now))
+
+    nodeRows.filter((n: NodeRow) => n.point != null).select(output(NodeType, "point."): _*)
+      .union(wayRows.filter(OsmTimelines.tagged _).select(output(WayType): _*))
+      .union(relationRows.select(output(RelationType): _*))
   }
 
-  /** Time-pin snapshot over the validity interval (reference `OSM.snapshot`). */
-  def snapshot(df: DataFrame, timestamp: Timestamp = null): DataFrame =
-    df.where(
-      col("updated") <= coalesce(lit(timestamp), current_timestamp()) &&
-        coalesce(lit(timestamp), current_timestamp()) <
-          coalesce(col("validUntil"), date_add(current_timestamp(), 1)))
+  /** Time-pin snapshot over the validity interval (reference `OSM.snapshot`):
+    * rows updated at or before `timestamp` and valid after it. An open
+    * validity window ends at the start of tomorrow in the session time zone.
+    *
+    * The as-of time (`timestamp`, or now) and tomorrow are read when the
+    * DataFrame is built, not when an action runs it. Both reach the plan as
+    * one object literal, so the generated code is the same from call to call.
+    */
+  def snapshot(df: DataFrame, timestamp: Timestamp = null): DataFrame = {
+    val zone = ZoneId.of(df.sparkSession.conf.get("spark.sql.session.timeZone"))
+    val tomorrow = LocalDate.now(zone).plusDays(1).atStartOfDay(zone).toInstant
+    val at = SnapshotTime(DateTimeUtils.fromJavaTimestamp(Option(timestamp).getOrElse(currentTime())),
+      DateTimeUtils.instantToMicros(tomorrow))
+    // a null argument makes the kernel's result null, so an open window comes as Long.MaxValue
+    val validUntil = coalesce(unix_micros(col("validUntil")), lit(Long.MaxValue))
+    df.where(ColumnBridge.column(Invoke(Literal(at, ObjectType(classOf[SnapshotTime])), "live", BooleanType,
+      Seq(col("updated"), validUntil).map(ColumnBridge.expression))))
+  }
 
   /** Join user metadata from a changesets table (reference `addUserMetadata`). */
   def addUserMetadata(geoms: DataFrame, changesets: DataFrame): DataFrame =
     geoms.join(changesets.select(col("id").as("changeset"), col("uid"), col("user")), Seq("changeset"))
+}
+
+/** A snapshot's as-of time and the end of open validity windows, in microseconds. */
+final case class SnapshotTime(asOf: Long, openUntil: Long) {
+  /** Whether a row updated at `updated` and valid until `validUntil`
+    * (`Long.MaxValue` if open) is live at `asOf`.
+    */
+  def live(updated: Long, validUntil: Long): Boolean =
+    updated <= asOf && asOf < (if (validUntil == Long.MaxValue) openUntil else validUntil)
 }

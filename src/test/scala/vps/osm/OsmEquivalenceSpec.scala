@@ -1,6 +1,7 @@
 package vps.osm
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import org.locationtech.jts.geom.{Geometry, Lineal, Polygonal}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,8 +37,8 @@ class OsmEquivalenceSpec extends AnyFunSuite {
     else if (a.isInstanceOf[Lineal] && b.isInstanceOf[Lineal]) a.equalsTopo(b)
     else java.util.Arrays.equals(Wkb.write(a), Wkb.write(b))
 
-  private def assertEquivalent(rows: Seq[Row]): Unit = {
-    val history = OsmHistories.frame(spark, rows)
+  private def assertEquivalent(rows: Seq[Row], schema: StructType = OsmHistories.schema): Unit = {
+    val history = OsmHistories.frame(spark, rows, schema)
     val got = Osm.toGeometry(history)
     val want = OsmOracle.toGeometry(history)
     assert(got.schema.map(f => f.name -> f.dataType) === want.schema.map(f => f.name -> f.dataType))
@@ -57,6 +58,14 @@ class OsmEquivalenceSpec extends AnyFunSuite {
 
   test("hand-built edge cases match the oracle") {
     assertEquivalent(OsmHistories.edgeCases)
+  }
+
+  test("deleted-version edge cases match the oracle") {
+    assertEquivalent(OsmHistories.resurrectionCases)
+  }
+
+  test("a history whose columns are all nullable, as a file read gives it, matches the oracle") {
+    assertEquivalent(OsmHistories.edgeCases, StructType(OsmHistories.schema.map(_.copy(nullable = true))))
   }
 
   Seq(1L, 2L, 3L, 4L).foreach { seed =>

@@ -43,17 +43,20 @@ object OsmHistories {
   def deletedNode(id: Long, version: Long, changeset: Long, minute: Int): Row =
     node(id, version, changeset, minute, Double.NaN, Double.NaN, visible = false)
 
+  /** A way version; null `nds` give a null `nds` column. */
   def way(id: Long, version: Long, changeset: Long, minute: Int, nds: Seq[Long],
       tags: Map[String, String], visible: Boolean = true): Row =
-    Row(id, "way", tags, null, null, nds.map(Row(_)), Seq.empty, changeset, at(minute),
+    Row(id, "way", tags, null, null, Option(nds).map(_.map(Row(_))).orNull, Seq.empty, changeset, at(minute),
       changeset % 7, s"u${changeset % 7}", version, visible)
 
+  /** A relation version; null `members` give a null `members` column. */
   def relation(id: Long, version: Long, changeset: Long, minute: Int, members: Seq[(String, Long, String)],
       tags: Map[String, String], visible: Boolean = true): Row =
-    Row(id, "relation", tags, null, null, Seq.empty, members.map { case (t, r, role) => Row(t, r, role) },
+    Row(id, "relation", tags, null, null, Seq.empty,
+      Option(members).map(_.map { case (t, r, role) => Row(t, r, role) }).orNull,
       changeset, at(minute), changeset % 7, s"u${changeset % 7}", version, visible)
 
-  def frame(spark: SparkSession, rows: Seq[Row]): DataFrame =
+  def frame(spark: SparkSession, rows: Seq[Row], schema: StructType = schema): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
 
   /** Hand-built edge cases (times in minutes after `T0`):
@@ -105,6 +108,44 @@ object OsmHistories {
         Map("type" -> "multipolygon;route", "name" -> "both")),
       relation(103, 1, 14, 15, Seq(("way", 15L, ""), ("way", 16L, "")), Map("type" -> "route")),
       relation(103, 2, 80, 600, Seq(("way", 15L, ""), ("way", 16L, "")), Map("type" -> "multipolygon")))
+  }
+
+  /** Hand-built deleted-version cases (times in minutes after `T0`). A
+    * deleted version takes the geometry of the raw version before it, so two
+    * deletions in a row leave the second without one:
+    * - node 201, a cafe, deleted at 10 and again at 20, undeleted and moved at 30;
+    * - node 202: its first version is deleted yet tagged, undeleted at 5;
+    * - node 203, a cafe, moved at 40 and renamed at 41 in one changeset;
+    * - way 220 (nodes 210-212): deleted with null `nds` at 50 and again at
+    *   60, undeleted at 70; node 211 moves at 55, inside the first deletion;
+    * - way 221, a building whose first version is deleted with null `nds`;
+    * - relation 230, a route over way 220, loses its members at 80 (null)
+    *   and 90 (empty), then is deleted at 95;
+    * - relation 231, a multipolygon over way 221 whose first version is deleted.
+    */
+  lazy val resurrectionCases: Seq[Row] = {
+    val cafe = Map("amenity" -> "cafe")
+    val road = Map("highway" -> "service")
+    val building = Seq(213L -> (11.6, 48.7), 214L -> (11.601, 48.7), 215L -> (11.601, 48.701))
+    Seq(
+      node(201, 1, 201, 0, 11.5, 48.5, cafe), deletedNode(201, 2, 202, 10), deletedNode(201, 3, 203, 20),
+      node(201, 4, 204, 30, 11.501, 48.5, cafe),
+      node(202, 1, 205, 0, Double.NaN, Double.NaN, cafe, visible = false), node(202, 2, 206, 5, 11.52, 48.5, cafe),
+      node(203, 1, 207, 0, 11.53, 48.5, cafe), node(203, 2, 208, 40, 11.531, 48.5, cafe),
+      node(203, 3, 208, 41, 11.531, 48.5, cafe + ("name" -> "Zum Eck")),
+      node(210, 1, 209, 1, 11.55, 48.6), node(211, 1, 209, 1, 11.56, 48.6), node(212, 1, 209, 1, 11.57, 48.6),
+      node(211, 2, 210, 55, 11.56, 48.601)) ++
+      building.map { case (id, (x, y)) => node(id, 1, 211, 1, x, y) } ++ Seq(
+      way(220, 1, 212, 2, Seq(210, 211, 212), road), way(220, 2, 213, 50, null, Map.empty, visible = false),
+      way(220, 3, 214, 60, null, Map.empty, visible = false), way(220, 4, 215, 70, Seq(210, 211, 212), road),
+      way(221, 1, 216, 2, null, Map.empty, visible = false),
+      way(221, 2, 217, 3, Seq(213, 214, 215, 213), Map("building" -> "yes")),
+      relation(230, 1, 218, 4, Seq(("way", 220L, "")), Map("type" -> "route", "route" -> "bus")),
+      relation(230, 2, 219, 80, null, Map("type" -> "route", "route" -> "bus")),
+      relation(230, 3, 220, 90, Nil, Map("type" -> "route", "route" -> "bus")),
+      relation(230, 4, 221, 95, Nil, Map.empty, visible = false),
+      relation(231, 1, 222, 4, Nil, Map.empty, visible = false),
+      relation(231, 2, 223, 6, Seq(("way", 221L, "outer")), Map("type" -> "multipolygon", "building" -> "yes")))
   }
 
   /** A seeded history: square buildings, roads, multipolygons (an outer

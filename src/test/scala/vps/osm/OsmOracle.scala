@@ -2,14 +2,14 @@ package vps.osm
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
 
 import vps.kernels.{RelationAssembly, WayAssembly}
 import vps.kernels.OsmTimelines.MultiPolygonRoles
-import vps.osm.Osm.{NodeType, RelationType, WayType, preprocessNodes, preprocessRelations, preprocessWays}
+import vps.osm.Osm.{NodeType, RelationType, WayType, ensureCompressedMembers}
 import vps.sql.TagFunctions._
 import vps.sql.functions.st_point
 
@@ -18,9 +18,71 @@ import vps.sql.functions.st_point
   * pass per element type. Same rows, different plan: temporal as-of joins,
   * a groupByKey way assembly, window minor versions, and separate
   * multipolygon and route branches. `current_timestamp()` bounds open
-  * validity windows.
+  * validity windows. Its `preprocess*` are the window-based resurrection and
+  * validity that the `OsmTimelines` kernels now do per element.
   */
 object OsmOracle {
+  private def asDouble(c: Column) =
+    when(c.isNotNull, c.cast("double")).otherwise(lit(Double.NaN))
+
+  /** Resurrect deleted-version state + validity interval for nodes (W1/W2). */
+  def preprocessNodes(history: DataFrame): DataFrame =
+    if (history.columns.contains("validUntil")) history
+    else {
+      val w = Window.partitionBy(col("id")).orderBy(col("version"))
+      history
+        .where(col("type") === "node")
+        .repartition(col("id"))
+        .withColumn("lat", asDouble(col("lat")))
+        .withColumn("lon", asDouble(col("lon")))
+        .select(
+          col("id"),
+          when(!col("visible") && lag(col("tags"), 1).over(w).isNotNull, lag(col("tags"), 1).over(w))
+            .otherwise(col("tags")).as("tags"),
+          when(!col("visible"), lag(col("lat"), 1).over(w)).otherwise(col("lat")).as("lat"),
+          when(!col("visible"), lag(col("lon"), 1).over(w)).otherwise(col("lon")).as("lon"),
+          col("changeset"), col("timestamp"),
+          lead(col("timestamp"), 1).over(w).as("validUntil"),
+          col("uid"), col("user"), col("version"), col("visible"),
+          (!(lag(col("lat"), 1).over(w) <=> col("lat") &&
+            lag(col("lon"), 1).over(w) <=> col("lon"))).as("geometryChanged"))
+    }
+
+  def preprocessWays(history: DataFrame): DataFrame =
+    if (history.columns.contains("validUntil")) history
+    else {
+      val w = Window.partitionBy(col("id")).orderBy(col("version"))
+      history
+        .where(col("type") === "way")
+        .repartition(col("id"))
+        .select(
+          col("id"),
+          when(!col("visible") && lag(col("tags"), 1).over(w).isNotNull, lag(col("tags"), 1).over(w))
+            .otherwise(col("tags")).as("tags"),
+          when(!col("visible"), lag(col("nds.ref"), 1).over(w))
+            .otherwise(col("nds.ref")).as("nds"),
+          col("changeset"), col("timestamp"),
+          lead(col("timestamp"), 1).over(w).as("validUntil"),
+          col("uid"), col("user"), col("version"), col("visible"),
+          (!(lag(col("nds.ref"), 1).over(w) <=> col("nds.ref"))).as("geometryChanged"))
+    }
+
+  def preprocessRelations(history: DataFrame): DataFrame =
+    if (history.columns.contains("validUntil")) history
+    else {
+      val w = Window.partitionBy(col("id")).orderBy(col("version"))
+      ensureCompressedMembers(history.where(col("type") === "relation"))
+        .repartition(col("id"))
+        .select(
+          col("id"),
+          when(!col("visible") && lag(col("tags"), 1).over(w).isNotNull, lag(col("tags"), 1).over(w))
+            .otherwise(col("tags")).as("tags"),
+          when(!col("visible"), lag(col("members"), 1).over(w)).otherwise(col("members")).as("members"),
+          col("changeset"), col("timestamp"),
+          lead(col("timestamp"), 1).over(w).as("validUntil"),
+          col("uid"), col("user"), col("version"), col("visible"))
+    }
+
   /** Interesting nodes -> Point geometries; one row per (id, changeset). */
   def constructPointGeometries(nodes: DataFrame): DataFrame = {
     vps.geom.Geo.registerUDTs()

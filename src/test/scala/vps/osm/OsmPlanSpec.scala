@@ -4,24 +4,47 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import vps.SparkTestSession
 
-/** Plan gate for `Osm.toGeometry`: one routing join and one keyed pass per
-  * element type keep the exchange count low, and no call-time literal
-  * changes the generated code from one call to the next.
+/** Plan gate for `Osm.toGeometry`: one keyed kernel pass per history, each
+  * kernel's output shuffled once for both its consumers, and no call-time
+  * literal that changes the generated code from one call to the next.
   */
 class OsmPlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private lazy val history = OsmHistories.frame(spark, OsmHistories.edgeCases)
 
-  test("toGeometry's executed plan has at most 16 exchanges") {
-    val n = OsmPlans.exchanges(Osm.toGeometry(history))
-    assert(n <= 16, s"$n exchanges")
+  test("toGeometry's executed plan has at most 10 exchanges") {
+    val df = Osm.toGeometry(history)
+    val n = OsmPlans.exchanges(df)
+    assert(n <= 10, s"$n exchanges")
+    assert(OsmPlans.shuffles(df) <= 8)
     // the DataFrame program it replaced needed more than twice as many
     assert(OsmPlans.exchanges(OsmOracle.toGeometry(history)) > 2 * n)
   }
 
+  test("toGeometry runs each kernel once, with no window or object aggregate") {
+    val df = Osm.toGeometry(history)
+    assert(OsmPlans.wayKernels(df) === 1)
+    assert(OsmPlans.windows(df) === 0)
+    assert(OsmPlans.objectHashAggregates(df) === 0)
+    assert(OsmPlans.codegenStages(df) <= 20)
+    // the window-based oracle is what the counters see when they are not zero
+    assert(OsmPlans.windows(OsmOracle.toGeometry(history)) > 0)
+  }
+
   test("toGeometry's optimized plan holds no current_timestamp literal") {
     assert(OsmPlans.timestampLiterals(Osm.toGeometry(history)).isEmpty)
+    // the snapshot's as-of time reaches the plan as an object, not a literal
+    val snapshot = Osm.snapshot(Osm.toGeometry(history))
+    assert(OsmPlans.timestampLiterals(snapshot).isEmpty)
+    assert(OsmPlans.timestampLiterals(Osm.snapshot(Osm.toGeometry(history), OsmHistories.at(100))).isEmpty)
     // the gate sees the literal the optimizer puts in for current_timestamp()
     assert(OsmPlans.timestampLiterals(OsmOracle.toGeometry(history)).nonEmpty)
+  }
+
+  test("a second snapshot(toGeometry) call compiles no class") {
+    def run(): Unit = Osm.snapshot(Osm.toGeometry(history)).write.format("noop").mode("overwrite").save()
+    run()
+    Thread.sleep(5) // a later call reads a later "now"
+    assert(OsmPlans.compiles(run()) === 0)
   }
 }
