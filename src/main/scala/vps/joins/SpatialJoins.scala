@@ -155,7 +155,7 @@ object SpatialJoins {
     // Id-uniqueness contract: polyIdCol should bind each id to ONE geometry
     // row; a violation (multipart regions as several rows per id) is caught
     // by the keyed cache's per-hit full WKB comparison (`Arrays.equals`) and
-    // re-prepared — correct results, degraded caching (see StIntersectsKeyed).
+    // re-prepared — correct results, degraded caching (see vps.sql.KeyedProbe).
     val keyed = polygons.schema(polyIdCol).dataType match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true

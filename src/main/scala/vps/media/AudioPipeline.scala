@@ -114,30 +114,43 @@ object AudioPipeline {
     }(Encoders.row(outSchema))
   }
 
-  /** The JDK's `AudioFileReader` providers, resolved ONCE per JVM.
-    * `AudioSystem.getAudioInputStream` re-runs the provider lookup on every
-    * call through a synchronized JDK-internal service registry — at 32
+  /** The `AudioFileReader` providers of the current thread's context
+    * classloader (the JDK loader when there is none), resolved once per
+    * loader. `AudioSystem.getAudioInputStream` re-runs the provider lookup on
+    * every call through a synchronized JDK-internal service registry — at 32
     * decode threads that lock serializes the whole stage (measured: stage
     * wall 17 s vs 0.8 s of actual CPU at bench SF). Iterating the same
     * provider list directly is AudioSystem's own algorithm (first reader
     * that accepts the stream wins; all-fail == UnsupportedAudioFileException)
     * with the lookup hoisted.
+    *
+    * Keyed by loader, like AudioSystem's own lookup: on an executor the
+    * context loader is the Spark user-jar loader, so SPI readers shipped via
+    * --jars keep working, and a thread with another loader gets that loader's
+    * readers, not the first caller's. Keys are weak, so a discarded loader is
+    * not pinned by its entry unless readers it loaded hold it.
+    *
+    * WAVE readers come first and MIDI-backed ones last. That order assumes
+    * the JDK's built-in readers, each of which accepts a disjoint container
+    * format, so probe ORDER never changes which bytes decode — but the JDK's
+    * SoftMidiAudioFileReader re-enters the synchronized MIDI provider
+    * registry on EVERY probe (thread-dump sampled: 556/583 decode threads
+    * BLOCKED in MidiSystem.getMidiFileReaders), so it must not sit in front
+    * of the hot WAV path.
     */
-  private lazy val audioReaders: List[javax.sound.sampled.spi.AudioFileReader] = {
-    import scala.jdk.CollectionConverters._
-    // thread-context classloader first (what AudioSystem's own lookup uses —
-    // on an executor it is the Spark user-jar loader, so SPI readers shipped
-    // via --jars keep working), JDK loader as fallback
+  private[media] def audioReaders: List[javax.sound.sampled.spi.AudioFileReader] = {
     val cl = Option(Thread.currentThread().getContextClassLoader)
       .getOrElse(classOf[javax.sound.sampled.AudioSystem].getClassLoader)
+    readersByLoader.computeIfAbsent(cl, loadReaders)
+  }
+
+  private val readersByLoader = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[ClassLoader, List[javax.sound.sampled.spi.AudioFileReader]]())
+
+  private def loadReaders(cl: ClassLoader): List[javax.sound.sampled.spi.AudioFileReader] = {
+    import scala.jdk.CollectionConverters._
     val all = java.util.ServiceLoader.load(classOf[javax.sound.sampled.spi.AudioFileReader], cl)
       .asScala.toList
-    // WAVE readers first, MIDI-backed last: each reader accepts a disjoint
-    // container format, so probe ORDER never changes which bytes decode —
-    // but the JDK's SoftMidiAudioFileReader re-enters the synchronized MIDI
-    // provider registry on EVERY probe (thread-dump sampled: 556/583 decode
-    // threads BLOCKED in MidiSystem.getMidiFileReaders), so it must not sit
-    // in front of the hot WAV path.
     val (midi, rest) = all.partition(_.getClass.getName.toLowerCase.contains("midi"))
     val (wave, other) = rest.partition(_.getClass.getName.toLowerCase.contains("wave"))
     wave ++ other ++ midi
@@ -155,7 +168,7 @@ object AudioPipeline {
       "Stream of unsupported format")
   }
 
-  private def decodeOne(bytes: Array[Byte]): Option[(Int, Int, Int, Long, Int, Double)] =
+  private[media] def decodeOne(bytes: Array[Byte]): Option[(Int, Int, Int, Long, Int, Double)] =
     try {
       val in = audioStreamFor(bytes)
       try {

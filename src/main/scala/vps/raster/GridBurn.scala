@@ -203,32 +203,3 @@ case class GridCellSum(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(cell = newChildren(0), weight = newChildren(1))
 }
-
-/** `point-wkb -> packed (tile x | tile y | cell)` long at (zoom, resolution)
-  * — the codegen'd map-side projection of [[Raster.rasterizePoints]].
-  * Delegates to [[Raster.pointKey]], which shares the burn paths' arithmetic
-  * bit-for-bit and throws on non-point geometry (the lean shuffle row
-  * cannot represent a multi-cell burn).
-  */
-case class GridPointKey(
-    wkb: Expression,
-    zoom: Int,
-    resolution: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def child: Expression = wkb
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def nullSafeEval(b: Any): Any =
-    Raster.pointKey(b.asInstanceOf[Array[Byte]], zoom, resolution)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, b =>
-      s"vps.raster.Raster.pointKey($b, $zoom, $resolution)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(wkb = c)
-}

@@ -1,7 +1,10 @@
 package vps.raster
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.locationtech.jts.geom.Geometry
 
 import vps.geom.{Geo, TileMath, Wkb}
@@ -308,9 +311,12 @@ object Raster {
     * Throws on non-point geometry: a packed key cannot represent a
     * multi-cell burn, so silently burning a polygon's first vertex would
     * corrupt results — [[rasterize]] is the any-geometry path.
-    * Public + static-forwarded: called from generated code.
+    * Public + static-forwarded: called from generated code, which passes the
+    * geometry UDT's WKB bytes as `AnyRef` (the class Catalyst looks a UDT
+    * argument up as).
     */
-  def pointKey(bytes: Array[Byte], zoom: Int, resolution: Int): Long = {
+  def pointKey(geom: AnyRef, zoom: Int, resolution: Int): Long = {
+    val bytes = geom.asInstanceOf[Array[Byte]]
     var px = 0.0
     var py = 0.0
     if (bytes.length == 21) {
@@ -381,11 +387,12 @@ object Raster {
     // pure bit arithmetic — no tile_keys array, no explode, no WKB in the
     // shuffle row. The interpreted tile_keys+explode pipeline was measured
     // NOT thread-scaling (its per-row allocations saturate the shared memory
-    // subsystem before the cores do). The geometry UDT feeds GridPointKey
-    // directly (its sqlType is binary), so no st_asWKB call is needed.
+    // subsystem before the cores do). The geometry UDT feeds the StaticInvoke
+    // of pointKey directly (its sqlType is binary), so no st_asWKB call is needed.
+    val pointKey = StaticInvoke(Raster.getClass, LongType, "pointKey",
+      Seq(ex(col("geom")), Literal(zoom), Literal(resolution)), returnNullable = false)
     val keyed = weighted
-      .select(cb(GridPointKey(ex(col("geom")), zoom, resolution)).as("pk"),
-        col("_w"))
+      .select(cb(pointKey).as("pk"), col("_w"))
       .select(shiftright(col("pk"), 44).cast("int").as("x"),
         shiftright(col("pk"), 24).bitwiseAND(0xFFFFFL).cast("int").as("y"),
         col("pk").bitwiseAND(0xFFFFFFL).cast("int").as("cell"),

@@ -4,10 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vps.{ColumnBridge, Constructor, Kernel, SqlFunction}
+import org.apache.spark.sql.vps.{ColumnBridge, Constructor, Kernel, SqlFunction, StateKernel}
 
 import vps.geom.{CellId, GeometryUDT, TileMath}
-import vps.text.{ArrayPairs, CollectCapped, TextOps}
+import vps.kernels.Clip
+import vps.text.{BucketFilter, CollectCapped, ElementPairs, TextOps}
 
 /** The engine's SQL surface, declared once. [[VpsExtensions]] injects and
   * [[functions.register]] registers exactly these rows, and the Column APIs
@@ -16,21 +17,27 @@ import vps.text.{ArrayPairs, CollectCapped, TextOps}
   *
   * A stateless function is a [[Kernel]] row: a static method on a Scala
   * object over Catalyst's internal values, its argument types (the analyzer
-  * casts to them) and its result type. A [[Constructor]] row keeps an
-  * expression class of its own, for a function that holds per-task state or
-  * a parsed constant, takes its result type from its input, or aggregates.
+  * casts to them) and its result type. A function with per-call state is a
+  * [[StateKernel]] row: a method of a small serializable state class (an
+  * error channel, a clip timeout, a parsed CRS pair, a prepared-geometry
+  * cache, a reusable probe point), whose instance the row builds from the
+  * analyzed arguments (a Column API may pass its own), and a result type that
+  * may follow the argument types. Both run inside whole-stage codegen. A
+  * [[Constructor]] row is an aggregate.
   */
 object FunctionTable {
   private val Geom = GeometryUDT.Instance
   private val Longs = ArrayType(LongType, containsNull = false)
   private val Floats = ArrayType(FloatType)
   private val TileKeys = ArrayType(GeomOps.TileKeyType, containsNull = false)
+  /** An argument of any array type (no cast). */
+  private val AnyArray = ArrayType(NullType)
   private val G = GeomOps.getClass
   private val T = TextOps.getClass
 
   val rows: Seq[SqlFunction] = Seq(
     Kernel("st_point", G, "point", Seq(DoubleType, DoubleType), Geom),
-    Constructor("st_geomfromwkt", 1, e => StGeomFromWkt(e(0))),
+    StateKernel("st_geomfromwkt", "read", Seq(StringType), _ => Geom, _ => WktReader(None), nullable = true),
     Kernel("st_geomfromwkb", G, "bytes", Seq(Geom), Geom),
     Kernel("st_aswkb", G, "bytes", Seq(Geom), BinaryType),
     Kernel("st_astext", G, "asText", Seq(Geom), StringType),
@@ -56,12 +63,13 @@ object FunctionTable {
     Kernel("st_distance", G, "distance", Seq(Geom, Geom), DoubleType),
     Kernel("st_towebmercator", G, "toWebMercator", Seq(Geom), Geom),
     Kernel("st_tolonlat", G, "toLonLat", Seq(Geom), Geom),
-    Constructor("st_reproject", 3, e => StReproject(e(0), e(1), e(2))),
+    StateKernel("st_reproject", "reproject", Seq(Geom, StringType, StringType), _ => Geom, Reprojection.of),
     Kernel("st_simplify", G, "simplify", Seq(Geom, DoubleType, BooleanType), Geom),
-    Constructor("st_cliptotile", 4, e => StClipToTile(e(0), e(1), e(2), e(3))),
-    Constructor("st_contains", 2, e => StContains(e(0), e(1))),
-    Constructor("st_intersects", 2, e => StIntersects(e(0), e(1))),
-    Constructor("st_within", 2, e => StWithin(e(0), e(1))),
+    StateKernel("st_cliptotile", "clip", Seq(Geom, IntegerType, IntegerType, IntegerType), _ => Geom,
+      _ => TileClip(Clip.DefaultTimeout.toMillis, None)),
+    StateKernel("st_contains", "contains", Seq(Geom, Geom), _ => BooleanType, _ => PointProbe()),
+    StateKernel("st_intersects", "intersects", Seq(Geom, Geom), _ => BooleanType, _ => PointProbe()),
+    StateKernel("st_within", "within", Seq(Geom, Geom), _ => BooleanType, _ => PointProbe()),
     Constructor("st_union_agg", 1, e => StUnionAgg(e(0)).toAggregateExpression()),
     Kernel("tile_x", TileMath.getClass, "tileX", Seq(DoubleType, IntegerType), IntegerType),
     Kernel("tile_y", TileMath.getClass, "tileY", Seq(DoubleType, IntegerType), IntegerType),
@@ -90,15 +98,35 @@ object FunctionTable {
     Kernel("hyperplane_bands", T, "hyperplaneBands", Seq(Floats, IntegerType, IntegerType), Longs),
     Kernel("cosine_sim", T, "cosineSim", Seq(Floats, Floats), DoubleType),
     Kernel("hash_uniform", T, "hashUniform", Seq(LongType, LongType), DoubleType),
-    Constructor("array_pairs", 1, e => ArrayPairs(e(0))),
+    StateKernel("array_pairs", "pairs", Seq(AnyArray), ElementPairs.resultType, ElementPairs.of),
     // bounded collect_list; the cap must be a foldable integer literal
     Constructor("collect_capped", 2, e => CollectCapped(e(0), literalCap(e(1))).toAggregateExpression()))
 
-  private val byName: Map[String, SqlFunction] = rows.map(f => f.name -> f).toMap
+  /** Rows of the Column APIs that SQL does not expose: their callers pass a
+    * key contract (`st_intersects_keyed`) or their own state instance
+    * (`tile_fragments`' clip timeout and channel, `not_dropped`'s channel and
+    * minimum size).
+    */
+  private[sql] val columnRows: Seq[SqlFunction] = Seq(
+    StateKernel("st_intersects_keyed", "intersects", Seq(LongType, Geom, Geom), _ => BooleanType,
+      _ => KeyedProbe()),
+    StateKernel("tile_fragments", "fragments",
+      Seq(Geom, IntegerType, IntegerType, IntegerType, IntegerType, BooleanType), _ => TileClip.FragmentType,
+      _ => TileClip(Clip.DefaultTimeout.toMillis, None)),
+    StateKernel("not_dropped", "keep", Seq(AnyArray), _ => BooleanType, _ => BucketFilter(None, 2),
+      nullArgs = true))
+
+  private val byName: Map[String, SqlFunction] = (rows ++ columnRows).map(f => f.name -> f).toMap
 
   /** The row `name` applied to Column arguments (the Column APIs' builder). */
   private[vps] def call(name: String, args: Column*): Column =
     ColumnBridge.column(byName(name)(args.map(ColumnBridge.expression)))
+
+  /** The [[StateKernel]] row `name` applied to Column arguments with the
+    * Column API's own state instance.
+    */
+  private[vps] def callWith(name: String, state: AnyRef)(args: Column*): Column =
+    ColumnBridge.column(byName(name).asInstanceOf[StateKernel](args.map(ColumnBridge.expression), state))
 
   // checked BEFORE eval: a column-reference cap would otherwise die inside
   // eval(InternalRow.empty) with an unhelpful unresolved/NPE-style error

@@ -3,13 +3,13 @@ package vps.sql
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, CoordinateFilter, Geometry}
+import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 
-import vps.geom.{CellId, Geo, GeometryUDT, TileMath, Wkb, Wkt}
+import vps.geom.{CellId, Geo, GeometryUDT, Proj, TileMath, Wkb, Wkt}
 import vps.kernels.{Clip, Simplify}
 
 /** Static kernels of the geometry/tiling SQL functions (SURVEY.md §2.8
@@ -158,61 +158,6 @@ object GeomOps {
     val keys = TileMath.keysForGeometry(geom(b), level)
     new GenericArrayData(keys.map { case (x, y) => CellId.pack(level, x.toLong, y.toLong) }.toArray)
   }
-}
-
-/** WKT parse; malformed input yields null (row kept) and, when an error
-  * channel is attached, increments its accumulator — the reference's
-  * RobustFeature/ErrorHandler tolerance surface: no silent drops, a global
-  * malformed count with no extra job.
-  */
-case class StGeomFromWkt(child: Expression, errors: Option[vps.geom.ErrorChannel] = None)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = GeometryUDT.Instance
-  override def nullable: Boolean = true // malformed input is null even when the child never is
-  override def nullSafeEval(s: Any): Any =
-    try Wkb.write(Wkt.read(s.asInstanceOf[UTF8String].toString))
-    catch { case _: Exception => errors.foreach(_.increment()); null }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** General closed-form reprojection between EPSG:4326 / EPSG:3857 / UTM
-  * (EPSG:326xx/327xx) / Lambert conformal conic national grids
-  * (EPSG:2154/3034/3978) — the reference's `st_reprojectGeom` surface
-  * (`vectortile/package.scala:28-39`) without a native proj dependency.
-  * Foldable CRS codes parse once at first eval; column CRS args parse per row.
-  */
-case class StReproject(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
-  import vps.geom.Proj
-  override def dataType: DataType = GeometryUDT.Instance
-  /** Parsed once when both CRS args are foldable; a bound (per-row) CRS column
-    * makes the empty-row eval throw — fall through to the per-row parse in
-    * nullSafeEval instead of failing lazy-val init.
-    */
-  @transient private lazy val crsPair: Option[(Proj.Crs, Proj.Crs)] =
-    try {
-      for {
-        f <- Option(second.eval(InternalRow.empty))
-        t <- Option(third.eval(InternalRow.empty))
-      } yield (Proj.parse(f.toString), Proj.parse(t.toString))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  override def nullSafeEval(b: Any, fromC: Any, toC: Any): Any = {
-    val (from, to) = crsPair.getOrElse(
-      (Proj.parse(fromC.asInstanceOf[UTF8String].toString),
-        Proj.parse(toC.asInstanceOf[UTF8String].toString)))
-    if (from == to) return b
-    val g = Wkb.read(b.asInstanceOf[Array[Byte]]).copy()
-    g.apply(new org.locationtech.jts.geom.CoordinateFilter {
-      override def filter(c: org.locationtech.jts.geom.Coordinate): Unit = {
-        val (x, y) = Proj.transform(c.x, c.y, from, to)
-        c.x = x; c.y = y
-      }
-    })
-    g.geometryChanged()
-    Wkb.write(g)
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(f, s, t)
 }
 
 /** Aggregate union — DISSOLVE: `groupBy(key).agg(st_union_agg(geom))`, the
@@ -423,178 +368,168 @@ object StUnionAgg {
   * + fresh topology check into a PreparedGeometry hit.
   */
 object GeomCache {
-  private final class Entry(val wkb: Array[Byte], val prepared: org.locationtech.jts.geom.prep.PreparedGeometry)
-  private val cache = ThreadLocal.withInitial[java.util.LinkedHashMap[Integer, Entry]](() =>
-    new java.util.LinkedHashMap[Integer, Entry](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Integer, Entry]): Boolean = size() > 48
-    })
-  def prepared(wkb: Array[Byte]): org.locationtech.jts.geom.prep.PreparedGeometry = {
-    val key = Integer.valueOf(java.util.Arrays.hashCode(wkb))
-    val m = cache.get()
-    val hit = m.get(key)
-    if (hit != null && java.util.Arrays.equals(hit.wkb, wkb)) hit.prepared
-    else {
-      val pg = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(Wkb.read(wkb))
-      m.put(key, new Entry(wkb, pg))
-      pg
-    }
-  }
-}
-
-abstract class GeomBinaryPredicate extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  protected def test(a: org.locationtech.jts.geom.prep.PreparedGeometry, b: Geometry): Boolean
-  // instance state = per-task after deserialization, so single-threaded;
-  // point probes mutate this instead of allocating a parse per row
-  @transient private lazy val probePoint = vps.geom.Geo.point(0, 0)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    test(GeomCache.prepared(a.asInstanceOf[Array[Byte]]),
-      Wkb.readProbe(b.asInstanceOf[Array[Byte]], probePoint))
-}
-
-case class StContains(left: Expression, right: Expression) extends GeomBinaryPredicate {
-  override protected def test(a: org.locationtech.jts.geom.prep.PreparedGeometry, b: Geometry): Boolean = a.contains(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-case class StIntersects(left: Expression, right: Expression) extends GeomBinaryPredicate {
-  override protected def test(a: org.locationtech.jts.geom.prep.PreparedGeometry, b: Geometry): Boolean = a.intersects(b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** `st_intersects` with a caller-supplied UNIQUE key for the prepared (left)
-  * geometry: the prepared-geometry cache is keyed by the long id instead of
-  * by WKB content, making the per-pair cache probe O(1) instead of O(polygon
-  * bytes) ([[GeomCache]] hashes + equality-checks the full WKB each
-  * evaluation — two passes over a 10k-vertex polygon per candidate pair).
-  *
-  * Safety: the cache is INSTANCE state, not a JVM-wide map — every Spark task
-  * deserializes its own expression tree, so entries can never leak between
-  * tasks, queries, or sessions even when two queries reuse the same id for
-  * different geometries. The caller's contract is that the key identifies one
-  * geometry WITHIN the query (e.g. the join's `poly_id`); as a guard against
-  * violations (multipart regions stored as several rows under one id), every
-  * hit is verified against the row's full WKB bytes (`Arrays.equals` — still
-  * far cheaper than re-prepare) and silently re-prepared on mismatch —
-  * wrong-id rows then cost cache churn, never wrong join results.
-  */
-case class StIntersectsKeyed(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  import StIntersectsKeyed.Entry
-  @transient private lazy val cache =
-    new java.util.LinkedHashMap[java.lang.Long, Entry](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[java.lang.Long, Entry]): Boolean =
-        size() > 256
-    }
-  override def nullSafeEval(k: Any, g: Any, p: Any): Any = {
-    val key = java.lang.Long.valueOf(k.asInstanceOf[Long])
-    val wkb = g.asInstanceOf[Array[Byte]]
-    var e = cache.get(key)
-    if (e == null || !e.matches(wkb)) {
-      e = new Entry(wkb,
-        org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(Wkb.read(wkb)))
-      cache.put(key, e)
-    }
-    e.prepared.intersects(Wkb.readProbe(p.asInstanceOf[Array[Byte]], probePoint))
-  }
-  // point probes reuse one instance-scoped mutable Point (per-task state,
-  // single-threaded; JTS predicates don't retain the probe) — the refine
-  // runs once per candidate pair and the parse allocations dominated it
-  @transient private lazy val probePoint = vps.geom.Geo.point(0, 0)
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(f, s, t)
-}
-object StIntersectsKeyed {
-  /** Cached prepared geometry + the exact WKB it was prepared from. Hits are
+  /** A prepared geometry and the exact WKB it was prepared from. Hits are
     * verified with full `Arrays.equals` — O(len), but still far cheaper than
     * the WKB parse + prepare it saves, and immune to the head/tail-collision
     * trap (gridded multipart regions under one id share length, a
     * near-constant 8-byte header and a closing-vertex y — a weaker
     * discriminator silently reused stale geometry for those).
     */
-  private[sql] final class Entry(
-      val wkb: Array[Byte], val prepared: org.locationtech.jts.geom.prep.PreparedGeometry) {
+  final class Entry(val wkb: Array[Byte]) {
+    val prepared: PreparedGeometry = PreparedGeometryFactory.prepare(Wkb.read(wkb))
     def matches(other: Array[Byte]): Boolean = java.util.Arrays.equals(other, wkb)
   }
-}
-/** st_within(a, b) = "a within b" (PostGIS argument order). The container is
-  * the RIGHT operand, so that side is prepared/cached.
-  */
-case class StWithin(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  @transient private lazy val probePoint = vps.geom.Geo.point(0, 0)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    GeomCache.prepared(b.asInstanceOf[Array[Byte]])
-      .contains(Wkb.readProbe(a.asInstanceOf[Array[Byte]], probePoint))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-/** Dimension-preserving clip of a lon/lat geometry to tile (z, x, y). An
-  * attached error channel counts intersection timeouts/failures (where the
-  * original geometry passes through, reference `Clipping.scala` semantics).
-  */
-case class StClipToTile(first: Expression, second: Expression, third: Expression, fourth: Expression,
-    errors: Option[vps.geom.ErrorChannel] = None)
-    extends QuaternaryExpression with CodegenFallback with org.apache.spark.sql.vps.VpsImplicitCasts {
-  override protected def coerceTo: Seq[DataType] =
-    Seq(GeometryUDT.Instance, IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = GeometryUDT.Instance
-  override def nullSafeEval(b: Any, z: Any, x: Any, y: Any): Any = {
-    val env = TileMath.tileEnvelopeLatLng(z.asInstanceOf[Int], x.asInstanceOf[Int], y.asInstanceOf[Int])
-    Wkb.write(Clip(Wkb.read(b.asInstanceOf[Array[Byte]]), env,
-      onFailure = () => errors.foreach(_.increment())))
+  private val cache = ThreadLocal.withInitial[java.util.LinkedHashMap[Integer, Entry]](() =>
+    new java.util.LinkedHashMap[Integer, Entry](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Integer, Entry]): Boolean = size() > 48
+    })
+  def prepared(wkb: Array[Byte]): PreparedGeometry = {
+    val key = Integer.valueOf(java.util.Arrays.hashCode(wkb))
+    val m = cache.get()
+    var e = m.get(key)
+    if (e == null || !e.matches(wkb)) { e = new Entry(wkb); m.put(key, e) }
+    e.prepared
   }
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Expression =
-    copy(first = f, second = s, third = t, fourth = q)
 }
 
-object TileFragments {
-  val elementType: StructType = StructType(Seq(
-    StructField("geomType", IntegerType, nullable = false),
-    StructField("area", DoubleType, nullable = false),
-    StructField("payload", BinaryType, nullable = false)))
-}
+// State instances of the FunctionTable's StateKernel rows. Each reaches the
+// plan as an object literal, so every task works on its own deserialized copy:
+// `@transient lazy val` state is per task and single-threaded.
 
-/** Fused clip → tile-local transform → MVT command-int encode, emitting 0 or 1
-  * pre-encoded fragments (empty array = clip produced nothing). Children:
-  * (geom, zoom, x, y, extent, withArea).
-  *
-  * Returning an ARRAY consumed by `explode` is deliberate: a scalar
-  * fragment + `WHERE isNotNull(...)` would let predicate pushdown substitute
-  * the alias and evaluate the (expensive) clip twice per row; a generator
-  * evaluates once. Encoding before the tile exchange means the shuffle carries
-  * command-int payloads (a point is ~4-8 bytes vs 21-byte WKB) and the
-  * post-shuffle phases never touch geometry again.
+/** st_geomFromWKT: malformed input yields null (row kept) and, when an error
+  * channel is attached, one tick on its accumulator — the reference's
+  * RobustFeature/ErrorHandler tolerance surface: no silent drops, a global
+  * malformed count with no extra job.
   */
-case class TileFragments(children: Seq[Expression],
-    timeoutMs: Long = 5000, errors: Option[vps.geom.ErrorChannel] = None)
-    extends Expression with CodegenFallback {
-  require(children.length == 6, "tile_fragments(geom, zoom, x, y, extent, withArea)")
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(TileFragments.elementType, containsNull = false)
-  private val Empty = new GenericArrayData(Array.empty[Any])
-  @transient private lazy val clipTimeout = scala.concurrent.duration.Duration(timeoutMs, "ms")
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.exists(_ == null)) return Empty
-    val Seq(wkb, z, x, y, extent, withArea) = vs
-    val zi = z.asInstanceOf[Int]; val xi = x.asInstanceOf[Int]; val yi = y.asInstanceOf[Int]
-    val env = TileMath.tileEnvelopeLatLng(zi, xi, yi)
-    val clipped = Clip(Wkb.read(wkb.asInstanceOf[Array[Byte]]), env, clipTimeout,
+final case class WktReader(errors: Option[vps.geom.ErrorChannel]) {
+  def read(s: UTF8String): Array[Byte] =
+    try Wkb.write(Wkt.read(s.toString))
+    catch { case _: Exception => errors.foreach(_.increment()); null }
+}
+
+/** st_reproject: general closed-form reprojection between EPSG:4326 /
+  * EPSG:3857 / UTM (EPSG:326xx/327xx) / Lambert conformal conic national
+  * grids (EPSG:2154/3034/3978) — the reference's `st_reprojectGeom` surface
+  * (`vectortile/package.scala:28-39`) without a native proj dependency.
+  * `codes` holds the CRS codes when both arguments are foldable, parsed once
+  * per task; None parses the per-row CRS columns per row.
+  */
+final case class Reprojection(codes: Option[(String, String)]) {
+  @transient private lazy val parsed = codes.map { case (f, t) => (Proj.parse(f), Proj.parse(t)) }
+  def reproject(b: AnyRef, fromC: UTF8String, toC: UTF8String): Array[Byte] = {
+    val bytes = b.asInstanceOf[Array[Byte]]
+    val (from, to) = parsed.getOrElse((Proj.parse(fromC.toString), Proj.parse(toC.toString)))
+    if (from == to) return bytes
+    val g = Wkb.read(bytes)
+    g.apply(new CoordinateFilter {
+      override def filter(c: Coordinate): Unit = {
+        val (x, y) = Proj.transform(c.x, c.y, from, to)
+        c.x = x; c.y = y
+      }
+    })
+    g.geometryChanged()
+    Wkb.write(g)
+  }
+}
+object Reprojection {
+  /** From the analyzed arguments (geom, from, to). */
+  def of(args: Seq[Expression]): Reprojection = Reprojection(
+    if (args(1).foldable && args(2).foldable)
+      for (f <- Option(args(1).eval()); t <- Option(args(2).eval())) yield (f.toString, t.toString)
+    else None)
+}
+
+/** st_contains, st_intersects and st_within against a point probe: the
+  * prepared side comes from [[GeomCache]], and a point probe is read into one
+  * reused mutable point instead of a parse per row (JTS predicates don't
+  * retain the probe).
+  */
+final case class PointProbe() {
+  @transient private lazy val probe = Geo.point(0, 0)
+  private def point(b: AnyRef): Geometry = Wkb.readProbe(b.asInstanceOf[Array[Byte]], probe)
+  private def prepared(b: AnyRef): PreparedGeometry = GeomCache.prepared(b.asInstanceOf[Array[Byte]])
+  def contains(a: AnyRef, b: AnyRef): Boolean = prepared(a).contains(point(b))
+  def intersects(a: AnyRef, b: AnyRef): Boolean = prepared(a).intersects(point(b))
+  /** "a within b" (PostGIS argument order): the container is the RIGHT
+    * operand, so that side is prepared/cached.
+    */
+  def within(a: AnyRef, b: AnyRef): Boolean = prepared(b).contains(point(a))
+}
+
+/** `st_intersects_keyed(key, a, b)`: `st_intersects` with a caller-supplied
+  * UNIQUE key for the prepared (left) geometry: the prepared-geometry cache
+  * is keyed by the long id instead of by WKB content, making the per-pair
+  * cache probe O(1) instead of O(polygon bytes) ([[GeomCache]] hashes +
+  * equality-checks the full WKB each evaluation — two passes over a
+  * 10k-vertex polygon per candidate pair).
+  *
+  * Safety: the cache is per-task state, not a JVM-wide map, so entries can
+  * never leak between tasks, queries, or sessions even when two queries reuse
+  * the same id for different geometries. The caller's contract is that the
+  * key identifies one geometry WITHIN the query (e.g. the join's `poly_id`);
+  * as a guard against violations (multipart regions stored as several rows
+  * under one id), every hit is verified against the row's full WKB bytes
+  * ([[GeomCache.Entry]]) and silently re-prepared on mismatch — wrong-id rows
+  * then cost cache churn, never wrong join results. The refine runs once per
+  * candidate pair, so a point probe reuses one mutable point, as in
+  * [[PointProbe]].
+  */
+final case class KeyedProbe() {
+  @transient private lazy val cache =
+    new java.util.LinkedHashMap[java.lang.Long, GeomCache.Entry](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[java.lang.Long, GeomCache.Entry]): Boolean =
+        size() > 256
+    }
+  @transient private lazy val probe = Geo.point(0, 0)
+  def intersects(k: Long, g: AnyRef, p: AnyRef): Boolean = {
+    val key = java.lang.Long.valueOf(k)
+    val wkb = g.asInstanceOf[Array[Byte]]
+    var e = cache.get(key)
+    if (e == null || !e.matches(wkb)) { e = new GeomCache.Entry(wkb); cache.put(key, e) }
+    e.prepared.intersects(Wkb.readProbe(p.asInstanceOf[Array[Byte]], probe))
+  }
+}
+
+/** The tile clip of st_clipToTile and tile_fragments: a dimension-preserving
+  * clip of a lon/lat geometry to tile (z, x, y) under `timeoutMs`. The error
+  * channel counts intersection timeouts and failures, where the original
+  * geometry passes through (reference `Clipping.scala` semantics).
+  */
+final case class TileClip(timeoutMs: Long, errors: Option[vps.geom.ErrorChannel]) {
+  @transient private lazy val timeout = scala.concurrent.duration.Duration(timeoutMs, "ms")
+  private def clipped(b: AnyRef, z: Int, x: Int, y: Int): Geometry =
+    Clip(Wkb.read(b.asInstanceOf[Array[Byte]]), TileMath.tileEnvelopeLatLng(z, x, y), timeout,
       onFailure = () => errors.foreach(_.increment()))
-    if (clipped.isEmpty) Empty
+
+  def clip(b: AnyRef, z: Int, x: Int, y: Int): Array[Byte] = Wkb.write(clipped(b, z, x, y))
+
+  /** Fused clip → tile-local transform → MVT command-int encode, emitting 0
+    * or 1 pre-encoded fragments (empty array = clip produced nothing).
+    *
+    * Returning an ARRAY consumed by `explode` is deliberate: a scalar
+    * fragment + `WHERE isNotNull(...)` would let predicate pushdown
+    * substitute the alias and evaluate the (expensive) clip twice per row; a
+    * generator evaluates once. Encoding before the tile exchange means the
+    * shuffle carries command-int payloads (a point is ~4-8 bytes vs 21-byte
+    * WKB) and the post-shuffle phases never touch geometry again.
+    */
+  def fragments(b: AnyRef, z: Int, x: Int, y: Int, extent: Int, withArea: Boolean): ArrayData = {
+    val g = clipped(b, z, x, y)
+    if (g.isEmpty) TileClip.NoFragment
     else {
-      val local = vps.mvt.TileBuilder.lonLatToTile(zi, xi, yi, extent.asInstanceOf[Int])
-        .transform(clipped)
+      val local = vps.mvt.TileBuilder.lonLatToTile(z, x, y, extent).transform(g)
       val (geomType, payload) = vps.mvt.Mvt.encodeGeometryPacked(local)
-      val area = if (withArea.asInstanceOf[Boolean]) local.getArea else 0.0
+      val area = if (withArea) local.getArea else 0.0
       new GenericArrayData(Array[Any](InternalRow(geomType, area, payload)))
     }
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(children = cs)
+}
+object TileClip {
+  val FragmentType: ArrayType = ArrayType(StructType(Seq(
+    StructField("geomType", IntegerType, nullable = false),
+    StructField("area", DoubleType, nullable = false),
+    StructField("payload", BinaryType, nullable = false))), containsNull = false)
+  private val NoFragment = new GenericArrayData(Array.empty[Any])
 }
 
 /** Column-facing API (the engine's `functions._`): each stateless function is
@@ -603,10 +538,7 @@ case class TileFragments(children: Seq[Expression],
   */
 object functions {
   import org.apache.spark.sql.functions.lit
-  import org.apache.spark.sql.vps.ColumnBridge
-  import FunctionTable.call
-  private def c(e: Expression): Column = ColumnBridge.column(e)
-  private def ex(col: Column): Expression = ColumnBridge.expression(col)
+  import FunctionTable.{call, callWith}
 
   def st_point(lon: Column, lat: Column): Column = call("st_point", lon, lat)
   def st_geomFromWKT(wkt: Column): Column = call("st_geomfromwkt", wkt)
@@ -614,7 +546,7 @@ object functions {
     * the error channel's accumulator.
     */
   def st_geomFromWKT(wkt: Column, errors: vps.geom.ErrorChannel): Column =
-    c(StGeomFromWkt(ex(wkt), Some(errors)))
+    callWith("st_geomfromwkt", WktReader(Some(errors)))(wkt)
   def st_geomFromWKB(wkb: Column): Column = call("st_geomfromwkb", wkb)
   def st_asText(g: Column): Column = call("st_astext", g)
   def st_asWKB(g: Column): Column = call("st_aswkb", g)
@@ -648,11 +580,12 @@ object functions {
   def st_union_agg(g: Column): Column = call("st_union_agg", g)
   def st_contains(a: Column, b: Column): Column = call("st_contains", a, b)
   def st_intersects(a: Column, b: Column): Column = call("st_intersects", a, b)
-  /** [[StIntersectsKeyed]]: `key` must uniquely identify geometry `a` within
-    * the query; the prepared-geometry cache probes by the key in O(1).
+  /** `st_intersects` whose prepared-geometry cache probes by `key` in O(1)
+    * ([[KeyedProbe]]): `key` must uniquely identify geometry `a` within the
+    * query.
     */
   def st_intersects_keyed(key: Column, a: Column, b: Column): Column =
-    c(StIntersectsKeyed(ex(key.cast("long")), ex(a), ex(b)))
+    call("st_intersects_keyed", key.cast("long"), a, b)
   def st_within(a: Column, b: Column): Column = call("st_within", a, b)
   def st_distance(a: Column, b: Column): Column = call("st_distance", a, b)
   def tile_x(lon: Column, zoom: Column): Column = call("tile_x", lon, zoom)
@@ -671,14 +604,14 @@ object functions {
   def st_clipToTile(g: Column, z: Column, x: Column, y: Column): Column =
     call("st_cliptotile", g, z, x, y)
   /** 0-or-1 pre-encoded MVT fragments; consume with `explode` (see
-    * [[TileFragments]]).
+    * [[TileClip.fragments]]).
     */
   def tile_fragments(g: Column, zoom: Int, x: Column, y: Column, extent: Int, withArea: Boolean,
       timeoutMs: Long = 5000, errors: Option[vps.geom.ErrorChannel] = None): Column =
-    c(TileFragments(Seq(ex(g), ex(lit(zoom)), ex(x.cast("int")), ex(y.cast("int")),
-      ex(lit(extent)), ex(lit(withArea))), timeoutMs, errors))
+    callWith("tile_fragments", TileClip(timeoutMs, errors))(
+      g, lit(zoom), x.cast("int"), y.cast("int"), lit(extent), lit(withArea))
   def st_clipToTile(g: Column, z: Column, x: Column, y: Column, errors: vps.geom.ErrorChannel): Column =
-    c(StClipToTile(ex(g), ex(z), ex(x), ex(y), Some(errors)))
+    callWith("st_cliptotile", TileClip(vps.kernels.Clip.DefaultTimeout.toMillis, Some(errors)))(g, z, x, y)
   def st_simplify(g: Column, tolerance: Column, preserveTopology: Boolean = true): Column =
     call("st_simplify", g, tolerance, lit(preserveTopology))
 

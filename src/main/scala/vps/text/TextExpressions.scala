@@ -3,7 +3,6 @@ package vps.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -381,19 +380,14 @@ object TextOps {
   }
 }
 
-/** All unordered pairs (i < j) of an array's elements, as array<struct<a, b>>.
-  * The LSH-bucket pair generator: a bucket's C(n,2) candidate pairs emerge
-  * from ONE aggregated row instead of a bucket self-join, so the (expensive)
-  * per-document signatures are computed exactly once. Feed it a sorted array
-  * for deterministic (a < b) pair orientation.
+/** array_pairs: all unordered pairs (i < j) of an array's elements, as
+  * array<struct<a, b>>. The LSH-bucket pair generator: a bucket's C(n,2)
+  * candidate pairs emerge from ONE aggregated row instead of a bucket
+  * self-join, so the (expensive) per-document signatures are computed exactly
+  * once. Feed it a sorted array for deterministic (a < b) pair orientation.
   */
-case class ArrayPairs(child: Expression) extends UnaryExpression with CodegenFallback {
-  private lazy val elemType = child.dataType.asInstanceOf[ArrayType].elementType
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("a", elemType, nullable = false),
-      StructField("b", elemType, nullable = false))), containsNull = false)
-  override def nullSafeEval(arr: Any): Any = {
-    val a = arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+final case class ElementPairs(elementType: DataType) {
+  def pairs(a: ArrayData): ArrayData = {
     val n = a.numElements()
     val nPairs = n.toLong * (n - 1) / 2
     require(nPairs <= Int.MaxValue - 8, s"array_pairs: $n elements -> $nPairs pairs " +
@@ -403,17 +397,25 @@ case class ArrayPairs(child: Expression) extends UnaryExpression with CodegenFal
     var k = 0
     var i = 0
     while (i < n) {
-      val ei = a.get(i, elemType)
+      val ei = a.get(i, elementType)
       var j = i + 1
       while (j < n) {
-        out(k) = org.apache.spark.sql.catalyst.InternalRow(ei, a.get(j, elemType))
+        out(k) = InternalRow(ei, a.get(j, elementType))
         k += 1; j += 1
       }
       i += 1
     }
     new GenericArrayData(out)
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+}
+object ElementPairs {
+  def of(args: Seq[Expression]): ElementPairs =
+    ElementPairs(args.head.dataType.asInstanceOf[ArrayType].elementType)
+  /** A pair's fields are nullable when the array's elements are. */
+  def resultType(args: Seq[DataType]): DataType = {
+    val ArrayType(e, nulls) = args.head
+    ArrayType(StructType(Seq(StructField("a", e, nulls), StructField("b", e, nulls))), containsNull = false)
+  }
 }
 
 object CollectCapped {
@@ -687,12 +689,12 @@ case class CollectCapped(
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Filter companion to [[CollectCapped]]: true when the bucket array is
-  * non-null AND holds at least `minSize` elements; a NULL (= overflowed)
-  * bucket ticks the channel's accumulator and is dropped, so capped-out LSH
-  * buckets are COUNTED, never silent.
+/** not_dropped, the filter companion to [[CollectCapped]]: true when the
+  * bucket array is non-null AND holds at least `minSize` elements; a NULL
+  * (= overflowed) bucket ticks the channel's accumulator and is dropped, so
+  * capped-out LSH buckets are COUNTED, never silent.
   *
-  * The size threshold is folded INTO this expression (rather than a separate
+  * The size threshold is folded INTO this kernel (rather than a separate
   * `size(ids) > 1` conjunct) so the optimizer cannot split the filter and
   * discard NULL rows on the cheap conjunct before the counter ticks —
   * the count has exactly one evaluation site.
@@ -701,19 +703,10 @@ case class CollectCapped(
   * (accumulator semantics — this is a metric, not data); it can never
   * UNDER-count, because no other predicate sees the row first.
   */
-case class NotDropped(child: Expression, channel: Option[vps.geom.ErrorChannel],
-    minSize: Int = 2)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) { channel.foreach(_.increment()); false }
-    else v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements() >= minSize
-  }
-  override def nullSafeEval(v: Any): Any =
-    v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements() >= minSize
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+final case class BucketFilter(channel: Option[vps.geom.ErrorChannel], minSize: Int) {
+  def keep(ids: ArrayData): Boolean =
+    if (ids == null) { channel.foreach(_.increment()); false }
+    else ids.numElements() >= minSize
 }
 
 /** Fixed pseudo-random hyperplane components for multi-band sign LSH over
@@ -763,7 +756,7 @@ object Hyperplanes {
 object functions {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.vps.ColumnBridge.{column => c, expression => ex}
-  import vps.sql.FunctionTable.call
+  import vps.sql.FunctionTable.{call, callWith}
 
   /** splitmix64(id ^ salt) scaled to [0,1) — the deterministic uniform behind
     * [[vps.ml.Sampling]]: a pure function of the row's identity, so samples and
@@ -807,7 +800,7 @@ object functions {
     */
   def not_dropped(e: Column, channel: Option[vps.geom.ErrorChannel] = None,
       minSize: Int = 2): Column =
-    c(NotDropped(ex(e), channel, minSize))
+    callWith("not_dropped", BucketFilter(channel, minSize))(e)
 
   /** whitespace token count as a pure builtin composition (oracle-friendly). */
   def token_count(text: Column): Column =

@@ -192,6 +192,30 @@ class MediaSpec extends AnyFunSuite {
     assert(sum === 0L, "triangle wave sums to exactly zero")
   }
 
+  test("AudioPipeline resolves its readers per context classloader and decodes under a fresh one") {
+    val bytes = AudioPipeline.audioBlobFor(5L)
+    val thread = Thread.currentThread()
+    val previous = thread.getContextClassLoader
+    val outer = AudioPipeline.audioReaders
+    val child = new java.net.URLClassLoader(Array.empty[java.net.URL], previous)
+    thread.setContextClassLoader(child)
+    try {
+      val readers = AudioPipeline.audioReaders
+      assert(!(readers eq outer), "a new context loader gets its own reader list")
+      assert(AudioPipeline.audioReaders eq readers, "resolved once per loader")
+      assert(readers.map(_.getClass.getName) === outer.map(_.getClass.getName))
+      val Some((rate, channels, bits, n, peak, mean)) = AudioPipeline.decodeOne(bytes)
+      assert((rate, channels, bits) === ((AudioPipeline.SampleRate, 1, 16)))
+      assert(n === AudioPipeline.nSamplesFor(5L))
+      assert(peak === AudioPipeline.amplitudeFor(5L))
+      assert(mean === 0.0)
+    } finally {
+      thread.setContextClassLoader(previous)
+      child.close()
+    }
+    assert(AudioPipeline.audioReaders eq outer)
+  }
+
   test("animated GIF round-trips losslessly: independent full decode matches the closed forms") {
     // independent oracle: decode every frame with a fresh JDK reader (no
     // sampleGifFrames involved) and compare against the generator formulas

@@ -189,6 +189,18 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(uncapped === pairs.filter { case (a, b) => a < 500000L && b < 500000L })
   }
 
+  test("each capped-out bucket is counted exactly once per action") {
+    // more identical texts than maxBucket share one bucket in every band, so
+    // exactly `bands` buckets overflow
+    val bands = 16
+    val same = spark.range(0, 40).select($"id", lit("one identical page body, repeated").as("text"))
+    val channel = vps.geom.GeomErrors.channel(spark, "lsh-dropped-exact")
+    val pairs = Dedup.minhashCandidates(same, minJaccard = 0.6, bands = bands, maxBucket = 8,
+      droppedBuckets = Some(channel)).collect()
+    assert(pairs.isEmpty)
+    assert(channel.count === bands.toLong)
+  }
+
   test("headless drop surfacing: nearDuplicateMembershipWithStats exposes the capped-bucket count") {
     // planted mega class + tiny cap: buckets overflow; a caller that never
     // opens the Spark UI reads the loss off the returned channel after any
@@ -233,12 +245,16 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("array_pairs refuses a pair count that overflows one array") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RuntimeReplaceable}
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.types.{ArrayType, LongType}
+    import org.apache.spark.sql.vps.ColumnBridge
     val big = Literal.create(new GenericArrayData((0L until 70000L).toArray), ArrayType(LongType))
+    // the planned array_pairs kernel call, evaluated as the interpreter does
+    val kernel = ColumnBridge.expression(array_pairs(ColumnBridge.column(big)))
+      .asInstanceOf[RuntimeReplaceable].replacement
     val e = intercept[IllegalArgumentException] {
-      vps.text.ArrayPairs(big).eval(null)
+      kernel.eval(null)
     }
     assert(e.getMessage.contains("overflows"), e.getMessage)
   }

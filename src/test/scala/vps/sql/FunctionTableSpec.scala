@@ -2,12 +2,15 @@ package vps.sql
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.functions.{array, col, explode, lit}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vps.Kernel
+import org.apache.spark.sql.vps.{Kernel, StateKernel}
 import org.scalatest.funsuite.AnyFunSuite
 
 import vps.SparkTestSession
@@ -108,6 +111,18 @@ class FunctionTableSpec extends AnyFunSuite {
 
   private def kernels: Seq[Kernel] = FunctionTable.rows.collect { case k: Kernel => k }
 
+  private def stateRows: Seq[StateKernel] = FunctionTable.rows.collect { case k: StateKernel => k }
+
+  /** Column-API calls of the rows SQL does not expose, over the view `t`. */
+  private def columnSamples(s: SparkSession): Map[String, DataFrame] = {
+    val t = s.table("t")
+    Map(
+      "st_intersects_keyed" -> t.where(functions.st_intersects_keyed(col("id"), col("poly"), col("g"))),
+      "tile_fragments" -> t.select(explode(functions.tile_fragments(col("poly"), 6, lit(31), lit(24),
+        4096, withArea = false))),
+      "not_dropped" -> t.where(vps.text.functions.not_dropped(array(col("id")), None, 1)))
+  }
+
   /** Eight points with a unit box around each, texts and vectors, plus an
     * all-null row, in 4 partitions of a parallelized RDD (no local relation,
     * so projections are planned, not folded).
@@ -198,6 +213,41 @@ class FunctionTableSpec extends AnyFunSuite {
     }
   }
 
+  /** The operators of one whole-stage codegen stage, down to its inputs. */
+  private def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: InputAdapter => Nil
+    case other => other +: other.children.flatMap(stage)
+  }
+
+  test("every state row runs as an Invoke on its state literal inside whole-stage codegen") {
+    view(registered)
+    assert(columnSamples(registered).keySet === FunctionTable.columnRows.map(_.name).toSet)
+    val calls = stateRows.map(k => k.method -> run(registered, k.name)) ++
+      FunctionTable.columnRows.map { case k: StateKernel => k.method -> columnSamples(registered)(k.name) }
+    calls.foreach { case (method, df) =>
+      df.collect()
+      val plan = nodes(df.queryExecution.executedPlan)
+      val fused = plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+      val invokes = fused.flatMap(_.expressions.flatMap(_.collect {
+        case i: Invoke if i.targetObject.isInstanceOf[Literal] => i.functionName
+      }))
+      assert(invokes.contains(method), s"$method:\n${plan.head.treeString}")
+    }
+  }
+
+  test("no row's plan holds a CodegenFallback other than an aggregate function") {
+    view(registered)
+    val plans = FunctionTable.rows.map(f => f.name -> run(registered, f.name)) ++
+      columnSamples(registered).toSeq
+    plans.foreach { case (name, df) =>
+      val plan = nodes(df.queryExecution.executedPlan)
+      val fallbacks = plan.flatMap(_.expressions.flatMap(_.collect {
+        case f: CodegenFallback if !f.isInstanceOf[AggregateFunction] => f
+      }))
+      assert(fallbacks.isEmpty, s"$name:\n${plan.head.treeString}")
+    }
+  }
+
   test("a kernel feeding a null-intolerant join condition is evaluated once per row") {
     // Dedup's verify joins char_shingles sets under array_jaccard(sh_a, sh_b) >= t;
     // an isnotnull(sh) filter inferred through the kernel would be pushed below
@@ -217,13 +267,14 @@ class FunctionTableSpec extends AnyFunSuite {
   test("every kernel row gives the same rows generated and interpreted") {
     val s = registered
     view(s)
-    val generated = kernels.map(k => run(s, k.name).collect().toSeq)
+    val names = (kernels ++ stateRows).map(_.name)
+    val generated = names.map(run(s, _).collect().toSeq)
     val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
     val before = keys.map(k => k -> s.conf.getOption(k))
     s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     s.conf.set("spark.sql.codegen.wholeStage", "false")
-    try kernels.zip(generated).foreach { case (k, rows) =>
-      assert(run(s, k.name).collect().toSeq === rows, k.name)
+    try names.zip(generated).foreach { case (name, rows) =>
+      assert(run(s, name).collect().toSeq === rows, name)
     } finally before.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)

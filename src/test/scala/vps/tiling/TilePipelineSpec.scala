@@ -374,4 +374,45 @@ class TilePipelineSpec extends AnyFunSuite {
         })
     }
   }
+
+  /** A circle of 12k vertices (past `Clip.TimeoutGuardMinPoints`) over a few
+    * zoom-5 tiles; `nanVertex` puts one vertex at NaN, which makes every
+    * overlay of it fail.
+    */
+  private def bigCircle(nanVertex: Boolean): org.locationtech.jts.geom.Polygon = {
+    val n = 12000
+    val ring = (0 until n).map { i =>
+      val t = 2 * math.Pi * i / n
+      if (nanVertex && i == 5) new org.locationtech.jts.geom.Coordinate(Double.NaN, Double.NaN)
+      else new org.locationtech.jts.geom.Coordinate(3 + 8 * math.cos(t), 3 + 8 * math.sin(t))
+    }
+    Geo.factory.createPolygon((ring :+ ring.head).toArray)
+  }
+
+  test("every guarded clip that fails is counted once per tile key, through tileZoom and st_clipToTile") {
+    val zoom = 5
+    def frame(g: org.locationtech.jts.geom.Geometry) =
+      spark.createDataset(spark.sparkContext.parallelize(Seq((1L, Wkb.write(g))), 1))
+        .toDF("id", "wkb").select($"id", st_geomFromWKB($"wkb").as("geom"))
+    // unsimplified, so the clip is guarded; a zero timeout makes every
+    // guarded clip time out and pass the original through, so each key still
+    // gets its fragment; a second evaluation of the fragment generator would
+    // count every clip twice
+    val circle = bigCircle(nanVertex = false)
+    val keys = TileMath.keysForGeometry(circle, zoom)
+    assert(circle.getNumPoints >= vps.kernels.Clip.TimeoutGuardMinPoints && keys.size > 1)
+    val timeouts = vps.geom.GeomErrors.channel(spark, "clip-timeout-every-key")
+    val tiles = TilePipeline.tileZoom(frame(circle), zoom,
+      TilePipeline.Options(simplify = false, clipTimeoutMs = 0, errors = Some(timeouts))).collect()
+    assert(tiles.map(t => (t.x, t.y)).toSet === keys.toSet)
+    assert(timeouts.count === keys.size.toLong)
+    // st_clipToTile has no timeout of its own; a NaN vertex fails each clip
+    val broken = bigCircle(nanVertex = true)
+    val brokenKeys = TileMath.keysForGeometry(broken, zoom)
+    val failures = vps.geom.GeomErrors.channel(spark, "clip-failure-every-key")
+    val clipped = frame(broken).select($"geom", explode(tile_keys($"geom", zoom)).as("k"))
+      .select(st_clipToTile($"geom", lit(zoom), $"k.x", $"k.y", failures).as("g")).collect()
+    assert(clipped.length === brokenKeys.size)
+    assert(failures.count === brokenKeys.size.toLong)
+  }
 }

@@ -2,8 +2,9 @@ package vps.tiling
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -14,9 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import vps.SparkTestSession
 import vps.sql.functions._
 
-/** Plan gate for the tiling fold: one exchange per zoom, keyed by tile, and
-  * no collecting aggregate (the fragments of a tile meet once, in the
-  * reducer that encodes it).
+/** Plan gate for the tiling fold: one exchange per zoom, keyed by tile, no
+  * collecting aggregate (the fragments of a tile meet once, in the reducer
+  * that encodes it), and one fragment generator per zoom, fused into
+  * whole-stage codegen.
   */
 class TilePlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -48,6 +50,38 @@ class TilePlanSpec extends AnyFunSuite {
     assert(plan.collect { case a: ObjectHashAggregateExec => a }.isEmpty, plan.head.treeString)
     assert(plan.flatMap(_.expressions.flatMap(_.collect { case c: CollectList => c })).isEmpty,
       plan.head.treeString)
+  }
+
+  /** The operators of one whole-stage codegen stage, down to its inputs. */
+  private def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: InputAdapter => Nil
+    case other => other +: other.children.flatMap(stage)
+  }
+
+  private def assertOneFusedFragmentGenerator(tiles: Dataset[TileRow]): Unit = {
+    val plan = nodes(tiles.queryExecution.executedPlan)
+    val generators = plan.collect {
+      case g: GenerateExec if g.generator.exists {
+        case i: Invoke => i.functionName == "fragments"
+        case _ => false
+      } => g
+    }
+    assert(generators.size === 1, plan.head.treeString)
+    val fused = plan.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+    assert(fused.exists(_ eq generators.head), plan.head.treeString)
+  }
+
+  test("the fragment generator runs once per zoom, inside whole-stage codegen") {
+    val tiles = TilePipeline.tileZoom(input, 6)
+    assert(tiles.collect().nonEmpty)
+    assertOneFusedFragmentGenerator(tiles)
+    var checked = Seq.empty[Int]
+    TilePipeline.pyramidRekey(input, 5, 6) { (z, tiles) =>
+      assert(tiles.collect().nonEmpty)
+      assertOneFusedFragmentGenerator(tiles)
+      checked :+= z
+    }
+    assert(checked === Seq(6, 5))
   }
 
   test("tileZoom's final plan has exactly one hash exchange and no collecting aggregate") {
