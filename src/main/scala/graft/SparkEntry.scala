@@ -218,7 +218,7 @@ object SparkEntry {
     "q10_pip_join" -> ((s, dir) => {
       val pts = geoPoints(s, dir)
         .select((col("id") * 10 + col("span_offset")).as("pt_id"), col("geom"))
-      // projected variant: primitive (id, poly_id) output, no per-hit Row build
+      // projected variant: only (id, poly_id) leave the probe
       SpatialJoins.pipBroadcastIds(pts, boxPolys(s), pointIdCol = "pt_id")
         .select(col("pt_id"), col("poly_id"))
         .orderBy("pt_id", "poly_id")

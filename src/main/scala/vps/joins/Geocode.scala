@@ -1,10 +1,10 @@
 package vps.joins
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
-import org.locationtech.jts.geom.Geometry
-import org.locationtech.jts.geom.prep.PreparedGeometry
+
+import vps.sql.IndexProbe
+import vps.sql.functions.probe_names
 
 /** Reverse-geocode helper mirroring the reference's `util/Geocode.scala:88-116`
   * surface: append the containing region names to point rows and aggregate the
@@ -12,14 +12,14 @@ import org.locationtech.jts.geom.prep.PreparedGeometry
   */
 object Geocode {
 
-  /** Append `regions: array<string>` — sorted distinct names of polygons
-    * containing each row's geometry (empty array when none). Pure map-side:
-    * the (small, broadcastable by contract) region side is collected once,
-    * each task builds an STRtree of prepared geometries from the broadcast,
-    * and every input row is tagged in place — no join, no shuffle, no marker
-    * column, no persisted intermediate (the round-2 shape keyed rows with
-    * monotonically_increasing_id and left a cached DataFrame in session
-    * storage per call).
+  /** Append `regions: array<string>` — sorted distinct names of the regions
+    * whose geometry intersects each row's geometry (empty array when none,
+    * and for a row without geometry; regions without a name are skipped).
+    * One kernel call per row of the broadcast spatial probe
+    * ([[vps.sql.IndexProbe]]): the (small, broadcastable by contract) region
+    * side is collected and broadcast once, each task builds an STRtree of
+    * prepared geometries, and every input row is tagged in place — no join,
+    * no shuffle.
     *
     * @param df      rows with a geometry column `geomCol`
     * @param regions (name: string `nameCol`, geometry `geomCol`)
@@ -28,39 +28,8 @@ object Geocode {
       df: DataFrame,
       regions: DataFrame,
       geomCol: String = "geom",
-      nameCol: String = "name"): DataFrame = {
-    val spark = df.sparkSession
-    import vps.sql.functions.st_asWKB
-    val regionRows: Array[(String, Array[Byte])] = regions
-      // null names are skipped, matching the old collect_set semantics
-      .where(col(nameCol).isNotNull)
-      .select(col(nameCol).cast("string"), st_asWKB(col(geomCol)))
-      .as[(String, Array[Byte])](Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .collect()
-    val bc = spark.sparkContext.broadcast(regionRows)
-
-    val geomIdx = df.schema.fieldIndex(geomCol)
-    val outSchema = StructType(df.schema.fields :+
-      StructField("regions", ArrayType(StringType, containsNull = false), nullable = false))
-    df.mapPartitions { rows =>
-      val index = SpatialJoins.buildIndex(bc.value)
-      rows.map { row =>
-        val g = row.getAs[Geometry](geomIdx)
-        val names =
-          if (g == null) Seq.empty[String]
-          else {
-            val hits = index.query(g.getEnvelopeInternal).iterator()
-            val out = scala.collection.mutable.SortedSet.empty[String]
-            while (hits.hasNext) {
-              val (name, pg) = hits.next().asInstanceOf[(String, PreparedGeometry)]
-              if (pg.intersects(g)) out += name
-            }
-            out.toSeq
-          }
-        Row.fromSeq(row.toSeq :+ names)
-      }
-    }(Encoders.row(outSchema))
-  }
+      nameCol: String = "name"): DataFrame =
+    df.select(col("*"), probe_names(IndexProbe.ofNames(regions, nameCol, geomCol), col(geomCol)).as("regions"))
 
   /** Distinct regions per group key (the reference's
     * `groupBy('changeset).agg(collect_set('country))`).

@@ -4,47 +4,33 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
-import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
-import org.locationtech.jts.index.strtree.STRtree
+import org.locationtech.jts.geom.Geometry
 
 import vps.geom.Wkb
+import vps.sql.IndexProbe
 import vps.sql.functions._
 
 /** Native spatial joins (SURVEY.md §2.3 J9/J10).
   *
   * Two point-in-polygon strategies, chosen by the caller by polygon-side size:
-  * - [[pipBroadcast]]: small polygon side — STRtree + prepared geometries built
-  *   once per executor from a broadcast, streamed probe (no shuffle at all).
-  *   This is the reference's Geocode pattern (`util/Geocode.scala:61-106`) kept
-  *   inside the Dataset API.
+  * - [[pipBroadcast]] and [[pipBroadcastIds]]: small polygon side — the
+  *   broadcast spatial probe ([[vps.sql.IndexProbe]], the reference's Geocode
+  *   pattern, `util/Geocode.scala:61-106`): the polygons are collected and
+  *   broadcast once, each task builds an STRtree of prepared geometries, and
+  *   the probe runs as one kernel call per point inside whole-stage codegen,
+  *   its id array exploded into rows. No shuffle at all.
   * - [[pipCellJoin]]: large-large — both sides keyed by Z-order cell at a level,
   *   plain equi-join (hash/SMJ + AQE) with an exact `st_contains` refine. This is
   *   the 100 TB path: shuffle is by cell id, skew handled by AQE skew-join.
   */
 object SpatialJoins {
 
-  /** Broadcast-side STRtree of PREPARED geometries with an arbitrary payload,
-    * built once per task from collected (payload, wkb) entries — the shared
-    * core of every broadcast spatial probe (pip variants, reverse geocode).
-    * Query hits deserialize to `(T, PreparedGeometry)`.
-    */
-  private[vps] def buildIndex[T](entries: Array[(T, Array[Byte])]): STRtree = {
-    val index = new STRtree()
-    val pf = new PreparedGeometryFactory
-    entries.foreach { case (payload, wkb) =>
-      val g = Wkb.read(wkb)
-      index.insert(g.getEnvelopeInternal, (payload, pf.create(g)))
-    }
-    index
-  }
-
   /** points ⋈ polygons on containment; polygon side broadcast.
     *
     * @param points df with a geometry column `pointCol`
     * @param polygons df with (polyIdCol: long, geometry `polyCol`)
     * @return points columns + `poly_id` (inner join semantics, one row per
-    *         containing polygon)
+    *         containing polygon row)
     */
   def pipBroadcast(
       points: DataFrame,
@@ -52,43 +38,13 @@ object SpatialJoins {
       pointCol: String = "geom",
       polyCol: String = "geom",
       polyIdCol: String = "poly_id"): DataFrame = {
-    val spark = points.sparkSession
-    val polys: Array[(Long, Array[Byte])] = polygons
-      .select(col(polyIdCol).cast("long"), st_asWKB(col(polyCol)))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .collect()
-    val bc = spark.sparkContext.broadcast(polys)
-
-    val outSchema = StructType(points.schema.fields :+ StructField("poly_id", LongType, nullable = false))
-    val pointIdx = points.schema.fieldIndex(pointCol)
-
-    points.mapPartitions { rows =>
-      val index = buildIndex(bc.value) // once per task from the broadcast
-      rows.flatMap { row =>
-        // UDT columns arrive deserialized (external Row) as JTS geometries
-        val pt = row.getAs[Geometry](pointIdx)
-        if (pt == null) Iterator.empty
-        else {
-          val hits = index.query(pt.getEnvelopeInternal).iterator()
-          var base: Seq[Any] = null // built once per point, not per hit
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          while (hits.hasNext) {
-            val (id, pg) = hits.next().asInstanceOf[(Long, PreparedGeometry)]
-            if (pg.intersects(pt)) {
-              if (base == null) base = row.toSeq
-              out += Row.fromSeq(base :+ id)
-            }
-          }
-          out.iterator
-        }
-      }
-    }(Encoders.row(outSchema))
+    val probe = IndexProbe.ofIds(polygons, polyIdCol, polyCol)
+    points.select(col("*"), explode(probe_ids(probe, col(pointCol))).as("poly_id"))
   }
 
-  /** Projected point-in-polygon: emits only (point id, poly_id) pairs as
-    * primitive typed tuples — no per-hit external Row building ([[pipBroadcast]]
-    * pays `Row.fromSeq` per output row, measurable at 10^8-hit scale). Use when
-    * the join result only needs the ids (join other columns back by id).
+  /** [[pipBroadcast]] projected to (`pointIdCol` cast to long, `poly_id`):
+    * the same probe, with only the point id carried next to it. Use when the
+    * join result only needs the ids (join other columns back by id).
     */
   def pipBroadcastIds(
       points: DataFrame,
@@ -97,34 +53,9 @@ object SpatialJoins {
       pointCol: String = "geom",
       polyCol: String = "geom",
       polyIdCol: String = "poly_id"): DataFrame = {
-    val spark = points.sparkSession
-    val polys: Array[(Long, Array[Byte])] = polygons
-      .select(col(polyIdCol).cast("long"), st_asWKB(col(polyCol)))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .collect()
-    val bc = spark.sparkContext.broadcast(polys)
-
-    val typed = points
-      .select(col(pointIdCol).cast("long"), st_asWKB(col(pointCol)))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-
-    val out = typed.mapPartitions { rows =>
-      val index = buildIndex(bc.value)
-      rows.flatMap { case (pid, wkb) =>
-        if (wkb == null) Iterator.empty
-        else {
-          val pt = Wkb.read(wkb)
-          val hits = index.query(pt.getEnvelopeInternal).iterator()
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          while (hits.hasNext) {
-            val (id, pg) = hits.next().asInstanceOf[(Long, PreparedGeometry)]
-            if (pg.intersects(pt)) out += ((pid, id))
-          }
-          out.iterator
-        }
-      }
-    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-    out.toDF(pointIdCol, "poly_id")
+    val probe = IndexProbe.ofIds(polygons, polyIdCol, polyCol)
+    points.select(col(pointIdCol).cast("long").as(pointIdCol),
+      explode(probe_ids(probe, col(pointCol))).as("poly_id"))
   }
 
   /** Large-large point-in-polygon as a cell-id equi-join + exact refine.

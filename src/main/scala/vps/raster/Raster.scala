@@ -415,30 +415,25 @@ object Raster {
     * semantics — tiles only exist where data does).
     * Output: (zone_id, n_cells, sum, mean, min, max).
     *
-    * Scale shape: the (small, broadcastable) zone side is collected once and
-    * indexed per task (STRtree + prepared geometries — the shared broadcast
-    * probe core); raster tiles stream MAP-SIDE, each emitting one partial
-    * stats row per touched zone per partition; the only exchange is the final
-    * constant-size per-zone merge.
+    * Scale shape: the (small, broadcastable) zone side is the broadcast
+    * spatial probe's ([[vps.sql.IndexProbe]]): collected and broadcast once,
+    * indexed per task as an STRtree of prepared geometries. Raster tiles
+    * stream MAP-SIDE, each emitting one partial stats row per touched zone
+    * per partition; the only exchange is the final constant-size per-zone
+    * merge.
     */
   def zonalStats(
       tiles: Dataset[RasterTile],
       zones: DataFrame,
       zoneIdCol: String = "zone_id",
       zoneGeomCol: String = "geom"): DataFrame = {
-    val spark = tiles.sparkSession
     import org.apache.spark.sql.Encoders
-    import vps.sql.functions.st_asWKB
-    val zoneRows: Array[(Long, Array[Byte])] = zones
-      .select(col(zoneIdCol).cast("long"), st_asWKB(col(zoneGeomCol)))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .collect()
-    val bc = spark.sparkContext.broadcast(zoneRows)
+    val zoneProbe = vps.sql.IndexProbe.ofIds(zones, zoneIdCol, zoneGeomCol)
 
     implicit val partialEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
       Encoders.scalaDouble, Encoders.scalaDouble, Encoders.scalaDouble)
     val partials = tiles.mapPartitions { ts =>
-      val index = vps.joins.SpatialJoins.buildIndex(bc.value)
+      val index = zoneProbe.index
       // zone_id -> (n, sum, min, max)
       val acc = scala.collection.mutable.HashMap.empty[Long, (Long, Double, Double, Double)]
       // one mutable probe point per task: the cell-center test runs once per

@@ -105,11 +105,14 @@ object FunctionTable {
   /** Rows of the Column APIs that SQL does not expose: their callers pass a
     * key contract (`st_intersects_keyed`) or their own state instance
     * (`tile_fragments`' clip timeout and channel, `not_dropped`'s channel and
-    * minimum size).
+    * minimum size, the probe rows' broadcast side).
     */
   private[sql] val columnRows: Seq[SqlFunction] = Seq(
     StateKernel("st_intersects_keyed", "intersects", Seq(LongType, Geom, Geom), _ => BooleanType,
       _ => KeyedProbe()),
+    StateKernel("probe_ids", "ids", Seq(Geom), _ => Longs, passed("probe_ids"), nullArgs = true),
+    StateKernel("probe_names", "names", Seq(Geom), _ => ArrayType(StringType, containsNull = false),
+      passed("probe_names"), nullArgs = true),
     StateKernel("tile_fragments", "fragments",
       Seq(Geom, IntegerType, IntegerType, IntegerType, IntegerType, BooleanType), _ => TileClip.FragmentType,
       _ => TileClip(Clip.DefaultTimeout.toMillis, None)),
@@ -127,6 +130,10 @@ object FunctionTable {
     */
   private[vps] def callWith(name: String, state: AnyRef)(args: Column*): Column =
     ColumnBridge.column(byName(name).asInstanceOf[StateKernel](args.map(ColumnBridge.expression), state))
+
+  /** The state of a row whose Column API always passes its own instance. */
+  private def passed(name: String): Seq[Expression] => AnyRef =
+    _ => throw new IllegalStateException(s"$name takes its state from its Column API")
 
   // checked BEFORE eval: a column-reference cap would otherwise die inside
   // eval(InternalRow.empty) with an unhelpful unresolved/NPE-style error

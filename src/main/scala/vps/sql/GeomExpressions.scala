@@ -1,13 +1,18 @@
 package vps.sql
 
-import org.apache.spark.sql.Column
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, CoordinateFilter, Geometry}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
+import org.locationtech.jts.index.strtree.STRtree
 
 import vps.geom.{CellId, Geo, GeometryUDT, Proj, TileMath, Wkb, Wkt}
 import vps.kernels.{Clip, Simplify}
@@ -399,12 +404,18 @@ object GeomCache {
 /** st_geomFromWKT: malformed input yields null (row kept) and, when an error
   * channel is attached, one tick on its accumulator — the reference's
   * RobustFeature/ErrorHandler tolerance surface: no silent drops, a global
-  * malformed count with no extra job.
+  * malformed count with no extra job. A NaN or infinite x or y is malformed:
+  * JTS parses `NaN` and `Infinity`, and every later overlay of such a
+  * geometry fails (a clip pays all of OverlayNG's fallback attempts).
   */
 final case class WktReader(errors: Option[vps.geom.ErrorChannel]) {
   def read(s: UTF8String): Array[Byte] =
-    try Wkb.write(Wkt.read(s.toString))
-    catch { case _: Exception => errors.foreach(_.increment()); null }
+    try {
+      val g = Wkt.read(s.toString)
+      if (!g.getCoordinates.forall(c => java.lang.Double.isFinite(c.x) && java.lang.Double.isFinite(c.y)))
+        throw new IllegalArgumentException("non-finite coordinate")
+      Wkb.write(g)
+    } catch { case _: Exception => errors.foreach(_.increment()); null }
 }
 
 /** st_reproject: general closed-form reprojection between EPSG:4326 /
@@ -487,6 +498,76 @@ final case class KeyedProbe() {
     var e = cache.get(key)
     if (e == null || !e.matches(wkb)) { e = new GeomCache.Entry(wkb); cache.put(key, e) }
     e.prepared.intersects(Wkb.readProbe(p.asInstanceOf[Array[Byte]], probe))
+  }
+}
+
+/** The broadcast spatial probe (SURVEY.md §2.3 J9, the reference's
+  * `util/Geocode.scala:61-106`) of `pipBroadcast`, `pipBroadcastIds`,
+  * `Geocode.withRegions` and `Raster.zonalStats`: the small side's (key,
+  * geometry) rows are collected once and broadcast, and each task builds one
+  * STRtree of prepared geometries from the broadcast. The instance holds only
+  * the broadcast handle, so the plan literal stays small whatever the side's
+  * size. A side row is hit when its prepared geometry intersects the probe
+  * (for a point: contains it or has it on its boundary); a point probe is
+  * read into one reused mutable point, as in [[PointProbe]], and a null probe
+  * hits nothing.
+  */
+final case class IndexProbe(side: Broadcast[Array[(Any, Array[Byte])]]) {
+  /** `(key, PreparedGeometry)` items of the side, built once per task. */
+  @transient lazy val index: STRtree = {
+    val tree = new STRtree()
+    val pf = new PreparedGeometryFactory
+    side.value.foreach { case (key, wkb) =>
+      val g = Wkb.read(wkb)
+      tree.insert(g.getEnvelopeInternal, (key, pf.create(g)))
+    }
+    tree
+  }
+  @transient private lazy val probe = Geo.point(0, 0)
+  @transient private lazy val found = new java.util.ArrayList[Any]()
+
+  /** Keys of the side rows the probe `b` hits, one per row. */
+  private def hits(b: AnyRef): java.util.ArrayList[Any] = {
+    found.clear()
+    if (b != null) {
+      val g = Wkb.readProbe(b.asInstanceOf[Array[Byte]], probe)
+      val candidates = index.query(g.getEnvelopeInternal).iterator()
+      while (candidates.hasNext) {
+        val (key, pg) = candidates.next().asInstanceOf[(Any, PreparedGeometry)]
+        if (pg.intersects(g)) found.add(key)
+      }
+    }
+    found
+  }
+
+  /** probe_ids: the ids of the hit rows, one element per row. */
+  def ids(b: AnyRef): ArrayData = {
+    val keys = hits(b)
+    if (keys.isEmpty) IndexProbe.NoIds
+    else UnsafeArrayData.fromPrimitiveArray(Array.tabulate(keys.size)(keys.get(_).asInstanceOf[Long]))
+  }
+
+  /** probe_names: the sorted distinct names of the hit rows. */
+  def names(b: AnyRef): ArrayData = new GenericArrayData(
+    hits(b).asScala.map(_.asInstanceOf[String]).distinct.sorted.map(UTF8String.fromString))
+}
+object IndexProbe {
+  private val NoIds = UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
+
+  /** A probe over `side`'s (`idCol` cast to long, `geomCol`) rows. */
+  def ofIds(side: DataFrame, idCol: String, geomCol: String): IndexProbe =
+    broadcast(side.select(col(idCol).cast("long"), functions.st_asWKB(col(geomCol))), Encoders.scalaLong)
+
+  /** A probe over `side`'s (`nameCol` as a string, `geomCol`) rows; rows
+    * without a name are skipped.
+    */
+  def ofNames(side: DataFrame, nameCol: String, geomCol: String): IndexProbe =
+    broadcast(side.where(col(nameCol).isNotNull)
+      .select(col(nameCol).cast("string"), functions.st_asWKB(col(geomCol))), Encoders.STRING)
+
+  private def broadcast[K](keyed: DataFrame, key: Encoder[K]): IndexProbe = {
+    val rows = keyed.as[(K, Array[Byte])](Encoders.tuple(key, Encoders.BINARY)).collect()
+    IndexProbe(keyed.sparkSession.sparkContext.broadcast(rows.asInstanceOf[Array[(Any, Array[Byte])]]))
   }
 }
 
@@ -587,6 +668,14 @@ object functions {
   def st_intersects_keyed(key: Column, a: Column, b: Column): Column =
     call("st_intersects_keyed", key.cast("long"), a, b)
   def st_within(a: Column, b: Column): Column = call("st_within", a, b)
+  /** The id of every row of `probe`'s side that `g` hits ([[IndexProbe]]),
+    * an `array<long>` (empty for a null `g`); consume with `explode`.
+    */
+  def probe_ids(probe: IndexProbe, g: Column): Column = callWith("probe_ids", probe)(g)
+  /** The sorted distinct names of the rows of `probe`'s side that `g` hits,
+    * an `array<string>` (empty for a null `g`).
+    */
+  def probe_names(probe: IndexProbe, g: Column): Column = callWith("probe_names", probe)(g)
   def st_distance(a: Column, b: Column): Column = call("st_distance", a, b)
   def tile_x(lon: Column, zoom: Column): Column = call("tile_x", lon, zoom)
   def tile_y(lat: Column, zoom: Column): Column = call("tile_y", lat, zoom)

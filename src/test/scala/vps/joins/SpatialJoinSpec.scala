@@ -48,6 +48,32 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
+  private def withNullPoint = points.unionByName(
+    Seq(-1L).toDF("id").select($"id", lit(null).cast(points.schema("geom").dataType).as("geom")))
+
+  test("pipBroadcastIds matches brute force and drops a point without geometry") {
+    val got = SpatialJoins.pipBroadcastIds(withNullPoint, polygons).as[(Long, Long)].collect()
+    assert(got.toSet === bruteForcePip())
+    assert(got.length === got.toSet.size)
+    assert(!got.exists(_._1 == -1L))
+  }
+
+  test("broadcast joins emit one row per containing polygon row, also when two rows share a poly_id") {
+    val pts = Seq((1L, 5.0, 5.0), (2L, 55.0, 55.0), (3L, -100.0, 0.0)).toDF("id", "lon", "lat")
+      .select($"id", st_point($"lon", $"lat").as("geom"))
+    val polys = Seq(
+      (0L, "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"),
+      (0L, "POLYGON ((4 4, 6 4, 6 6, 4 6, 4 4))"),
+      (1L, "POLYGON ((50 50, 60 50, 60 60, 50 60, 50 50))"))
+      .toDF("poly_id", "wkt")
+      .select($"poly_id", st_geomFromWKT($"wkt").as("geom"))
+    val want = Seq((1L, 0L), (1L, 0L), (2L, 1L))
+    val rows = SpatialJoins.pipBroadcast(pts, polys)
+    assert(rows.columns.toSeq === Seq("id", "geom", "poly_id"))
+    assert(rows.select($"id", $"poly_id").as[(Long, Long)].collect().sorted.toSeq === want)
+    assert(SpatialJoins.pipBroadcastIds(pts, polys).as[(Long, Long)].collect().sorted.toSeq === want)
+  }
+
   test("pipCellJoin matches brute force at multiple levels") {
     Seq(4, 7).foreach { level =>
       val got = SpatialJoins.pipCellJoin(points, polygons, level)
@@ -57,8 +83,7 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("pipCellJoin computes each point's cell once and drops points without geometry") {
-    val withNull = points.unionByName(Seq(-1L).toDF("id").select($"id", lit(null).cast(points.schema("geom").dataType).as("geom")))
-    val joined = SpatialJoins.pipCellJoin(withNull, polygons, 7)
+    val joined = SpatialJoins.pipCellJoin(withNullPoint, polygons, 7)
     assert(joined.select($"id", $"poly_id").as[(Long, Long)].collect().toSet === bruteForcePip())
     val plan = joined.queryExecution.executedPlan.toString
     assert("CellId.fromLonLat".r.findAllMatchIn(plan).size === 1, plan)

@@ -116,11 +116,15 @@ class FunctionTableSpec extends AnyFunSuite {
   /** Column-API calls of the rows SQL does not expose, over the view `t`. */
   private def columnSamples(s: SparkSession): Map[String, DataFrame] = {
     val t = s.table("t")
+    // the broadcast side of the probe rows: the rows with a box
+    val boxes = t.where(col("poly").isNotNull)
     Map(
       "st_intersects_keyed" -> t.where(functions.st_intersects_keyed(col("id"), col("poly"), col("g"))),
       "tile_fragments" -> t.select(explode(functions.tile_fragments(col("poly"), 6, lit(31), lit(24),
         4096, withArea = false))),
-      "not_dropped" -> t.where(vps.text.functions.not_dropped(array(col("id")), None, 1)))
+      "not_dropped" -> t.where(vps.text.functions.not_dropped(array(col("id")), None, 1)),
+      "probe_ids" -> t.select(explode(functions.probe_ids(IndexProbe.ofIds(boxes, "id", "poly"), col("g")))),
+      "probe_names" -> t.select(functions.probe_names(IndexProbe.ofNames(boxes, "txt", "poly"), col("g"))))
   }
 
   /** Eight points with a unit box around each, texts and vectors, plus an

@@ -85,6 +85,17 @@ class GeomExpressionSpec extends AnyFunSuite {
     assert(ch.count === 2)
   }
 
+  test("WKT with a NaN or infinite coordinate is malformed: null geometry, one tick per row") {
+    val wkts = Seq("POLYGON ((0 0, 10 0, NaN 10, 0 10, 0 0))", "POINT (Infinity 1)",
+      "LINESTRING (0 0, 1 -Infinity)", "POINT (1 2)")
+    val plain = wkts.toDF("wkt").select(st_geomFromWKT($"wkt").as("g")).collect()
+    assert(plain.map(_.isNullAt(0)).toSeq === Seq(true, true, true, false))
+    val ch = vps.geom.GeomErrors.channel(spark, "wkt-nonfinite")
+    val counted = wkts.toDF("wkt").select(st_geomFromWKT($"wkt", ch).as("g")).collect()
+    assert(counted.map(_.isNullAt(0)).toSeq === Seq(true, true, true, false))
+    assert(ch.count === 3)
+  }
+
   test("malformed WKT from a non-nullable child becomes null inside an executor task") {
     // a non-nullable child (when/otherwise over literals) over a parallelized
     // frame, so the projection runs in tasks and is not folded on the driver

@@ -11,16 +11,18 @@ import org.apache.spark.sql.types._
 
 import vps.SparkTestSession
 import vps.geom.{Geo, Wkb}
-import vps.joins.SpatialJoins
+import vps.joins.{Geocode, SpatialJoins}
 import vps.ml.Dedup
 import vps.osm.OsmPlans.withoutAqe
+import vps.raster.Raster
 import vps.tiling.TilePipeline
 
 /** Final executed plans of the operators that call the SQL function kernels.
   *
   * `Test/runMain vps.sql.KernelPlans <dir> <label>` writes the physical plans
-  * of `TilePipeline.tileZoom`, one `pyramidRekey` zoom, `SpatialJoins.pipCellJoin`
-  * and `Dedup.minhashCandidates` over small parallelized inputs to
+  * of `TilePipeline.tileZoom`, one `pyramidRekey` zoom, `SpatialJoins.pipCellJoin`,
+  * `Dedup.minhashCandidates`, `SpatialJoins.pipBroadcastIds`,
+  * `Geocode.withRegions` and `Raster.zonalStats` over small parallelized inputs to
   * `<dir>/<operator>_<label>.txt`, each headed by the number of plan operators
   * inside whole-stage codegen and the `CodegenFallback` expressions left in
   * the plan. Adaptive execution is off, so the physical plan is final. Run it
@@ -65,7 +67,7 @@ object KernelPlans {
     val label = args.lift(1).getOrElse("after")
     Files.createDirectories(dir)
     import vps.sql.functions._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, concat, lit}
 
     val id = StructField("id", LongType)
     val wkb = StructField("wkb", BinaryType)
@@ -90,6 +92,12 @@ object KernelPlans {
         SpatialJoins.pipCellJoin(points, polygons, 8).queryExecution.executedPlan)
       write(dir, "minhashCandidates", label,
         Dedup.minhashCandidates(docs, minJaccard = 0.6).queryExecution.executedPlan)
+      write(dir, "pipBroadcastIds", label,
+        SpatialJoins.pipBroadcastIds(points, polygons).queryExecution.executedPlan)
+      write(dir, "withRegions", label, Geocode.withRegions(points,
+        polygons.select(concat(lit("r"), col("poly_id")).as("name"), col("geom"))).queryExecution.executedPlan)
+      write(dir, "zonalStats", label, Raster.zonalStats(Raster.rasterize(points, 6, 16),
+        polygons.withColumnRenamed("poly_id", "zone_id")).queryExecution.executedPlan)
     }
     spark.stop()
   }
