@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions._
   * The previous relational formulation (2 x groupBy().agg(min) + 2 x
   * equi-join + distinct) paid ~5 exchanges plus two join hash tables per
   * round; this pays 2 exchanges and two streaming scans. Measured on the
-  * 19M-edge ComponentsProbe graph: see BENCH/BASELINE.md round-6 section.
+  * 19M-edge chains-plus-star graph of `ScaleProbe cc`: see BENCH/BASELINE.md
+  * round-6 section.
   *
   * Lineage is truncated every round so the driver-side plan stays O(1) deep
   * across iterations: with `spark.sparkContext.setCheckpointDir` configured

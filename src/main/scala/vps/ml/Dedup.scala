@@ -1,6 +1,6 @@
 package vps.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import vps.text.functions._
 
@@ -10,34 +10,24 @@ import vps.text.functions._
   * - [[exactDuplicates]]: hash-groupBy (one shuffle on the digest)
   * - [[minhashCandidates]]: MinHash + LSH banding — shuffle on (band, bucket),
   *   candidate pairs verified with exact n-gram Jaccard
+  * - [[winnowCandidates]]: winnowing fingerprints as buckets, pairs sharing
+  *   at least `minShared` of them
   * - [[simhashCandidates]]: 64-bit SimHash, 16-bit band blocking, hamming verify
   *   (builtin `bit_count(a XOR b)`)
   * - [[embeddingNearDuplicates]]: cosine near-dup via multi-band random
   *   hyperplane LSH blocking + exact cosine verify
   *
-  * Scale discipline shared by every banded variant: ONLY (id, band, bucket)
-  * rides the band shuffle — never the document text or the embedding vector.
-  * Payloads are joined back exactly once per side for the verify step, so
-  * shuffle volume is O(corpus × bands × 16 bytes), not O(corpus × bands ×
-  * payload).
+  * The four banded operators share one capped-bucket pair path,
+  * [[bucketPairs]], which states their scale discipline and hot-bucket bound
+  * once, and minhash and embedding share one exact verify, [[verified]]. Each
+  * operator holds only its band expression, its bucket member, its drop
+  * channel name and its finisher.
   *
   * GROUP resolution: [[nearDuplicateMembership]] turns minhash pairs into
   * `(id, keep_id)` groups via [[Components.connectedComponents]]; the same
   * composition works for ANY pair list — e.g.
   * `Components.connectedComponents(simhashCandidates(df))` or the embedding
   * variant — since all three emit the `(id_a, id_b)` shape.
-  *
-  * Hot-bucket bound shared by every banded variant: bucket membership is
-  * gathered with `collect_capped(maxBucket)` — O(maxBucket) aggregation state
-  * map-side and reduce-side — so a boilerplate mega-duplicate class (10^8
-  * byte-identical pages all landing in ONE (band, bucket)) can neither blow
-  * an aggregation buffer nor explode into C(n,2) pairs. Capped-out buckets
-  * are DROPPED and ALWAYS counted: on the caller's `droppedBuckets` channel
-  * when supplied, otherwise on an auto-registered named accumulator (visible
-  * in the Spark UI/event log), so saturation is never silent. A mega
-  * duplicate class is exact-duplicate territory — compose
-  * [[exactDuplicates]] first (constant state per group) and near-dup the
-  * survivors.
   *
   * Bucket-space saturation: minhash buckets live in a 2^64 space and
   * embedding-LSH in 2^rowsPerBand per band, so NATURAL bucket occupancy
@@ -78,13 +68,95 @@ object Dedup {
       ch
     })
 
-  /** The caller's channel, or the auto-registered per-application channel
-    * (accumulator UI-visible + driver-side warning on growth) so drops are
-    * never silent.
+  /** The capped-bucket pair path of every banded operator: the in-bucket
+    * pairs `(id_a, id_b)` of `banded`, spread on `(id_a, id_b)` at task
+    * parallelism for the caller's finisher.
+    *
+    * `banded` has one row per (document, bucket): `keys` name the bucket and
+    * `member` is the column a bucket collects — the id, or simhash's
+    * `(id, sig)` struct, whose signature the finisher reads off the pair.
+    * `pair` projects each pair `p` (`a < b`) to the output columns, `id_a`
+    * and `id_b` among them.
+    *
+    * Scale discipline: ONLY the bucket keys and the member ride the bucket
+    * shuffle — never the document text or the embedding vector. Payloads are
+    * joined back exactly once per side for a verify step ([[verified]]), so
+    * shuffle volume is O(corpus × bands × 16 bytes), not O(corpus × bands ×
+    * payload). There is ONE shuffle on the bucket keys and pairs are
+    * generated inside each bucket row: signatures are computed exactly once
+    * per document (a banded self-join evaluates its own scan per side —
+    * ReuseExchange does not fire across the alias).
+    *
+    * Hot-bucket bound: bucket membership is gathered with
+    * `collect_capped(maxBucket)` — O(maxBucket) aggregation state map-side
+    * and reduce-side — so a boilerplate mega-duplicate class (10^8
+    * byte-identical pages all landing in ONE bucket) can neither blow an
+    * aggregation buffer nor explode into C(n,2) pairs. The groupBy keeps its
+    * partial (map-side) collect_capped BELOW the bucket exchange; that bound
+    * is what keeps a mega-duplicate class from shipping its raw rows to one
+    * reducer. Capped-out buckets are DROPPED and ALWAYS counted: on the
+    * caller's `droppedBuckets` channel when supplied, otherwise on the
+    * auto-registered `dedup.dropped.<variant>` accumulator (visible in the
+    * Spark UI/event log, plus the driver warning of [[autoChannel]]), so
+    * saturation is never silent. Every drop trades recall for boundedness:
+    * a bucket over the cap contributes NO pairs, even a legitimately hot
+    * non-duplicate one. A mega duplicate class is exact-duplicate territory
+    * — compose [[exactDuplicates]] first (constant state per group) and
+    * near-dup the survivors.
+    *
+    * Two explicit repartitions at `defaultParallelism`:
+    *   - of the (already capped) bucket buffers, which pins the
+    *     pair-generate stage and what follows at task parallelism: the
+    *     aggregated rows are small, so AQE's byte-based coalescing would
+    *     otherwise funnel the whole stage into one task (measured 300-580 ms
+    *     serialized at bench SF);
+    *   - of the pairs on `(id_a, id_b)`, so the finisher's dedupe or count
+    *     reuses that exchange (one shuffle, not two) and a CPU-heavy verify
+    *     downstream stays spread instead of AQE-funneled into a handful of
+    *     tasks. The exchange carries un-deduped pairs, but unlike the band
+    *     rows that stream is BOUNDED by construction: <= C(maxBucket, 2) per
+    *     bucket with duplication <= the band count, so trading the map-side
+    *     pre-dedup for one fewer exchange is safe at every scale. A filter
+    *     the finisher puts on the pairs is planned below this exchange.
     */
-  private def dropChannel(df: DataFrame, name: String,
-      supplied: Option[vps.geom.ErrorChannel]): Option[vps.geom.ErrorChannel] =
-    supplied.orElse(Some(autoChannel(df.sparkSession, name)))
+  private def bucketPairs(banded: DataFrame, keys: Seq[String], member: String, maxBucket: Int,
+      variant: String, droppedBuckets: Option[vps.geom.ErrorChannel],
+      pair: Seq[Column] = Seq(col("p.a").as("id_a"), col("p.b").as("id_b"))): DataFrame = {
+    val parallelism = banded.sparkSession.sparkContext.defaultParallelism
+    val bucket = keys.map(col)
+    val members = s"${member}s"
+    val channel = droppedBuckets.orElse(Some(autoChannel(banded.sparkSession, variant)))
+    banded
+      .groupBy(bucket: _*)
+      .agg(sort_array(collect_capped(col(member), maxBucket)).as(members))
+      .repartition(parallelism, bucket: _*)
+      .where(not_dropped(col(members), channel))
+      .select(explode(array_pairs(col(members))).as("p"))
+      .select(pair: _*)
+      .repartition(parallelism, col("id_a"), col("id_b"))
+  }
+
+  /** The exact verify of spread candidate pairs against a payload: the pairs
+    * are deduped on their spread (the distinct reuses its exchange), each
+    * side's `payload` column (`value` evaluated over `rows`, which holds
+    * `id`) is joined once — side b reuses side a's exchange, since both
+    * sides are the same projection keyed the same way — and `score` of the
+    * two payloads must reach `threshold`. Output: `(id_a, id_b, score)`, then
+    * `<c>_a`, `<c>_b` for each `carried` column of `rows`.
+    */
+  private def verified(pairs: DataFrame, rows: DataFrame, payload: String, value: Column,
+      carried: Seq[String], score: String, scoreOf: (Column, Column) => Column,
+      threshold: Double): DataFrame = {
+    def side(s: String) = rows.select((col("id").as(s"id_$s") +: value.as(s"${payload}_$s") +:
+      carried.map(c => col(c).as(s"${c}_$s"))): _*)
+    pairs
+      .distinct()
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
+      .withColumn(score, scoreOf(col(s"${payload}_a"), col(s"${payload}_b")))
+      .where(col(score) >= threshold)
+      .select((Seq("id_a", "id_b", score) ++ carried.flatMap(c => Seq(s"${c}_a", s"${c}_b"))).map(col): _*)
+  }
 
   /** Groups of byte-identical texts: (digest, keep_id = min id, n).
     * Constant-size aggregation state per group — a pathological 10^8-duplicate
@@ -113,17 +185,12 @@ object Dedup {
     * numHashes = bands * rowsPerBand. Collision prob for similarity s is
     * 1-(1-s^rows)^bands; defaults catch s >= ~0.5 with high probability.
     *
-    * Shuffle plan: (1) band explode + self-join on (band, bucket) over
-    * (id, band, bucket) ONLY; (2) pair-dedupe on (id_a, id_b); (3) the text is
-    * joined back once per side for the `ngram_jaccard` verify. Document bytes
-    * never multiply by the band count.
-    *
-    * RECALL impact of `maxBucket`: a bucket holding more than `maxBucket` ids
-    * contributes NO pairs — even legitimately-hot non-mega-dup buckets — so
-    * every drop trades recall for boundedness. Drops are never silent (counted
-    * on `droppedBuckets` or the auto-registered `dedup.dropped.minhash`
-    * accumulator, UI-visible); a nonzero count means candidates were lost and
-    * the cap (or an upstream [[exactDuplicates]] pass) needs revisiting.
+    * Plan: the (band, bucket) pair path of [[bucketPairs]] over (id, band,
+    * bucket), then the [[verified]] Jaccard verify. Document bytes never
+    * multiply by the band count. Capped-out buckets are counted on
+    * `droppedBuckets` or the auto-registered `dedup.dropped.minhash`
+    * accumulator; a nonzero count means candidates were lost and the cap (or
+    * an upstream [[exactDuplicates]] pass) needs revisiting.
     *
     * `carryText = true` additionally exposes the verify join's `text_a` /
     * `text_b` columns (already materialized for the Jaccard step — zero extra
@@ -141,44 +208,13 @@ object Dedup {
       maxBucket: Int = 4096,
       droppedBuckets: Option[vps.geom.ErrorChannel] = None,
       carryText: Boolean = false): DataFrame = {
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val texts = df.select(col(idCol).as("id"), col(textCol).as("text"))
     // band buckets computed in one expression pass (see TextOps.minhashBands)
     val banded = texts.select(col("id"),
       posexplode(minhash_bands(col("text"), numHashes, bands, shingle)).as(Seq("band", "bucket")))
-
-    // ONE shuffle on (band, bucket), pairs generated inside each bucket row:
-    // signatures are computed exactly once per document (a banded self-join
-    // evaluates its own scan per side — ReuseExchange does not fire across the
-    // alias); bucket state is bounded at maxBucket and capped-out buckets are
-    // dropped + counted (see the object doc). The groupBy keeps its partial
-    // (map-side) collect_capped BELOW the exchange — that bound is what keeps
-    // a mega-duplicate class from shipping its raw rows to one reducer — and
-    // the EXPLICIT repartition of the (already capped) bucket buffers then
-    // pins the pair-generate + downstream stage at task parallelism: the
-    // aggregated rows are small, so AQE's byte-based coalescing would
-    // otherwise funnel the whole stage into one task (measured 300-580 ms
-    // serialized at bench SF).
-    val pairs = banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_capped(col("id"), maxBucket)).as("ids"))
-      .repartition(parallelism, col("band"), col("bucket"))
-      .where(not_dropped(col("ids"), dropChannel(df, "minhash", droppedBuckets)))
-      .select(explode(array_pairs(col("ids"))).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-
-    // pair-dedupe ON the verify spread: repartition first, so the distinct's
-    // final aggregation reuses the exchange (one shuffle, not two) and the
-    // CPU-heavy exact verify downstream stays spread at task parallelism
-    // instead of AQE-funneled into a handful of tasks. (The exchange carries
-    // un-deduped pairs, but unlike the band rows that stream is BOUNDED by
-    // construction: <= C(maxBucket, 2) per bucket with duplication <= the
-    // band count, so trading the map-side pre-dedup for one fewer exchange
-    // is safe at every scale.)
-    //
-    // The exact-Jaccard verify joins each side's PRE-COMPUTED sorted shingle
-    // set (char_shingles, evaluated once per document where the join side is
-    // built) and intersects with one linear merge per pair
+    // The verify payload is each document's PRE-COMPUTED sorted shingle set
+    // (char_shingles, evaluated once per document where the join side is
+    // built), intersected with one linear merge per pair
     // (`array_jaccard(char_shingles(a), char_shingles(b)) ==
     // ngram_jaccard(a, b)` by definition — same distinct-shingle sets).
     // Re-shingling text per candidate pair measured ~12 s of stage CPU at
@@ -186,21 +222,9 @@ object Dedup {
     // the trade is ~8 bytes/char of join payload instead of ~1 — and the
     // per-pair CPU drops ~50x, which dominates at every scale since the LSH
     // band shuffle, not the verify join, is the byte-heavy leg.
-    val aSide = texts.select((col("id").as("id_a") +:
-      char_shingles(col("text"), shingle).as("sh_a") +:
-      (if (carryText) Seq(col("text").as("text_a")) else Nil)): _*)
-    val bSide = texts.select((col("id").as("id_b") +:
-      char_shingles(col("text"), shingle).as("sh_b") +:
-      (if (carryText) Seq(col("text").as("text_b")) else Nil)): _*)
-    pairs
-      .repartition(parallelism, col("id_a"), col("id_b"))
-      .distinct()
-      .join(aSide, Seq("id_a"))
-      .join(bSide, Seq("id_b"))
-      .withColumn("jaccard", array_jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= minJaccard)
-      .select((col("id_a") +: col("id_b") +: col("jaccard") +:
-        (if (carryText) Seq(col("text_a"), col("text_b")) else Nil)): _*)
+    verified(bucketPairs(banded, Seq("band", "bucket"), "id", maxBucket, "minhash", droppedBuckets),
+      texts, "sh", char_shingles(col("text"), shingle), if (carryText) Seq("text") else Nil,
+      "jaccard", array_jaccard, minJaccard)
   }
 
   /** Substring-level candidate pairs via winnowing fingerprints
@@ -210,12 +234,12 @@ object Dedup {
     * shared SUBSTRING of length >= k + w - 1 — the contained-copy /
     * quotation case MinHash dilutes away.
     *
-    * Same shuffle plan as [[minhashCandidates]]: one (fp) shuffle over
-    * (id, fp) pairs only, capped buckets (a fingerprint appearing in more
-    * than `maxBucket` docs is generic boilerplate — dropped AND counted on
-    * the error channel), pairs generated inside each bucket row, then one
-    * count-shuffle on the pair. `shared_fps` counts distinct shared
-    * fingerprints (per-doc fingerprint sets are distinct by construction).
+    * Plan: the pair path of [[bucketPairs]] with each fingerprint as a
+    * bucket, over (id, fp) only (a fingerprint appearing in more than
+    * `maxBucket` docs is generic boilerplate — dropped AND counted), then a
+    * pair count that reuses the pair spread. `shared_fps` counts distinct
+    * shared fingerprints (per-doc fingerprint sets are distinct by
+    * construction).
     */
   def winnowCandidates(
       df: DataFrame,
@@ -226,21 +250,9 @@ object Dedup {
       minShared: Int = 8,
       maxBucket: Int = 64,
       droppedBuckets: Option[vps.geom.ErrorChannel] = None): DataFrame = {
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val fps = df.select(col(idCol).as("id"),
       explode(winnow_fingerprints(col(textCol), k, w)).as("fp"))
-    // partial (map-side) collect_capped stays BELOW the bucket exchange (the
-    // mega-bucket volume bound — see minhashCandidates); the explicit
-    // repartition of the capped buffers then pins the pair-generate stage at
-    // task parallelism (anti-AQE-funneling), and the pair-count groupBy
-    // reuses the second repartition's partitioning
-    fps.groupBy(col("fp"))
-      .agg(sort_array(collect_capped(col("id"), maxBucket)).as("ids"))
-      .repartition(parallelism, col("fp"))
-      .where(not_dropped(col("ids"), dropChannel(df, "winnow", droppedBuckets)))
-      .select(explode(array_pairs(col("ids"))).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-      .repartition(parallelism, col("id_a"), col("id_b"))
+    bucketPairs(fps, Seq("fp"), "id", maxBucket, "winnow", droppedBuckets)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("shared_fps"))
       .where(col("shared_fps") >= minShared)
@@ -298,7 +310,14 @@ object Dedup {
 
   /** SimHash near-duplicate pairs with hamming distance <= maxHamming.
     * Blocking: 4 bands of 16 bits — any pair within hamming 3 shares >= 1 band.
-    * The 8-byte signature rides the band shuffle (it IS the payload here).
+    *
+    * Plan: the (band, bucket) pair path of [[bucketPairs]] with the
+    * `(id, sig)` struct as the bucket member — the 8-byte signature rides
+    * the band shuffle (it IS the payload here), so the hamming verify needs
+    * no join back — then the hamming filter and a dedupe that reuses the
+    * pair spread. The filter runs BEFORE the dedupe so the distinct only
+    * sees surviving pairs (filter-then-distinct == distinct-then-filter on
+    * identical rows).
     */
   def simhashCandidates(
       df: DataFrame,
@@ -307,29 +326,14 @@ object Dedup {
       maxHamming: Int = 3,
       maxBucket: Int = 4096,
       droppedBuckets: Option[vps.geom.ErrorChannel] = None): DataFrame = {
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val withBands = df.select(col(idCol).as("id"), simhash_bands(col(textCol)).as("sb"))
     val banded = withBands.select(
       struct(col("id"), element_at(col("sb"), 1).as("sig")).as("e"),
       posexplode(slice(col("sb"), 2, 4)).as(Seq("band", "bucket")))
-    // one shuffle + in-bucket pair generation (see minhash); the 8-byte sig
-    // rides along inside the (id, sig) struct so the hamming verify needs no
-    // join back; partial collect_capped stays below the exchange (the
-    // mega-bucket volume bound), the explicit repartition of the capped
-    // buffers pins the pair stage at task parallelism (anti-AQE-funneling),
-    // and the hamming filter runs BEFORE the dedupe so the distinct only
-    // sees surviving pairs (filter-then-distinct == distinct-then-filter on
-    // identical rows).
-    banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_capped(col("e"), maxBucket)).as("es"))
-      .repartition(parallelism, col("band"), col("bucket"))
-      .where(not_dropped(col("es"), dropChannel(df, "simhash", droppedBuckets)))
-      .select(explode(array_pairs(col("es"))).as("p"))
-      .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-        bit_count(col("p.a.sig").bitwiseXOR(col("p.b.sig"))).as("hamming"))
+    bucketPairs(banded, Seq("band", "bucket"), "e", maxBucket, "simhash", droppedBuckets,
+      Seq(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
+        bit_count(col("p.a.sig").bitwiseXOR(col("p.b.sig"))).as("hamming")))
       .where(col("hamming") <= maxHamming)
-      .repartition(parallelism, col("id_a"), col("id_b"))
       .distinct()
   }
 
@@ -344,8 +348,9 @@ object Dedup {
     * Bucket fan-out is 2^rowsPerBand per band, bounding bucket cardinality
     * (and the within-bucket self-join) as the corpus grows.
     *
-    * Only (id, band, bucket) rides the shuffle; vectors join back once per
-    * side for the exact-cosine verify.
+    * Plan: the (band, bucket) pair path of [[bucketPairs]] over (id, band,
+    * bucket) only, then the [[verified]] exact-cosine verify, which joins
+    * the vectors back once per side.
     */
   def embeddingNearDuplicates(
       df: DataFrame,
@@ -356,30 +361,10 @@ object Dedup {
       rowsPerBand: Int = 16,
       maxBucket: Int = 4096,
       droppedBuckets: Option[vps.geom.ErrorChannel] = None): DataFrame = {
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     val banded = vecs.select(col("id"),
       posexplode(hyperplane_bands(col("v"), bands, rowsPerBand)).as(Seq("band", "bucket")))
-    // one shuffle + in-bucket pair generation (see minhash); partial
-    // collect_capped stays below the exchange (the mega-bucket volume
-    // bound); the explicit repartition of the capped buffers pins the pair
-    // stage at task parallelism (anti-AQE-funneling)
-    val pairs = banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_capped(col("id"), maxBucket)).as("ids"))
-      .repartition(parallelism, col("band"), col("bucket"))
-      .where(not_dropped(col("ids"), dropChannel(df, "embedding", droppedBuckets)))
-      .select(explode(array_pairs(col("ids"))).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-    // pair-dedupe on the verify spread: one exchange, distinct's final agg
-    // reuses it, and the exact-cosine verify stays spread (see minhash)
-    pairs
-      .repartition(parallelism, col("id_a"), col("id_b"))
-      .distinct()
-      .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .withColumn("cosine", cosine_sim(col("v_a"), col("v_b")))
-      .where(col("cosine") >= minCosine)
-      .select("id_a", "id_b", "cosine")
+    verified(bucketPairs(banded, Seq("band", "bucket"), "id", maxBucket, "embedding", droppedBuckets),
+      vecs, "v", col("v"), Nil, "cosine", cosine_sim, minCosine)
   }
 }

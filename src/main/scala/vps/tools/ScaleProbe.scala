@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   *     boxes; zonal: rasterize(z6, res 16) + zonalStats over the same boxes.
   *     size = replication of the sf0.1 geo points (default 3000).
   *   - cc: connected components of `size` 10-node chains plus one star of
-  *     size / 2 leaves (default 2000000 chains, 19M edges).
+  *     size / 2 leaves (default 2000000 chains, 19M edges). Each leg checks
+  *     the components (count, nodes, every node's label) and prints the
+  *     rounds and edges_per_sec.
   *   - text: winnow fingerprints, vocab top-k and domain cap over the sf0.1
   *     documents replicated `size` times (default 100).
   * Only a run on an otherwise idle host is evidence: concurrent work on the
@@ -80,9 +82,21 @@ object ScaleProbe {
       chains.unionAll(s.range(0, n / 2, 1, 16).toDF("i")
         .select((col("i") * 2 + hub + 1).as("id_a"), lit(hub).as("id_b")))
     }, (_, edges, n) => () => {
-      val (members, _) = vps.ml.Components.connectedComponentsWithStats(edges)
-      val nodes = members.agg(count(lit(1))).head().getLong(0)
+      // checked relationally, no driver-side graph walk: every node carries
+      // its chain's minimum id (c * 16) or the star's hub
+      val t0 = System.nanoTime()
+      val hub = n.toLong * 16 + 16
+      val (members, rounds) = vps.ml.Components.connectedComponentsWithStats(edges)
+      val stats = members.agg(count(lit(1)), countDistinct(col("component")),
+        sum(when(col("component") === col("id") - col("id") % 16 || col("component") === hub, 1L)
+          .otherwise(0L))).head()
+      val sec = (System.nanoTime() - t0) / 1e9
+      val (nodes, comps, correct) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+      require(comps == n + 1L, s"components: $comps != ${n + 1}")
       require(nodes == n.toLong * 10 + n / 2 + 1, s"nodes: $nodes")
+      require(correct == nodes, s"mislabeled nodes: ${nodes - correct}")
+      val edgeCount = n * 9L + n / 2
+      println(f"   cc rounds=$rounds edges=$edgeCount edges_per_sec=${edgeCount / sec}%.0f")
     }),
     "text" -> Workload(100, rep => s"vps_text_corpus_$rep", (s, rep) =>
       s.read.parquet(s"$sfDir/documents.parquet")

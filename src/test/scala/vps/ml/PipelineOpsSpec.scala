@@ -190,15 +190,25 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("each capped-out bucket is counted exactly once per action") {
-    // more identical texts than maxBucket share one bucket in every band, so
-    // exactly `bands` buckets overflow
-    val bands = 16
-    val same = spark.range(0, 40).select($"id", lit("one identical page body, repeated").as("text"))
-    val channel = vps.geom.GeomErrors.channel(spark, "lsh-dropped-exact")
-    val pairs = Dedup.minhashCandidates(same, minJaccard = 0.6, bands = bands, maxBucket = 8,
-      droppedBuckets = Some(channel)).collect()
-    assert(pairs.isEmpty)
-    assert(channel.count === bands.toLong)
+    // more identical inputs than maxBucket share one bucket in every band (or
+    // every winnowing fingerprint), so exactly that many buckets overflow
+    val text = "one identical page body, repeated"
+    val same = spark.range(0, 40).select($"id", lit(text).as("text"))
+    val vecs = spark.range(0, 40).select($"id".as("vec_id"),
+      lit(Array.tabulate(16)(d => (d + 1).toFloat)).as("embedding"))
+    val cases = Seq[(String, Long, Option[vps.geom.ErrorChannel] => org.apache.spark.sql.DataFrame)](
+      ("minhash", 16L, ch => Dedup.minhashCandidates(same, minJaccard = 0.6, bands = 16, maxBucket = 8,
+        droppedBuckets = ch)),
+      ("simhash", 4L, ch => Dedup.simhashCandidates(same, maxBucket = 8, droppedBuckets = ch)),
+      ("embedding", 8L, ch => Dedup.embeddingNearDuplicates(vecs, maxBucket = 8, droppedBuckets = ch)),
+      ("winnow", TextOps.winnow(text, 8, 4).length.toLong, ch =>
+        Dedup.winnowCandidates(same, minShared = 1, maxBucket = 8, droppedBuckets = ch)))
+    cases.foreach { case (name, buckets, candidates) =>
+      val channel = vps.geom.GeomErrors.channel(spark, s"lsh-dropped-exact-$name")
+      val pairs = candidates(Some(channel)).collect()
+      assert(pairs.isEmpty, name)
+      assert(channel.count === buckets, name)
+    }
   }
 
   test("headless drop surfacing: nearDuplicateMembershipWithStats exposes the capped-bucket count") {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import vps.SparkTestSession
 import vps.geom.{Geo, Wkb}
 import vps.joins.{Geocode, SpatialJoins}
-import vps.ml.Dedup
+import vps.ml.DedupPlanSpec
 import vps.osm.OsmPlans.withoutAqe
 import vps.raster.Raster
 import vps.tiling.TilePipeline
@@ -21,11 +21,13 @@ import vps.tiling.TilePipeline
   *
   * `Test/runMain vps.sql.KernelPlans <dir> <label>` writes the physical plans
   * of `TilePipeline.tileZoom`, one `pyramidRekey` zoom, `SpatialJoins.pipCellJoin`,
-  * `Dedup.minhashCandidates`, `SpatialJoins.pipBroadcastIds`,
-  * `Geocode.withRegions` and `Raster.zonalStats` over small parallelized inputs to
+  * `SpatialJoins.pipBroadcastIds`, `Geocode.withRegions`, `Raster.zonalStats`
+  * and the four LSH operators of `Dedup` over small parallelized inputs to
   * `<dir>/<operator>_<label>.txt`, each headed by the number of plan operators
   * inside whole-stage codegen and the `CodegenFallback` expressions left in
-  * the plan. Adaptive execution is off, so the physical plan is final. Run it
+  * the plan. Adaptive execution is off, so the physical plan is final. The
+  * `Dedup` plans use 8 shuffle partitions, as in `DedupPlanSpec`, so their
+  * explicit bucket respread stays in the plan. Run it
   * on two checkouts with labels `before` and `after` to compare them.
   */
 object KernelPlans {
@@ -79,10 +81,6 @@ object KernelPlans {
       val lat = (i / 8) * 6.0 - 18.0
       Row(i.toLong, Wkb.write(Geo.box(lon, lat, lon + 3.0, lat + 5.0)))
     }, id, wkb).select(col("id").as("poly_id"), st_geomFromWKB(col("wkb")).as("geom"))
-    val docs = frame(spark, (0 until 400).map { i =>
-      Row(i.toLong, s"document ${i % 97} shares most of its words with its near duplicates ${i % 13}")
-    }, id, StructField("text", StringType))
-
     withoutAqe(spark) {
       write(dir, "tileZoom", label, TilePipeline.tileZoom(points, 6).queryExecution.executedPlan)
       TilePipeline.pyramidRekey(points, 5, 6) { (z, tiles) =>
@@ -90,14 +88,17 @@ object KernelPlans {
       }
       write(dir, "pipCellJoin", label,
         SpatialJoins.pipCellJoin(points, polygons, 8).queryExecution.executedPlan)
-      write(dir, "minhashCandidates", label,
-        Dedup.minhashCandidates(docs, minJaccard = 0.6).queryExecution.executedPlan)
       write(dir, "pipBroadcastIds", label,
         SpatialJoins.pipBroadcastIds(points, polygons).queryExecution.executedPlan)
       write(dir, "withRegions", label, Geocode.withRegions(points,
         polygons.select(concat(lit("r"), col("poly_id")).as("name"), col("geom"))).queryExecution.executedPlan)
       write(dir, "zonalStats", label, Raster.zonalStats(Raster.rasterize(points, 6, 16),
         polygons.withColumnRenamed("poly_id", "zone_id")).queryExecution.executedPlan)
+      DedupPlanSpec.withShufflePartitions(spark, 8) {
+        DedupPlanSpec.operators(spark).foreach { case (name, df) =>
+          write(dir, name, label, df.queryExecution.executedPlan)
+        }
+      }
     }
     spark.stop()
   }
