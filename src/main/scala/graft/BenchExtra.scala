@@ -37,11 +37,18 @@ object BenchExtra {
     a
   }
 
+  /** The arguments that name no declared query. */
+  def unknownQueries(args: Seq[String]): Seq[String] = args.filterNot(SparkEntry.queries.contains)
+
   def main(args: Array[String]): Unit = {
     val all = SparkEntry.queries
-    val unknown = args.filterNot(all.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}; " +
-      s"declared: ${all.keys.toSeq.sorted.mkString(", ")}")
+    // every name is checked before any query runs
+    val unknown = unknownQueries(args.toSeq)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown queries: ${unknown.mkString(", ")}; " +
+        s"declared: ${all.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "probe")

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.vps
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, TaggingExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, NullType, ObjectType, TypeCollection, UserDefinedType}
@@ -13,6 +15,9 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, NullTy
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** The DataFrame of an analyzed logical plan. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }
 
 /** One row of the engine's SQL function table ([[vps.sql.FunctionTable]]): a

@@ -54,7 +54,9 @@ final case class ElementRow(id: Long, geom: Array[Byte], tags: Map[String, Strin
 
 /** Per-element OSM history kernels. Each call gets every raw version of one
   * element plus the rows routed to it, and returns its rows. `now` closes
-  * open validity windows.
+  * open validity windows. `Osm.toGeometry`'s keyed passes call them once
+  * per key, converting Spark's internal rows to and from these case classes
+  * by hand (`vps.osm.OsmPasses`), so no encoder code is generated for them.
   *
   * Deleted-version resurrection reads the raw version before, as a SQL `lag`
   * over the versions would: a deleted version takes that version's geometry

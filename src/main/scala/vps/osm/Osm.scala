@@ -8,11 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, ObjectType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, ObjectType, StructField, StructType}
 import org.apache.spark.sql.vps.ColumnBridge
 
-import vps.kernels.{ElementRow, MemberWay, NodeRow, NodeVersion, OsmTimelines, RelationRef, RelationVersion, WayRef,
-  WayVersion}
+import vps.kernels.OsmTimelines
+import vps.osm.OsmPasses._
+import vps.sql.SortedGroups
 import vps.sql.TagFunctions._
 import vps.sql.functions.st_geomFromWKB
 
@@ -58,73 +59,73 @@ object Osm {
 
   private def currentTime() = new Timestamp(System.currentTimeMillis())
 
-  /** `c` as a cogroup key, named `id`. The two sides of a cogroup must agree on
-    * its nullability, so a key is never null: a null id or ref groups under
+  /** `c` as a pass key, named `id`. A null id or ref groups under
     * `Long.MinValue`, which no element has.
     */
   private def key(c: Column): Column = coalesce(c, lit(Long.MinValue)).as("id")
 
-  /** The output columns of a kernel's [[ElementRow]]s, the struct `prefix` (if any) holding them. */
-  private def output(elementType: Byte, prefix: String = ""): Seq[Column] = {
-    def c(name: String) = col(prefix + name).as(name)
-    Seq(lit(elementType).as("_type"), c("id"), st_geomFromWKB(col(prefix + "geom")).as("geom"), c("tags"),
-      c("changeset"), c("updated"), c("validUntil"), c("visible"), c("version"), c("minorVersion"))
-  }
+  /** The rows of one kind of a pass's frame: `id` and the struct `kind` of `fields`. */
+  private def side(df: DataFrame, kind: String, fields: Column*): DataFrame =
+    df.select(col("id"), struct(fields: _*).as(kind))
+
+  /** `sides` as one frame laid out as `layout`: each side's missing columns are null. */
+  private def frame(layout: StructType, sides: DataFrame*): DataFrame = sides.map(s => s.select(layout.map(f =>
+    if (s.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)): _*)).reduce(_ union _)
 
   /** The reference's `OSM.toGeometry`: full history -> versioned geometries.
     *
-    * Each element type's history goes through one keyed kernel pass
-    * ([[OsmTimelines]]). The way refs (node refs per way) and the relation
-    * refs (way members per relation) come straight from the raw versions and
-    * route each node's changes to its ways and each way's rows to its
-    * relations. The node pass and the way pass each feed two consumers behind
-    * one exchange, the second reading it as a reused exchange: the points and
-    * the ways for nodes, the output and the relation routing for ways. The
-    * output side reads that exchange through a typed filter, which reads the
-    * same columns as the other consumer and keeps later filters above it.
+    * Three keyed passes ([[SortedGroups]] over the [[OsmTimelines]]
+    * kernels), each over one frame shuffled once by `id`: nodes with the way
+    * refs that list them, ways with the node changes and relation refs
+    * routed to them, relations with their member way rows. The way refs
+    * (node refs per way) and relation refs (way members per relation) come
+    * straight from the raw versions. Each pass writes the next pass's frame,
+    * and an output row made by the node or way pass rides through the later
+    * passes unchanged, so every kernel runs once and no pass's output is read
+    * twice.
     */
   def toGeometry(input: DataFrame): DataFrame = {
-    val spark = input.sparkSession
-    import spark.implicits._
     vps.geom.Geo.registerUDTs()
     val now = currentTime()
     val elements = input.withColumn("tags", removeUninterestingTags(col("tags")))
-    def versions(elementType: String, payload: Column*) = elements.where(col("type") === elementType)
-      .select(Seq(key(col("id")), col("version"), col("changeset"), col("timestamp"), col("tags")) ++ payload: _*)
-    val nodes = versions("node", asDouble(col("lat")).as("lat"), asDouble(col("lon")).as("lon"), col("visible"),
+    def versions(elementType: String) = elements.where(col("type") === elementType).withColumn("id", key(col("id")))
+    val nodes = side(versions("node"), "node", col("version"), col("changeset"), col("timestamp"), col("tags"),
+      asDouble(col("lat")).as("lat"), asDouble(col("lon")).as("lon"), col("visible"),
       coalesce(size(removeSemiInterestingTags(col("tags"))) > 0, lit(false)).as("interesting"))
-    val ways = versions("way", col("nds.ref").as("nds"), col("visible"),
-      coalesce(isArea(col("tags")), lit(false)).as("isArea"))
+    val ways = versions("way")
+    val wayVersions = side(ways, "way", col("version"), col("changeset"), col("timestamp"), col("tags"),
+      col("nds.ref").as("nds"), col("visible"), coalesce(isArea(col("tags")), lit(false)).as("isArea"))
     // the `type` tag survives removeUninterestingTags, so the relation flags read the input's tags
     val relations = ensureCompressedMembers(input.where(col("type") === "relation")).select(
       key(col("id")), col("version"), col("changeset"), col("timestamp"),
       removeUninterestingTags(col("tags")).as("tags"), col("members"), col("visible"),
       coalesce(isMultiPolygon(col("tags")), lit(false)).as("isMultiPolygon"),
       coalesce(isRoute(col("tags")), lit(false)).as("isRoute"))
+    val relationVersions = side(relations, "relation", relations.columns.tail.map(col): _*)
 
-    val wayRefs = ways.select(explode(col("nds")).as("ref"), col("id").as("way"), col("timestamp").as("since"))
-      .select(key(col("ref")), col("way"), col("since"))
+    val wayRefs = ways.select(explode(col("nds.ref")).as("ref"), col("id").as("way"), col("timestamp").as("since"))
+      .select(key(col("ref")), struct(col("way"), col("since")).as("wayRef"))
     // a deleted version takes its members from the version before, so it keeps its refs
     val relationRefs = relations.where(!col("visible") || col("isMultiPolygon") || col("isRoute")).select(
       explode(transform(filter(col("members"), m => m.getField("type") === WayType), _.getField("ref"))).as("ref"),
       col("id").as("relation"), col("timestamp").as("since"))
-      .select(key(col("ref")), col("relation"), col("since"))
+      .select(key(col("ref")), struct(col("relation"), col("since")).as("relationRef"))
 
-    val nodeRows = nodes.groupBy(col("id")).as[Long, NodeVersion]
-      .cogroup(wayRefs.groupBy(col("id")).as[Long, WayRef])((_, vs, ws) => OsmTimelines.node(vs, ws))
-      .repartition(col("id"))
-    val wayRows = ways.groupBy(col("id")).as[Long, WayVersion]
-      .cogroup(nodeRows.groupBy(col("id")).as[Long, NodeRow])((_, vs, ns) =>
-        OsmTimelines.way(vs, ns.flatMap(n => Option(n.change)), now))
-      .repartition(col("id"))
-    val memberWays = wayRows.groupBy(col("id")).as[Long, ElementRow]
-      .cogroup(relationRefs.groupBy(col("id")).as[Long, RelationRef])((_, ws, rs) => OsmTimelines.memberWays(ws, rs))
-    val relationRows = relations.groupBy(col("id")).as[Long, RelationVersion]
-      .cogroup(memberWays.groupBy(col("id")).as[Long, MemberWay])((_, vs, ms) => OsmTimelines.relation(vs, ms, now))
+    def layout(columns: (String, DataType)*) =
+      StructType((("id" -> LongType) +: columns).map { case (n, t) => StructField(n, t, nullable = n != "id") })
+    def typeOf(df: DataFrame) = df.schema.last.name -> df.schema.last.dataType
+    val nodeFrame = layout(typeOf(nodes), typeOf(wayRefs))
+    val wayFrame =
+      layout("element" -> ElementStruct, "change" -> ChangeStruct, typeOf(wayVersions), typeOf(relationRefs))
+    val relationFrame = layout("element" -> ElementStruct, "member" -> MemberStruct, typeOf(relationVersions))
 
-    nodeRows.filter((n: NodeRow) => n.point != null).select(output(NodeType, "point."): _*)
-      .union(wayRows.filter(OsmTimelines.tagged _).select(output(WayType): _*))
-      .union(relationRows.select(output(RelationType): _*))
+    val nodeRows = SortedGroups(frame(nodeFrame, nodes, wayRefs), Seq("id"), wayFrame, NodePass)
+    val wayRows = SortedGroups(frame(wayFrame, nodeRows, wayVersions, relationRefs), Seq("id"), relationFrame,
+      WayPass(now))
+    val rows = SortedGroups(frame(relationFrame, wayRows, relationVersions), Seq("id"), ElementStruct,
+      RelationPass(now))
+    rows.select(ElementStruct.map(f =>
+      if (f.name == "geom") st_geomFromWKB(col("geom")).as("geom") else col(f.name)): _*)
   }
 
   /** Time-pin snapshot over the validity interval (reference `OSM.snapshot`):

@@ -54,8 +54,10 @@ object DirtyTiles {
     import spark.implicits._
     val dirty = fromDiffs(diffs, zoom).select(col("x"), col("y"))
     // limit(cap + 1) answers "does it exceed the cap" and yields the literal
-    // set in one action, without a separate count job
-    val head = dirty.limit(maxDriverKeys + 1).as[(Int, Int)].collect()
+    // set in one action; the coalesce keeps the limit global (a single-partition
+    // exchange under it), so the collect is one job instead of a collect-limit's
+    // partition-by-partition scan
+    val head = dirty.limit(maxDriverKeys + 1).coalesce(1).as[(Int, Int)].collect()
     if (head.length <= maxDriverKeys)
       vps.tiling.TilePipeline.tileZoomSubset(snapshot, zoom, head.toSet, opts)
     else

@@ -1,10 +1,12 @@
 package vps.tiling
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import vps.mvt.{Mvt, TileBuilder}
+import vps.sql.{GroupKernel, SortedGroups}
 import vps.sql.functions._
 
 /** The per-zoom tiling fold of the reference (`VectorPipe.scala:88-197`,
@@ -171,27 +173,36 @@ object TilePipeline {
     * clip -> tile-local transform -> command-int encode run fused map-side in
     * one generator, so geometry is parsed once per (feature, tile) and empty
     * clips vanish there; then ONE exchange keyed by tile, and the reducer
-    * encodes each tile directly. A tile's encode is single-threaded (one MVT
-    * is one byte stream): keep zooms with huge per-tile feature counts in
-    * check with a `reduce` decimation hook, as the reference does.
+    * ([[SortedGroups]] over [[EncodeTiles]], reading the fragment rows
+    * directly, with no object conversion) encodes each tile. A tile's encode
+    * is single-threaded (one MVT is one byte stream): keep zooms with huge
+    * per-tile feature counts in check with a `reduce` decimation hook, as the
+    * reference does.
     */
   private def packAndEncode(keyed: DataFrame, zoom: Int, opts: Options): Dataset[TileRow] = {
     val spark = keyed.sparkSession
     import spark.implicits._
-    keyed
+    val fragments = keyed
       .select(col("x"), col("y"), col("id"), col("layer"),
         explode(tile_fragments(col("geom"), zoom, col("x"), col("y"),
           opts.extent, opts.orderAreas, opts.clipTimeoutMs, opts.errors)).as("f"))
       .select(col("x"), col("y"), col("id"), col("layer"),
         col("f.geomType").as("gt"), col("f.area").as("area"), col("f.payload").as("payload"))
-      .as[(Int, Int, Long, String, Int, Double, Array[Byte])]
-      .groupByKey(r => (r._1, r._2))
-      .mapGroups[TileRow] { (key: (Int, Int), rows: Iterator[(Int, Int, Long, String, Int, Double, Array[Byte])]) =>
-        val feats = rows.map { case (_, _, id, layer, gt, area, payload) =>
-          Feat(id, layer, gt, area, payload)
-        }.toArray
-        encodeTile(zoom, key._1, key._2, feats, opts)
-      }
+    SortedGroups(fragments, Seq("x", "y"), TileSchema, EncodeTiles(zoom, opts)).as[TileRow]
+  }
+
+  private val TileSchema = Encoders.product[TileRow].schema
+
+  /** The tile reducer: one tile's fragments (x, y, id, layer, gt, area,
+    * payload) in, its [[encodeTile]] row out.
+    */
+  private final case class EncodeTiles(zoom: Int, opts: Options) extends GroupKernel {
+    def apply(group: IndexedSeq[InternalRow]): Iterator[InternalRow] = {
+      val feats = group.map(r => Feat(r.getLong(2), if (r.isNullAt(3)) null else r.getUTF8String(3).toString,
+        r.getInt(4), r.getDouble(5), r.getBinary(6))).toArray
+      val t = encodeTile(zoom, group.head.getInt(0), group.head.getInt(1), feats, opts)
+      Iterator.single(InternalRow(t.zoom, t.x, t.y, t.mvt, t.features))
+    }
   }
 
   /** Encode one tile from its merged features (deterministic: layers sorted by

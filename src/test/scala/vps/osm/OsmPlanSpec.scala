@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import vps.SparkTestSession
 
 /** Plan gate for `Osm.toGeometry`: one keyed kernel pass per history, each
-  * kernel's output shuffled once for both its consumers, and no call-time
-  * literal that changes the generated code from one call to the next.
+  * kernel run once, no object-conversion operator, few generated classes,
+  * and no call-time literal that changes the generated code from one call to
+  * the next.
   */
 class OsmPlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -19,6 +20,16 @@ class OsmPlanSpec extends AnyFunSuite {
     assert(OsmPlans.shuffles(df) <= 8)
     // the DataFrame program it replaced needed more than twice as many
     assert(OsmPlans.exchanges(OsmOracle.toGeometry(history)) > 2 * n)
+  }
+
+  test("snapshot(toGeometry)'s executed plan holds no object-conversion operator") {
+    val plan = OsmPlans.executed(Osm.snapshot(Osm.toGeometry(history)))
+    assert(OsmPlans.objectOperators(plan).isEmpty, plan.treeString)
+    // the gate sees a typed filter and a typed group
+    import spark.implicits._
+    val typed = spark.range(4).as[Long].filter(_ > 0).groupByKey(_ % 2).mapGroups((k, vs) => k + vs.sum)
+    assert(OsmPlans.objectOperators(typed.queryExecution.executedPlan).map(_.takeWhile(_ != ' ')).toSet ===
+      Set("Filter", "AppendColumns", "MapGroups", "SerializeFromObject"))
   }
 
   test("toGeometry runs each kernel once, with no window or object aggregate") {
@@ -39,6 +50,25 @@ class OsmPlanSpec extends AnyFunSuite {
     assert(OsmPlans.timestampLiterals(Osm.snapshot(Osm.toGeometry(history), OsmHistories.at(100))).isEmpty)
     // the gate sees the literal the optimizer puts in for current_timestamp()
     assert(OsmPlans.timestampLiterals(OsmOracle.toGeometry(history)).nonEmpty)
+  }
+
+  test("one cold snapshot(toGeometry) action compiles at most half the classes of the typed-cogroup plan") {
+    // the typed-cogroup plan it replaced compiled 62 in this measurement (`OsmPlans`, label `before`)
+    def run(): Unit = Osm.snapshot(Osm.toGeometry(history)).write.format("noop").mode("overwrite").save()
+    val classes = OsmPlans.withoutAqe(spark)(OsmPlans.cold(run()).classes)
+    assert(classes > 0 && classes <= 62 / 2, s"$classes classes")
+  }
+
+  test("one cold osm_tiles-shaped operation compiles fewer classes than the generated-code cache holds") {
+    // toGeometry -> snapshot -> pyramidRekey z12-13 -> refreshTiles z13, sinks included;
+    // the typed-cogroup plans compiled 112 in this measurement (`OsmPlans` steps, label `before`)
+    val tiles = java.nio.file.Files.createTempDirectory("osm-plan-spec-tiles")
+    val steps = try OsmPlans.withoutAqe(spark) {
+      OsmPlans.emptyCodegenCache()
+      OsmPlans.operation(OsmHistories.frame(spark, OsmHistories.synthesized(1)), tiles.toString)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tiles.toFile)
+    val classes = steps.map(_._2.classes).sum
+    assert(classes > 0 && classes < 100, steps.mkString(", "))
   }
 
   test("a second snapshot(toGeometry) call compiles no class") {

@@ -7,26 +7,38 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.execution.{CoGroupExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+import org.apache.spark.sql.execution.{AppendColumnsExec, CoGroupExec, DeserializeToObjectExec, FilterExec,
+  MapGroupsExec, SerializeFromObjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types.{ObjectType, TimestampType}
 
 import vps.SparkTestSession
-import vps.kernels.WayVersion
+import vps.sql.SortedGroupsExec
+import vps.sql.functions.st_asText
+import vps.streaming.DirtyTiles
+import vps.tiling.{TilePipeline, TileSink}
 
-/** Plan facts of `toGeometry` and a dump of its plans.
+/** Plan facts of `toGeometry`, a dump of its plans, and the classes one
+  * `osm_tiles`-shaped operation compiles per library step.
   *
   * `Test/runMain vps.osm.OsmPlans <dir> <label>` writes the optimized and
   * physical plans of `snapshot(toGeometry(h))` over a synthesized history to
   * `<dir>/toGeometry_snapshot_<label>.txt`, headed by the plan counts below
-  * and by the number of classes one cold action of it compiles (the count of
-  * Spark's codegen compile-time metric over the first action in the JVM).
-  * Run it with label `after` here and with label `before` on a checkout of
-  * the other commit, with this file copied in. Adaptive execution is off, as
-  * in the benchmark.
+  * and by the number of classes one cold action of it compiles. It then runs
+  * one operation (`toGeometry` + `snapshot`, checkpointed; `pyramidRekey`
+  * z12-13 into a tile sink; `refreshTiles` z13 into the same tree) cold and
+  * then warm in the same JVM, and writes the classes compiled and their
+  * summed compile time per step to `<dir>/steps_<label>.txt`. Run it with
+  * label `after` here and with label `before` on a checkout of the other
+  * commit, with this file copied in. Adaptive execution is off, as in the
+  * benchmark.
   */
 object OsmPlans {
   /** `f(df)` planned with adaptive execution off, so the physical plan is final. */
@@ -36,7 +48,7 @@ object OsmPlans {
     try f finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
 
-  private def executed(df: DataFrame): SparkPlan = withoutAqe(df.sparkSession)(df.queryExecution.executedPlan)
+  def executed(df: DataFrame): SparkPlan = withoutAqe(df.sparkSession)(df.queryExecution.executedPlan)
 
   private def count[T: ClassTag](df: DataFrame): Int = executed(df).collect { case n: T => n }.size
 
@@ -48,9 +60,9 @@ object OsmPlans {
   def windows(df: DataFrame): Int = count[WindowExec](df)
   def objectHashAggregates(df: DataFrame): Int = count[ObjectHashAggregateExec](df)
 
-  /** Keyed passes over way versions: cogroups that read [[WayVersion]]s. */
+  /** Keyed passes over way versions: kernel nodes that run the way pass. */
   def wayKernels(df: DataFrame): Int = executed(df).collect {
-    case c: CoGroupExec if c.leftDeserializer.dataType == ObjectType(classOf[WayVersion]) => c
+    case n: SortedGroupsExec if n.kernel.isInstanceOf[OsmPasses.WayPass] => n
   }.size
 
   /** Timestamp literals of the optimized plan, such as the one the optimizer
@@ -62,10 +74,85 @@ object OsmPlans {
     }))
 
   /** Classes Spark's code generator compiles while `action` runs. */
-  def compiles(action: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  def compiles(action: => Unit): Long = compiled(action).classes
+
+  /** Classes compiled and their summed compile time, in milliseconds. */
+  final case class Compiled(classes: Long, millis: Long)
+
+  /** What Spark's code generator compiles while `action` runs. The time sums
+    * the compile-time histogram, whole milliseconds per class; its reservoir
+    * holds every sample while the JVM has compiled fewer than 1028 classes.
+    */
+  def compiled(action: => Unit): Compiled = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val (n, t) = (h.getCount, h.getSnapshot.getValues.sum)
     action
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    Compiled(h.getCount - n, h.getSnapshot.getValues.sum - t)
+  }
+
+  /** Empties Spark's generated-code cache, so the next action compiles every
+    * class it needs, as the first action of a JVM does.
+    */
+  def emptyCodegenCache(): Unit = {
+    val method = CodeGenerator.getClass.getDeclaredMethod("cache")
+    method.setAccessible(true)
+    val cache = method.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
+
+  /** [[compiled]] from an empty generated-code cache. */
+  def cold(action: => Unit): Compiled = { emptyCodegenCache(); compiled(action) }
+
+  /** The object-conversion operators of a physical plan (through adaptive
+    * wrappers, query stages and cached relations): typed cogroups, groups and
+    * filters, and the (de)serializers around them.
+    */
+  def objectOperators(plan: SparkPlan): Seq[String] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case other => other.children.flatMap(nodes)
+    })
+    def scalaFunction(e: Expression) = e.exists {
+      case i: Invoke => i.targetObject.dataType match {
+        case ObjectType(c) => classOf[Function1[_, _]].isAssignableFrom(c)
+        case _ => false
+      }
+      case _ => false
+    }
+    nodes(plan).collect {
+      case n @ (_: CoGroupExec | _: DeserializeToObjectExec | _: SerializeFromObjectExec | _: AppendColumnsExec |
+          _: MapGroupsExec) => n.nodeName
+      case f: FilterExec if scalaFunction(f.condition) => s"${f.nodeName} ${f.condition}"
+    }
+  }
+
+  /** One `osm_tiles`-shaped operation over `history`, the tiles written under
+    * `dir`: what each library step compiles.
+    */
+  def operation(history: DataFrame, dir: String): Seq[(String, Compiled)] = {
+    import org.apache.spark.sql.functions._
+    var snapshot: DataFrame = null
+    val geometry = "toGeometry + snapshot" -> compiled {
+      snapshot = Osm.snapshot(Osm.toGeometry(history))
+        .select(col("_type"), col("id"), col("visible"), col("geom"),
+          when(col("_type") === Osm.NodeType, "poi").otherwise("shape").as("kind"))
+        .localCheckpoint()
+    }
+    val input = snapshot.where(col("visible") && col("geom").isNotNull)
+      .select((col("_type").cast("long") * 1000000000L + col("id")).as("id"), col("kind"), col("geom"))
+    val opts = TilePipeline.Options(layerColumn = Some("kind"))
+    val pyramid = "pyramidRekey z12-13 + sink" -> compiled {
+      TilePipeline.pyramidRekey(input, 12, 13, opts)((_, tiles) => TileSink.write(tiles, dir))
+    }
+    val diffs = input.orderBy(col("id")).limit(40)
+      .select(col("id"), st_asText(col("geom")).as("geom_wkt"), lit(null).cast("string").as("prev_geom_wkt"))
+    val refresh = "refreshTiles z13 + sink" -> compiled {
+      TileSink.write(DirtyTiles.refreshTiles(input, diffs, 13, opts), dir)
+    }
+    snapshot.unpersist()
+    Seq(geometry, pyramid, refresh)
   }
 
   def main(args: Array[String]): Unit = {
@@ -75,13 +162,13 @@ object OsmPlans {
     Files.createDirectories(dir)
     val history = OsmHistories.frame(spark, OsmHistories.synthesized(1))
     val df = Osm.snapshot(Osm.toGeometry(history))
-    // first: the generated-code cache is empty only once per JVM
-    val cold = withoutAqe(spark)(compiles(df.write.format("noop").mode("overwrite").save()))
+    val coldAction = withoutAqe(spark)(cold(df.write.format("noop").mode("overwrite").save()))
     val counts = Seq(
       "shuffle exchanges" -> shuffles(df), "reused exchanges" -> count[ReusedExchangeExec](df),
       "whole-stage codegen stages" -> codegenStages(df), "windows" -> windows(df),
       "object hash aggregates" -> objectHashAggregates(df), "way kernels" -> wayKernels(df),
-      "classes compiled by one cold action" -> cold,
+      "object operators" -> objectOperators(executed(df)).size,
+      "classes compiled by one cold action" -> coldAction.classes,
       "timestamp literals in the optimized plan" -> timestampLiterals(df).size)
     val text = withoutAqe(spark) {
       val qe = df.queryExecution
@@ -95,6 +182,23 @@ object OsmPlans {
     }
     Files.write(dir.resolve(s"toGeometry_snapshot_$label.txt"), text.getBytes(StandardCharsets.UTF_8))
     println(s"$label: " + counts.map { case (k, n) => s"$k $n" }.mkString(", "))
+
+    val tiles = Files.createTempDirectory("osm-plans-tiles")
+    val rounds = try withoutAqe(spark) {
+      emptyCodegenCache()
+      val coldRun = operation(history, tiles.toString)
+      Seq("cold" -> coldRun, "warm" -> operation(history, tiles.toString))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tiles.toFile)
+    val table = rounds.flatMap { case (round, steps) =>
+      (steps :+ ("operation" -> Compiled(steps.map(_._2.classes).sum, steps.map(_._2.millis).sum))).map {
+        case (step, c) => f"| $round%-4s | $step%-28s | ${c.classes}%7d | ${c.millis}%10d |"
+      }
+    }
+    val steps = (s"-- classes compiled per library step of one osm_tiles-shaped operation, $label" +:
+      "| run  | step                         | classes | compile ms |" +:
+      "|------|------------------------------|---------|------------|" +: table).mkString("\n")
+    Files.write(dir.resolve(s"steps_$label.txt"), (steps + "\n").getBytes(StandardCharsets.UTF_8))
+    println(steps)
     spark.stop()
   }
 }

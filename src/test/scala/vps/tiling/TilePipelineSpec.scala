@@ -1,6 +1,8 @@
 package vps.tiling
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import vps.SparkTestSession
 import vps.docs.InterleavedDocs
@@ -283,6 +285,18 @@ class TilePipelineSpec extends AnyFunSuite {
       .map(t => (t.x, t.y) -> (t.mvt.toSeq, t.features)).toMap
     assert(sub.keySet === dirtyKeys.toSet)
     dirtyKeys.foreach { k => assert(sub(k) === full(k), s"tile $k must be byte-identical") }
+  }
+
+  test("refreshTiles selects a dirty set under the cap in one Spark job") {
+    val (snapshot, diffs) = (geoms, vps.streaming.Diffs.frame(spark, 2, 30)) // reading geoms runs a job
+    var tiles: Dataset[TileRow] = null
+    // adaptive execution off, as in the benchmark: with it on, each shuffle stage is a job of its own
+    val jobs = vps.osm.OsmPlans.withoutAqe(spark) {
+      vps.SparkJobs.count(spark) { tiles = vps.streaming.DirtyTiles.refreshTiles(snapshot, diffs, 5) }
+    }
+    assert(jobs === 1)
+    // the literal path: the dirty keys reach the plan as literals, not through a join
+    assert(!tiles.queryExecution.optimizedPlan.exists(_.isInstanceOf[Join]))
   }
 
   test("refreshTiles beyond the driver-collect cap falls back to the join path, identically") {

@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import vps.SparkTestSession
+import vps.osm.OsmPlans
 import vps.sql.functions._
 
 /** Plan gate for the tiling fold: one exchange per zoom, keyed by tile, no
@@ -79,6 +80,21 @@ class TilePlanSpec extends AnyFunSuite {
     TilePipeline.pyramidRekey(input, 5, 6) { (z, tiles) =>
       assert(tiles.collect().nonEmpty)
       assertOneFusedFragmentGenerator(tiles)
+      checked :+= z
+    }
+    assert(checked === Seq(6, 5))
+  }
+
+  test("tileZoom and a pyramidRekey zoom hold no object-conversion operator") {
+    val tiles = TilePipeline.tileZoom(input, 6)
+    assert(tiles.collect().nonEmpty)
+    assert(OsmPlans.objectOperators(tiles.queryExecution.executedPlan).isEmpty,
+      tiles.queryExecution.executedPlan.treeString)
+    var checked = Seq.empty[Int]
+    TilePipeline.pyramidRekey(input, 5, 6) { (z, tiles) =>
+      assert(tiles.collect().nonEmpty)
+      assert(OsmPlans.objectOperators(tiles.queryExecution.executedPlan).isEmpty,
+        tiles.queryExecution.executedPlan.treeString)
       checked :+= z
     }
     assert(checked === Seq(6, 5))
