@@ -43,12 +43,15 @@ object Clip {
   val TimeoutGuardMinPoints: Int = 10000
 
   /** None on a timeout or a topology failure. Only non-fatal errors are
-    * caught: an interrupt (task kill) or a fatal JVM error propagates.
+    * caught: an interrupt (task kill) or a fatal JVM error propagates. A
+    * guarded clip with a non-positive timeout times out at once, without
+    * starting its overlay.
     */
   def timedIntersect(g: Geometry, extent: Geometry, timeout: Duration = DefaultTimeout): Option[Geometry] = {
     def overlay = OverlayNGRobust.overlay(g, extent, OverlayNG.INTERSECTION)
-    try Some(if (g.getNumPoints < TimeoutGuardMinPoints) overlay else Await.result(Future(overlay), timeout))
-    catch { case NonFatal(_) => None }
+    if (g.getNumPoints < TimeoutGuardMinPoints) try Some(overlay) catch { case NonFatal(_) => None }
+    else if (timeout <= Duration.Zero) None
+    else try Some(Await.result(Future(overlay), timeout)) catch { case NonFatal(_) => None }
   }
 
   private[kernels] def collectParts[T <: Geometry](g: Geometry, cls: Class[T]): Seq[T] = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.vps.ColumnBridge
 
 import vps.kernels.OsmTimelines
 import vps.osm.OsmPasses._
-import vps.sql.SortedGroups
+import vps.sql.{FunctionTable, SortedGroups}
 import vps.sql.TagFunctions._
 import vps.sql.functions.st_geomFromWKB
 
@@ -41,20 +41,15 @@ object Osm {
     when(c.isNotNull, c.cast("double")).otherwise(lit(Double.NaN))
 
   /** Normalize `members.type` to byte codes whichever input schema arrived
-    * (reference `ensureCompressedMembers`), as a builtin `transform`.
+    * (reference `ensureCompressedMembers`): `node` 1, `way` 2, anything else
+    * 3, as a kernel row over the member array ([[OsmMembers.compress]]).
     */
   def ensureCompressedMembers(input: DataFrame): DataFrame = {
     val memberType = input.schema("members").dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
     if (memberType("type").dataType == org.apache.spark.sql.types.ByteType) input
-    else input.withColumn("members",
-      transform(col("members"), m => struct(
-        when(m.getField("type") === "node", lit(NodeType.toInt))
-          .when(m.getField("type") === "way", lit(WayType.toInt))
-          .otherwise(lit(RelationType.toInt)).cast("byte").as("type"),
-        m.getField("ref").as("ref"),
-        m.getField("role").as("role"))))
+    else input.withColumn("members", FunctionTable.call("compress_members", col("members")))
   }
 
   private def currentTime() = new Timestamp(System.currentTimeMillis())
@@ -107,7 +102,7 @@ object Osm {
       .select(key(col("ref")), struct(col("way"), col("since")).as("wayRef"))
     // a deleted version takes its members from the version before, so it keeps its refs
     val relationRefs = relations.where(!col("visible") || col("isMultiPolygon") || col("isRoute")).select(
-      explode(transform(filter(col("members"), m => m.getField("type") === WayType), _.getField("ref"))).as("ref"),
+      explode(FunctionTable.call("way_member_refs", col("members"))).as("ref"),
       col("id").as("relation"), col("timestamp").as("since"))
       .select(key(col("ref")), struct(col("relation"), col("since")).as("relationRef"))
 

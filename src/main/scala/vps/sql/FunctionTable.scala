@@ -30,6 +30,7 @@ object FunctionTable {
   private val Longs = ArrayType(LongType, containsNull = false)
   private val Floats = ArrayType(FloatType)
   private val TileKeys = ArrayType(GeomOps.TileKeyType, containsNull = false)
+  private val Tags = MapType(StringType, StringType)
   /** An argument of any array type (no cast). */
   private val AnyArray = ArrayType(NullType)
   private val G = GeomOps.getClass
@@ -104,8 +105,12 @@ object FunctionTable {
 
   /** Rows of the Column APIs that SQL does not expose: their callers pass a
     * key contract (`st_intersects_keyed`) or their own state instance
-    * (`tile_fragments`' clip timeout and channel, `not_dropped`'s channel and
-    * minimum size, the probe rows' broadcast side).
+    * (`not_dropped`'s channel and minimum size, the probe rows' broadcast
+    * side, and the tile plans' per-call values: a zoom, a tolerance, the
+    * fragment generator's zoom, extent and clip, a dirty-key set), or they
+    * are the OSM tag and member kernels of `TagFunctions` and `Osm`. A value
+    * that changes from call to call rides in the state literal, so the
+    * generated code stays the same.
     */
   private[sql] val columnRows: Seq[SqlFunction] = Seq(
     StateKernel("st_intersects_keyed", "intersects", Seq(LongType, Geom, Geom), _ => BooleanType,
@@ -113,11 +118,24 @@ object FunctionTable {
     StateKernel("probe_ids", "ids", Seq(Geom), _ => Longs, passed("probe_ids"), nullArgs = true),
     StateKernel("probe_names", "names", Seq(Geom), _ => ArrayType(StringType, containsNull = false),
       passed("probe_names"), nullArgs = true),
-    StateKernel("tile_fragments", "fragments",
-      Seq(Geom, IntegerType, IntegerType, IntegerType, IntegerType, BooleanType), _ => TileClip.FragmentType,
-      _ => TileClip(Clip.DefaultTimeout.toMillis, None)),
+    StateKernel("tile_fragments", "fragments", Seq(Geom, IntegerType, IntegerType), _ => TileClip.FragmentType,
+      passed("tile_fragments")),
     StateKernel("not_dropped", "keep", Seq(AnyArray), _ => BooleanType, _ => BucketFilter(None, 2),
-      nullArgs = true))
+      nullArgs = true),
+    StateKernel("tile_keys_at", "keys", Seq(Geom), _ => TileKeys, passed("tile_keys_at")),
+    StateKernel("ancestor_tile_keys", "ancestors", Seq(TileKeys), _ => TileKeys, passed("ancestor_tile_keys")),
+    StateKernel("simplified", "simplify", Seq(Geom), _ => Geom, passed("simplified")),
+    StateKernel("in_tile_subset", "overlaps", Seq(Geom), _ => BooleanType, passed("in_tile_subset")),
+    StateKernel("tile_in_subset", "contains", Seq(IntegerType, IntegerType), _ => BooleanType,
+      passed("tile_in_subset")),
+    StateKernel("remove_uninteresting_tags", "withoutUninteresting", Seq(Tags), _.head, _ => TagRules.current()),
+    StateKernel("remove_semi_interesting_tags", "withoutSemiInteresting", Seq(Tags), _.head,
+      _ => TagRules.current()),
+    StateKernel("is_area", "isArea", Seq(Tags), _ => BooleanType, _ => TagRules.current(), nullable = true),
+    StateKernel("compress_members", "compress", Seq(AnyArray), t => OsmMembers.compressedType(t.head),
+      a => OsmMembers.of(a.head.dataType)),
+    StateKernel("way_member_refs", "wayRefs", Seq(AnyArray), _ => OsmMembers.WayRefsType,
+      a => OsmMembers.of(a.head.dataType)))
 
   private val byName: Map[String, SqlFunction] = (rows ++ columnRows).map(f => f.name -> f).toMap
 

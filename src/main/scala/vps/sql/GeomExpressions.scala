@@ -613,6 +613,58 @@ object TileClip {
   private val NoFragment = new GenericArrayData(Array.empty[Any])
 }
 
+// The tile plans' per-call values (a zoom, a tolerance, the fragment
+// generator's zoom, extent and clip, a dirty-key set) ride in these state
+// literals rather than in inlined literals, so a plan generates the same code
+// for every zoom and every batch, and one compiled class serves them all.
+
+/** `tile_keys` at `zoom` ([[GeomOps.tileKeys]]). */
+final case class TileKeysAt(zoom: Int) {
+  def keys(g: AnyRef): ArrayData = GeomOps.tileKeys(g, zoom)
+}
+
+/** The keys `levels` zooms up of a key array: `parent_tile_keys` applied
+  * `levels` times ([[GeomOps.parentTileKeys]]), so each ancestor once, in the
+  * order of its first descendant. Zero levels is the array as given.
+  */
+final case class AncestorKeys(levels: Int) {
+  def ancestors(keys: ArrayData): ArrayData = (0 until levels).foldLeft(keys)((k, _) => GeomOps.parentTileKeys(k))
+}
+
+/** `st_simplify` at a fixed tolerance ([[GeomOps.simplify]]). */
+final case class Simplification(tolerance: Double, preserveTopology: Boolean) {
+  def simplify(g: AnyRef): Array[Byte] = GeomOps.simplify(g, tolerance, preserveTopology)
+}
+
+/** `tile_fragments` of one zoom ([[TileClip.fragments]]). */
+final case class TileFragments(zoom: Int, extent: Int, withArea: Boolean, clip: TileClip) {
+  def fragments(b: AnyRef, x: Int, y: Int): ArrayData = clip.fragments(b, zoom, x, y, extent, withArea)
+}
+
+/** A driver-held set of tile keys at `zoom`, each packed as
+  * `x * 2^32 + y` and sorted; `packed` null is every tile.
+  */
+final case class TileSubset(zoom: Int, packed: Array[Long]) {
+  /** Whether any tile key of `g` at the zoom is in the set. */
+  def overlaps(g: AnyRef): Boolean = packed == null || {
+    val keys = GeomOps.tileKeys(g, zoom)
+    (0 until keys.numElements).exists { i =>
+      val k = keys.getStruct(i, 2)
+      contains(k.getInt(0), k.getInt(1))
+    }
+  }
+
+  def contains(x: Int, y: Int): Boolean =
+    packed == null || java.util.Arrays.binarySearch(packed, x.toLong * 4294967296L + y) >= 0
+}
+object TileSubset {
+  def of(zoom: Int, keys: Set[(Int, Int)]): TileSubset =
+    TileSubset(zoom, keys.iterator.map { case (x, y) => x.toLong * 4294967296L + y }.toArray.sorted)
+
+  /** Every tile of `zoom`. */
+  def all(zoom: Int): TileSubset = TileSubset(zoom, null)
+}
+
 /** Column-facing API (the engine's `functions._`): each stateless function is
   * its [[FunctionTable]] row applied to the columns; the row's argument types
   * give the implicit casts.
@@ -697,12 +749,22 @@ object functions {
     */
   def tile_fragments(g: Column, zoom: Int, x: Column, y: Column, extent: Int, withArea: Boolean,
       timeoutMs: Long = 5000, errors: Option[vps.geom.ErrorChannel] = None): Column =
-    callWith("tile_fragments", TileClip(timeoutMs, errors))(
-      g, lit(zoom), x.cast("int"), y.cast("int"), lit(extent), lit(withArea))
+    callWith("tile_fragments", TileFragments(zoom, extent, withArea, TileClip(timeoutMs, errors)))(
+      g, x.cast("int"), y.cast("int"))
   def st_clipToTile(g: Column, z: Column, x: Column, y: Column, errors: vps.geom.ErrorChannel): Column =
     callWith("st_cliptotile", TileClip(vps.kernels.Clip.DefaultTimeout.toMillis, Some(errors)))(g, z, x, y)
   def st_simplify(g: Column, tolerance: Column, preserveTopology: Boolean = true): Column =
     call("st_simplify", g, tolerance, lit(preserveTopology))
+
+  // the tile plans' calls, each with its per-call values in its state literal
+  private[vps] def tile_keys_at(g: Column, zoom: Int): Column = callWith("tile_keys_at", TileKeysAt(zoom))(g)
+  private[vps] def ancestor_tile_keys(keys: Column, levels: Int): Column =
+    callWith("ancestor_tile_keys", AncestorKeys(levels))(keys)
+  private[vps] def simplified(g: Column, tolerance: Double, preserveTopology: Boolean): Column =
+    callWith("simplified", Simplification(tolerance, preserveTopology))(g)
+  private[vps] def in_tile_subset(subset: TileSubset, g: Column): Column = callWith("in_tile_subset", subset)(g)
+  private[vps] def tile_in_subset(subset: TileSubset, x: Column, y: Column): Column =
+    callWith("tile_in_subset", subset)(x, y)
 
   /** Register every [[FunctionTable]] row as a temporary function, so
     * `spark.sql("SELECT st_point(...)")` works in this session.

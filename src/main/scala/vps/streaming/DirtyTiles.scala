@@ -20,10 +20,10 @@ object DirtyTiles {
   /** (x, y, n_changes) at `zoom` for a diff batch/stream. */
   def fromDiffs(diffs: DataFrame, zoom: Int): DataFrame = {
     val cur = diffs
-      .select(explode(tile_keys(st_geomFromWKT(col("geom_wkt")), zoom)).as("k"))
+      .select(explode(tile_keys_at(st_geomFromWKT(col("geom_wkt")), zoom)).as("k"))
     val prev = diffs
       .where(col("prev_geom_wkt").isNotNull)
-      .select(explode(tile_keys(st_geomFromWKT(col("prev_geom_wkt")), zoom)).as("k"))
+      .select(explode(tile_keys_at(st_geomFromWKT(col("prev_geom_wkt")), zoom)).as("k"))
     cur.unionAll(prev)
       .select(col("k.x").as("x"), col("k.y").as("y"))
       .groupBy("x", "y")
@@ -41,7 +41,8 @@ object DirtyTiles {
     * anything larger — a backfill window, a huge diff batch — stays
     * distributed and renders through the join-based
     * [[vps.tiling.TilePipeline.tileZoomSubsetFrame]] (byte-identical output,
-    * no driver set).
+    * no driver set). A batch that dirties no tile (an empty batch, or one
+    * whose geometries are all null) gives an empty tile set.
     */
   def refreshTiles(
       snapshot: DataFrame,
@@ -50,14 +51,14 @@ object DirtyTiles {
       opts: vps.tiling.TilePipeline.Options = vps.tiling.TilePipeline.Options(),
       maxDriverKeys: Int = 16384)
       : org.apache.spark.sql.Dataset[vps.tiling.TileRow] = {
-    val spark = snapshot.sparkSession
-    import spark.implicits._
     val dirty = fromDiffs(diffs, zoom).select(col("x"), col("y"))
-    // limit(cap + 1) answers "does it exceed the cap" and yields the literal
-    // set in one action; the coalesce keeps the limit global (a single-partition
-    // exchange under it), so the collect is one job instead of a collect-limit's
-    // partition-by-partition scan
-    val head = dirty.limit(maxDriverKeys + 1).coalesce(1).as[(Int, Int)].collect()
+    // up to cap + 1 keys of each partition answer "does it exceed the cap"
+    // and yield the literal set in one job, the driver holding at most
+    // partitions x (cap + 1) keys. A limit operator would do it too, but its
+    // generated code names a counter that is new in every plan, so each
+    // batch would compile its stage again.
+    val head = dirty.queryExecution.toRdd
+      .mapPartitions(_.take(maxDriverKeys + 1).map(r => (r.getInt(0), r.getInt(1)))).collect()
     if (head.length <= maxDriverKeys)
       vps.tiling.TilePipeline.tileZoomSubset(snapshot, zoom, head.toSet, opts)
     else

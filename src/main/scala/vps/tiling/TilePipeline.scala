@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import vps.mvt.{Mvt, TileBuilder}
-import vps.sql.{GroupKernel, SortedGroups}
+import vps.sql.{GroupKernel, SortedGroups, TileSubset}
 import vps.sql.functions._
 
 /** The per-zoom tiling fold of the reference (`VectorPipe.scala:88-197`,
@@ -61,7 +61,7 @@ object TilePipeline {
     * columns]. Deterministic output: per tile, features sorted by id.
     */
   def tileZoom(input: DataFrame, zoom: Int, opts: Options = Options()): Dataset[TileRow] =
-    tileZoomFiltered(input, zoom, opts, None, None)
+    tileZoomFiltered(input, zoom, opts, TileSubset.all(zoom), None)
 
   /** Re-render ONLY the given tile keys — the incremental-maintenance entry
     * point (pair with `DirtyTiles.fromDiffs`: one replication batch touches a
@@ -70,22 +70,18 @@ object TilePipeline {
     * overlap test on the original geometry's keys (a superset of the
     * simplified keys), and exploded keys are filtered exactly, so clean
     * tiles never reach the encoder. Output tiles are byte-identical to the
-    * corresponding [[tileZoom]] tiles. `keys` is driver-held by contract
-    * (bounded like a broadcast side).
+    * corresponding [[tileZoom]] tiles; an empty `keys` gives no tiles.
+    * `keys` is driver-held by contract (bounded like a broadcast side) and
+    * reaches the plan as one object literal ([[vps.sql.TileSubset]]), so
+    * the generated code is the same for every key set, and the same as
+    * [[tileZoom]]'s, whose subset is every tile.
     */
   def tileZoomSubset(
       input: DataFrame,
       zoom: Int,
       keys: Set[(Int, Int)],
       opts: Options = Options()): Dataset[TileRow] = {
-    require(keys.nonEmpty, "tileZoomSubset: empty key subset")
-    val packed = keys.map { case (x, y) => x.toLong * 4294967296L + y }
-    val packKey = (k: org.apache.spark.sql.Column) =>
-      k.getField("x").cast("long") * lit(4294967296L) + k.getField("y").cast("long")
-    val pre = input.where(arrays_overlap(
-      transform(tile_keys(col("geom"), zoom), packKey),
-      lit(packed.toArray)))
-    tileZoomFiltered(pre, zoom, opts, Some(packed), None)
+    tileZoomFiltered(input, zoom, opts, TileSubset.of(zoom, keys), None)
   }
 
   /** [[tileZoomSubset]] for an UNBOUNDED dirty-key set: `dirtyKeys` is a
@@ -108,42 +104,35 @@ object TilePipeline {
       .distinct()
     val withId = input.withColumn("id", col("id").cast("long"))
     val dirtyIds = withId
-      .select(col("id"), explode(tile_keys(col("geom"), zoom)).as("k"))
+      .select(col("id"), explode(tile_keys_at(col("geom"), zoom)).as("k"))
       .select(col("id"), col("k.x").as("x"), col("k.y").as("y"))
       .join(dk, Seq("x", "y"), "left_semi")
       .select(col("id")).distinct()
     val pre = withId.join(dirtyIds, Seq("id"), "left_semi")
-    tileZoomFiltered(pre, zoom, opts, None, Some(dk))
+    tileZoomFiltered(pre, zoom, opts, TileSubset.all(zoom), Some(dk))
   }
 
+  /** The one tile plan of [[tileZoom]], [[tileZoomSubset]] and
+    * [[tileZoomSubsetFrame]]: features outside `subset` are pruned on their
+    * original geometry's keys, and exploded keys outside it are dropped (an
+    * all-tiles subset passes every row without computing keys), then
+    * `subsetFrame`'s keys, when given, filter the exploded keys by a semi-join.
+    */
   private def tileZoomFiltered(
       input: DataFrame,
       zoom: Int,
       opts: Options,
-      subset: Option[Set[Long]],
+      subset: TileSubset,
       subsetFrame: Option[DataFrame]): Dataset[TileRow] = {
-    val simplified =
-      if (opts.simplify)
-        input.withColumn("geom",
-          st_simplify(col("geom"), lit(vps.kernels.Simplify.toleranceForZoom(zoom, opts.extent)),
-            preserveTopology = opts.preserveTopology))
-      else input
-
     val layerExpr = opts.layerColumn
       .map(c => col(c).cast("string"))
       .getOrElse(lit(null).cast("string"))
-    val exploded0 = simplified
+    val exploded = simplify(input.where(in_tile_subset(subset, col("geom"))), zoom, opts)
       .select(col("id").cast("long").as("id"), layerExpr.as("layer"), col("geom"),
-        explode(tile_keys(col("geom"), zoom)).as("k"))
+        explode(tile_keys_at(col("geom"), zoom)).as("k"))
       .select(col("id"), col("layer"), col("geom"), col("k.x").as("x"), col("k.y").as("y"))
-    val exploded = (subset, subsetFrame) match {
-      case (Some(p), _) =>
-        exploded0.where((col("x").cast("long") * 4294967296L + col("y")).isin(p.toSeq: _*))
-      case (None, Some(dk)) =>
-        exploded0.join(dk, Seq("x", "y"), "left_semi")
-      case _ => exploded0
-    }
-    packAndEncode(exploded, zoom, opts)
+      .where(tile_in_subset(subset, col("x"), col("y")))
+    packAndEncode(subsetFrame.fold(exploded)(dk => exploded.join(dk, Seq("x", "y"), "left_semi")), zoom, opts)
   }
 
   /** Tile one zoom of a keys-array frame (id, layer, geom, keys:
@@ -155,17 +144,17 @@ object TilePipeline {
     * fragment generator, output tiles are byte-identical to [[tileZoom]].
     */
   def tileZoomKeyed(frame: DataFrame, zoom: Int, opts: Options = Options()): Dataset[TileRow] = {
-    val simplified =
-      if (opts.simplify)
-        frame.withColumn("geom",
-          st_simplify(col("geom"), lit(vps.kernels.Simplify.toleranceForZoom(zoom, opts.extent)),
-            preserveTopology = opts.preserveTopology))
-      else frame
-    val exploded = simplified
+    val exploded = simplify(frame, zoom, opts)
       .select(col("id"), col("layer"), col("geom"), explode(col("keys")).as("k"))
       .select(col("id"), col("layer"), col("geom"), col("k.x").as("x"), col("k.y").as("y"))
     packAndEncode(exploded, zoom, opts)
   }
+
+  /** `geom` simplified at the zoom's tolerance, when `opts.simplify`. */
+  private def simplify(df: DataFrame, zoom: Int, opts: Options): DataFrame =
+    if (!opts.simplify) df
+    else df.withColumn("geom", simplified(col("geom"), vps.kernels.Simplify.toleranceForZoom(zoom, opts.extent),
+      opts.preserveTopology))
 
   /** Fragment-encode, exchange, tile-encode — shared tail of both keyed entry
     * points. Input: (id: long, layer: string-or-null, geom, x, y).
@@ -224,19 +213,23 @@ object TilePipeline {
 
   /** Pyramid via parent re-key (the reference's `reduceKeys` fold,
     * `VectorPipe.scala:118-122,195`): tile keys are computed from the input
-    * ONCE at maxZoom; every coarser zoom derives its keys by halving the
-    * previous frame's keys (exact: the z-1 tiles intersecting an envelope are
-    * precisely the parents of the intersecting z tiles). The full-resolution
-    * input is scanned once, not once per zoom; frames persist
-    * (MEMORY_AND_DISK) between zooms (the reference's optional persist,
-    * `VectorPipe.scala:188`).
+    * ONCE at maxZoom, into a frame persisted (MEMORY_AND_DISK) for the whole
+    * pyramid (the reference's optional persist, `VectorPipe.scala:188`);
+    * every coarser zoom derives its keys from them by halving (exact: the
+    * z-1 tiles intersecting an envelope are precisely the parents of the
+    * intersecting z tiles). The full-resolution input is scanned once, not
+    * once per zoom.
     *
     * Keys ride UNEXPLODED as `keys: array<struct<x,y>>` — one row per
-    * (id, layer) with the geometry stored once — and each re-key dedupes
-    * parents per row with `parent_tile_keys` ([[vps.sql.GeomOps.parentTileKeys]]) MAP-SIDE (the reference's
-    * per-row `reduceKeys`): zero shuffles between zooms, where an exploded
-    * frame would pay a full-row dropDuplicates exchange (WKB included) per
-    * zoom. The only exchange per zoom is packAndEncode's tile aggregation.
+    * (id, layer) with the geometry stored once — and each zoom's re-key
+    * dedupes ancestors per row MAP-SIDE (the reference's per-row
+    * `reduceKeys`, as `parent_tile_keys` ([[vps.sql.GeomOps.parentTileKeys]])
+    * applied once per zoom up): zero shuffles between zooms, where an
+    * exploded frame would pay a full-row dropDuplicates exchange (WKB
+    * included) per zoom. The only exchange per zoom is packAndEncode's tile
+    * aggregation. Every zoom's plan is the same but for its state literals
+    * (zoom, levels up, tolerance), so all zooms run one set of generated
+    * classes.
     *
     * Output tiles are byte-identical to [[tileZoom]] per zoom — see
     * [[tileZoomKeyed]]. `reduce` receives ALL input columns plus (id cast
@@ -244,9 +237,10 @@ object TilePipeline {
     * this fold.
     *
     * Materializes each zoom eagerly via `sink` (needed to unpersist frames
-    * deterministically); returns per-zoom (tiles, features) counts. Every
-    * frame and tile set it persists is unpersisted before it returns or
-    * throws, so a failing `sink` leaves the caller's cache as it was.
+    * deterministically); returns per-zoom (zoom, tiles, features) counts,
+    * read from the zoom's cached tiles in one stage. Every frame and tile set
+    * it persists is unpersisted before it returns or throws, so a failing
+    * `sink` leaves the caller's cache as it was.
     */
   def pyramidRekey(
       input: DataFrame,
@@ -262,35 +256,37 @@ object TilePipeline {
     // keep EVERY input column (select/reduce hooks may reference them — the
     // rekey switch must not change the hook contract); "layer" and "keys" are
     // reserved names the fold overwrites
-    var frame = input
+    val frame = input
       .withColumn("id", col("id").cast("long"))
       .withColumn("layer", layerExpr)
-      .withColumn("keys", tile_keys(col("geom"), maxZoom))
-    var prev: Option[DataFrame] = None
+      .withColumn("keys", tile_keys_at(col("geom"), maxZoom))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     var tiles: Option[Dataset[TileRow]] = None
-    val out = Seq.newBuilder[(Int, Long, Long)]
     try {
-      for (z <- maxZoom to minZoom by -1) {
-        frame.persist(StorageLevel.MEMORY_AND_DISK)
+      (maxZoom to minZoom by -1).map { z =>
+        val keyed = frame.withColumn("keys", ancestor_tile_keys(col("keys"), maxZoom - z))
         // tiles (encoded MVTs, small) are cached: sink and stats would
         // otherwise each run the tiling job
-        val t = tileZoomKeyed(reduce(frame, z), z, opts).persist(StorageLevel.MEMORY_AND_DISK)
+        val t = tileZoomKeyed(reduce(keyed, z), z, opts).persist(StorageLevel.MEMORY_AND_DISK)
         tiles = Some(t)
         sink(z, t)
-        val stats = t.toDF().agg(count(lit(1)), sum(col("features").cast("long"))).head()
-        out += ((z, stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1)))
+        val (n, features) = counts(t)
         t.unpersist()
         tiles = None
-        prev.foreach(_.unpersist())
-        prev = Some(frame)
-        // re-key: halve + dedupe the key array per row — no shuffle
-        if (z > minZoom) frame = frame.withColumn("keys", parent_tile_keys(col("keys")))
+        (z, n, features)
       }
-      out.result()
     } finally {
       tiles.foreach(_.unpersist())
-      prev.foreach(_.unpersist())
       frame.unpersist()
     }
+  }
+
+  /** (tiles, features) of a cached tile set: one stage over its rows, the
+    * same plan a sink that reads `queryExecution.toRdd` runs.
+    */
+  private def counts(tiles: Dataset[TileRow]): (Long, Long) = {
+    val featuresAt = tiles.schema.fieldIndex("features")
+    tiles.queryExecution.toRdd.aggregate((0L, 0L))(
+      (acc, r) => (acc._1 + 1, acc._2 + r.getInt(featuresAt)), (a, b) => (a._1 + b._1, a._2 + b._2))
   }
 }

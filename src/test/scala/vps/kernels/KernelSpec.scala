@@ -148,6 +148,42 @@ class KernelSpec extends AnyFunSuite {
     finally Thread.interrupted() // clear the flag for the rest of the suite
   }
 
+  test("clip: a non-positive timeout times out a guarded clip without starting its overlay") {
+    // a 12k-vertex ring that counts reads of its coordinates; the guard reads only its size
+    val reads = new java.util.concurrent.atomic.AtomicLong
+    final class Counted(cs: Array[Coordinate]) extends impl.CoordinateArraySequence(cs) {
+      private def read[T](v: => T): T = { reads.incrementAndGet(); v }
+      override def getCoordinate(i: Int): Coordinate = read(super.getCoordinate(i))
+      override def getCoordinate(i: Int, c: Coordinate): Unit = read(super.getCoordinate(i, c))
+      override def getCoordinateCopy(i: Int): Coordinate = read(super.getCoordinateCopy(i))
+      override def getX(i: Int): Double = read(super.getX(i))
+      override def getY(i: Int): Double = read(super.getY(i))
+      override def getOrdinate(i: Int, o: Int): Double = read(super.getOrdinate(i, o))
+      override def toCoordinateArray: Array[Coordinate] = read(super.toCoordinateArray)
+      override def expandEnvelope(e: Envelope): Envelope = read(super.expandEnvelope(e))
+      override def copy(): impl.CoordinateArraySequence = read(super.copy())
+    }
+    val n = 12000
+    val ring = (0 until n).map { i =>
+      val t = 2 * math.Pi * i / n
+      new Coordinate(3 + 8 * math.cos(t), 3 + 8 * math.sin(t))
+    }
+    val polygon = new Polygon(new LinearRing(new Counted((ring :+ ring.head).toArray), Geo.factory), null, Geo.factory)
+    assert(polygon.getNumPoints >= Clip.TimeoutGuardMinPoints)
+    val extent = Geo.factory.toGeometry(TileMath.tileEnvelopeLatLng(5, 16, 15))
+    for (timeout <- Seq(scala.concurrent.duration.Duration.Zero, scala.concurrent.duration.Duration(-1, "ms"))) {
+      reads.set(0)
+      assert(Clip.timedIntersect(polygon, extent, timeout).isEmpty)
+      // an overlay started on another thread would read the ring within this wait
+      val deadline = System.nanoTime() + 1000000000L
+      while (reads.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(reads.get === 0L, s"timeout $timeout")
+    }
+    // a positive timeout does run it
+    assert(Clip.timedIntersect(polygon, extent, scala.concurrent.duration.Duration(30, "s")).nonEmpty)
+    assert(reads.get > 0)
+  }
+
   test("clip properties: inside the tile, family preserved, measure equals the legacy overlay") {
     val prop = Prop.forAll(KernelSpec.clipCase) { case (g, tile) =>
       val failures = KernelSpec.clipViolations(g, tile)

@@ -59,16 +59,32 @@ class OsmPlanSpec extends AnyFunSuite {
     assert(classes > 0 && classes <= 62 / 2, s"$classes classes")
   }
 
+  /** `OsmPlans.operation` over the synthesized history, `runs` times in a
+    * row from an empty generated-code cache: the steps of each run.
+    */
+  private def operations(runs: Int): Seq[Seq[(String, OsmPlans.Compiled)]] = {
+    val tiles = java.nio.file.Files.createTempDirectory("osm-plan-spec-tiles")
+    try OsmPlans.withoutAqe(spark) {
+      val history = OsmHistories.frame(spark, OsmHistories.synthesized(1))
+      OsmPlans.emptyCodegenCache()
+      (1 to runs).map(_ => OsmPlans.operation(history, tiles.toString))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tiles.toFile)
+  }
+
   test("one cold osm_tiles-shaped operation compiles fewer classes than the generated-code cache holds") {
     // toGeometry -> snapshot -> pyramidRekey z12-13 -> refreshTiles z13, sinks included;
-    // the typed-cogroup plans compiled 112 in this measurement (`OsmPlans` steps, label `before`)
-    val tiles = java.nio.file.Files.createTempDirectory("osm-plan-spec-tiles")
-    val steps = try OsmPlans.withoutAqe(spark) {
-      OsmPlans.emptyCodegenCache()
-      OsmPlans.operation(OsmHistories.frame(spark, OsmHistories.synthesized(1)), tiles.toString)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tiles.toFile)
+    // in this measurement (`OsmPlans` steps) the typed-cogroup plans compiled 112, the
+    // first sorted-group plans 60, and these plans 33, well under the cache's 100
+    val steps = operations(1).head
     val classes = steps.map(_._2.classes).sum
-    assert(classes > 0 && classes < 100, steps.mkString(", "))
+    assert(classes > 0 && classes <= 40, steps.mkString(", "))
+  }
+
+  test("a second osm_tiles-shaped operation compiles no class in any step") {
+    // the refresh step included: its dirty keys, zoom and tolerance ride in state literals
+    val Seq(_, warm) = operations(2)
+    assert(warm.map(_._1) === Seq("toGeometry + snapshot", "pyramidRekey z12-13 + sink", "refreshTiles z13 + sink"))
+    warm.foreach { case (step, c) => assert(c.classes === 0, s"$step: ${c.names.mkString("; ")}") }
   }
 
   test("a second snapshot(toGeometry) call compiles no class") {

@@ -8,7 +8,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.execution.{AppendColumnsExec, CoGroupExec, DeserializeToObjectExec, FilterExec,
   MapGroupsExec, SerializeFromObjectExec, SparkPlan, WholeStageCodegenExec}
@@ -35,7 +35,9 @@ import vps.tiling.{TilePipeline, TileSink}
   * one operation (`toGeometry` + `snapshot`, checkpointed; `pyramidRekey`
   * z12-13 into a tile sink; `refreshTiles` z13 into the same tree) cold and
   * then warm in the same JVM, and writes the classes compiled and their
-  * summed compile time per step to `<dir>/steps_<label>.txt`. Run it with
+  * summed compile time per step to `<dir>/steps_<label>.txt`, followed by
+  * one line per class each step added to the generated-code cache (a hash
+  * of its source and what it came from), so a recompile names its plan. Run it with
   * label `after` here and with label `before` on a checkout of the other
   * commit, with this file copied in. Adaptive execution is off, as in the
   * benchmark.
@@ -76,27 +78,91 @@ object OsmPlans {
   /** Classes Spark's code generator compiles while `action` runs. */
   def compiles(action: => Unit): Long = compiled(action).classes
 
-  /** Classes compiled and their summed compile time, in milliseconds. */
-  final case class Compiled(classes: Long, millis: Long)
+  /** Classes compiled, their summed compile time in milliseconds, and one
+    * line per class that entered the generated-code cache ([[describe]]).
+    */
+  final case class Compiled(classes: Long, millis: Long, names: Seq[String] = Nil)
 
   /** What Spark's code generator compiles while `action` runs. The time sums
     * the compile-time histogram, whole milliseconds per class; its reservoir
     * holds every sample while the JVM has compiled fewer than 1028 classes.
+    * The names are the cache entries that are new after `action`, so a class
+    * compiled and evicted again within `action` is counted but not named.
     */
   def compiled(action: => Unit): Compiled = {
     val h = CodegenMetrics.METRIC_COMPILATION_TIME
     val (n, t) = (h.getCount, h.getSnapshot.getValues.sum)
+    val before = cacheEntries().keySet
     action
-    Compiled(h.getCount - n, h.getSnapshot.getValues.sum - t)
+    val added = cacheEntries().filter { case (k, _) => !before.contains(k) }
+    Compiled(h.getCount - n, h.getSnapshot.getValues.sum - t, added.values.toSeq.sorted)
+  }
+
+  /** Spark's generated-code cache, keyed by class loader and source. */
+  private def codegenCache(): AnyRef = {
+    val method = CodeGenerator.getClass.getDeclaredMethod("cache")
+    method.setAccessible(true)
+    method.invoke(CodeGenerator)
+  }
+
+  /** The cache's entries: (class loader identity, source hash) -> [[describe]]
+    * line. The cache keys a class by loader and source, so one whole-stage
+    * codegen stage is two entries when the driver and the tasks load it
+    * through different class loaders.
+    */
+  def cacheEntries(): Map[(Int, String), String] = {
+    val guava = codegenCache().getClass.getMethod("cache").invoke(codegenCache())
+    val map = Class.forName("org.sparkproject.guava.cache.Cache").getMethod("asMap").invoke(guava)
+      .asInstanceOf[java.util.Map[AnyRef, AnyRef]]
+    val driver = Thread.currentThread.getContextClassLoader
+    map.keySet.toArray.toSeq.map { key =>
+      val (ref, code) = key.asInstanceOf[(java.lang.ref.Reference[ClassLoader], CodeAndComment)]
+      val loader = ref.get
+      val hash = sourceHash(code.body)
+      val side = if (loader eq driver) "driver" else "task  "
+      (System.identityHashCode(loader), hash) -> s"$hash $side ${describe(code.body)}"
+    }.toMap
+  }
+
+  private def sourceHash(body: String): String =
+    java.security.MessageDigest.getInstance("SHA-1").digest(body.getBytes(StandardCharsets.UTF_8))
+      .take(4).map(b => f"${b & 0xff}%02x").mkString
+
+  /** Variable prefixes of the operators whole-stage codegen fuses, as they
+    * appear in the generated source.
+    */
+  private val OperatorPrefixes = Seq("scan", "rdd", "localtablescan", "columnartorow", "inputadapter", "range",
+    "filter", "project", "generate", "expand", "hashAgg", "sortAgg", "sort", "bhj", "smj", "shj", "bnlj",
+    "serializefromobject", "deserializetoobject", "mapelements", "sample")
+
+  /** What a generated class came from, read off its source: the generated
+    * class (a whole-stage codegen stage with the operators it fuses, or a
+    * projection, predicate, ordering or column accessor), the engine kernels
+    * it calls and the interpreted expressions it falls back to.
+    */
+  def describe(body: String): String = {
+    val cls = """class (\w+)""".r.findAllMatchIn(body).map(_.group(1))
+      .find(c => c != "GeneratedClass").getOrElse("?")
+    val what =
+      if (cls.startsWith("GeneratedIteratorForCodegenStage")) {
+        // a limit's counter is named `_limit_counter_<n>`, n new in every plan
+        val ops = OperatorPrefixes.filter(p => s"\\b${p}_".r.findFirstIn(body).nonEmpty) ++
+          (if (body.contains("_limit_counter_")) Seq("limit") else Nil)
+        s"WholeStageCodegen stage ${cls.stripPrefix("GeneratedIteratorForCodegenStage")} (${ops.mkString(", ")})"
+      } else cls
+    val kernels = """(vps\.[\w.$]+?)\$?(?:\.MODULE\$)?\)? ?(?:references\[\d+\] /\* \w+ \*/\))?\.(\w+)\(""".r
+      .findAllMatchIn(body).map(m => s"${m.group(1).split('.').last}.${m.group(2)}").toSeq.distinct
+    val fallbacks = """\(\(Expression\) references\[\d+\]""".r.findAllMatchIn(body).size
+    val size = s"${body.length} chars"
+    (Seq(what) ++ Seq(kernels.mkString(" "), if (fallbacks > 0) s"$fallbacks interpreted" else "", size)
+      .filter(_.nonEmpty)).mkString(" | ")
   }
 
   /** Empties Spark's generated-code cache, so the next action compiles every
     * class it needs, as the first action of a JVM does.
     */
   def emptyCodegenCache(): Unit = {
-    val method = CodeGenerator.getClass.getDeclaredMethod("cache")
-    method.setAccessible(true)
-    val cache = method.invoke(CodeGenerator)
+    val cache = codegenCache()
     cache.getClass.getMethod("invalidateAll").invoke(cache)
   }
 
@@ -197,8 +263,14 @@ object OsmPlans {
     val steps = (s"-- classes compiled per library step of one osm_tiles-shaped operation, $label" +:
       "| run  | step                         | classes | compile ms |" +:
       "|------|------------------------------|---------|------------|" +: table).mkString("\n")
-    Files.write(dir.resolve(s"steps_$label.txt"), (steps + "\n").getBytes(StandardCharsets.UTF_8))
-    println(steps)
+    val names = rounds.flatMap { case (round, steps) =>
+      steps.flatMap { case (step, c) => s"-- $round: $step" +: c.names.map("   " + _) }
+    }
+    val record = (Seq(steps, "",
+      "-- classes that entered the generated-code cache, per step: source hash, class loader, origin") ++
+      names).mkString("\n")
+    Files.write(dir.resolve(s"steps_$label.txt"), (record + "\n").getBytes(StandardCharsets.UTF_8))
+    println(record)
     spark.stop()
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.functions.{array, col, explode, lit}
+import org.apache.spark.sql.functions.{array, col, explode, lit, map, struct}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vps.{Kernel, StateKernel}
 import org.scalatest.funsuite.AnyFunSuite
@@ -118,13 +118,27 @@ class FunctionTableSpec extends AnyFunSuite {
     val t = s.table("t")
     // the broadcast side of the probe rows: the rows with a box
     val boxes = t.where(col("poly").isNotNull)
+    val tags = map(lit("source"), col("txt"), lit("building"), col("txt2"))
+    val members = array(struct(lit("way").as("type"), col("id").as("ref"), col("txt").as("role"))).as("members")
     Map(
       "st_intersects_keyed" -> t.where(functions.st_intersects_keyed(col("id"), col("poly"), col("g"))),
       "tile_fragments" -> t.select(explode(functions.tile_fragments(col("poly"), 6, lit(31), lit(24),
         4096, withArea = false))),
       "not_dropped" -> t.where(vps.text.functions.not_dropped(array(col("id")), None, 1)),
       "probe_ids" -> t.select(explode(functions.probe_ids(IndexProbe.ofIds(boxes, "id", "poly"), col("g")))),
-      "probe_names" -> t.select(functions.probe_names(IndexProbe.ofNames(boxes, "txt", "poly"), col("g"))))
+      "probe_names" -> t.select(functions.probe_names(IndexProbe.ofNames(boxes, "txt", "poly"), col("g"))),
+      "tile_keys_at" -> t.select(functions.tile_keys_at(col("poly"), 6)),
+      "ancestor_tile_keys" -> t.select(functions.ancestor_tile_keys(functions.tile_keys(col("poly"), 8), 2)),
+      "simplified" -> t.select(functions.simplified(col("poly"), 0.1, preserveTopology = true)),
+      "in_tile_subset" -> t.where(functions.in_tile_subset(TileSubset.of(6, Set((31, 24))), col("poly"))),
+      "tile_in_subset" -> t.where(functions.tile_in_subset(TileSubset.of(6, Set((31, 24))), col("id").cast("int"),
+        lit(24))),
+      "remove_uninteresting_tags" -> t.select(TagFunctions.removeUninterestingTags(tags)),
+      "remove_semi_interesting_tags" -> t.select(TagFunctions.removeSemiInterestingTags(tags)),
+      "is_area" -> t.select(TagFunctions.isArea(tags)),
+      "compress_members" -> vps.osm.Osm.ensureCompressedMembers(t.select(members)),
+      "way_member_refs" -> vps.osm.Osm.ensureCompressedMembers(t.select(members))
+        .select(explode(FunctionTable.call("way_member_refs", col("members")))))
   }
 
   /** Eight points with a unit box around each, texts and vectors, plus an

@@ -87,4 +87,24 @@ class StreamingTilesSpec extends AnyFunSuite {
   test("foreachBatch incremental maintenance through the JOIN path (dirty set over the collect cap)") {
     incrementalDrill(maxDriverKeys = 1) // every batch exceeds the cap
   }
+
+  /** refreshTiles of a diff batch that dirties no tile: no tiles, nothing written. */
+  private def refreshNothing(diffs: Seq[(Long, String, String)]): Unit = {
+    import spark.implicits._
+    val snapshot = Seq((1L, "POINT (1 1)"), (2L, "LINESTRING (0 0, 3 3)")).toDF("id", "wkt")
+      .select($"id", vps.sql.functions.st_geomFromWKT($"wkt").as("geom"))
+    val tiles = DirtyTiles.refreshTiles(snapshot, diffs.toDF("id", "geom_wkt", "prev_geom_wkt"), 6)
+    assert(tiles.collect().isEmpty)
+    val out = java.nio.file.Files.createTempDirectory("refresh-nothing")
+    try assert(vps.tiling.TileSink.write(tiles, out.toString).isEmpty)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+  }
+
+  test("refreshTiles of an empty diff batch gives no tiles") {
+    refreshNothing(Seq.empty)
+  }
+
+  test("refreshTiles of a diff batch whose geometries are all null gives no tiles") {
+    refreshNothing(Seq((1L, null, null), (2L, null, null)))
+  }
 }

@@ -106,6 +106,25 @@ class TilePlanSpec extends AnyFunSuite {
     assertOneTileExchange(tiles)
   }
 
+  test("a pyramidRekey's second zoom compiles no class its first zoom did not") {
+    // the zoom, the levels up and the tolerance ride in state literals, so both
+    // zooms run one set of generated classes; the stats read the sink's plan
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val dir = java.nio.file.Files.createTempDirectory("tile-plan-spec")
+    try OsmPlans.withoutAqe(spark) {
+      OsmPlans.emptyCodegenCache()
+      val start = compiles.getCount
+      var first = -1L
+      var cached = Set.empty[String]
+      TilePipeline.pyramidRekey(input, 5, 6) { (z, tiles) =>
+        TileSink.write(tiles, dir.toString)
+        if (z == 6) { first = compiles.getCount - start; cached = OsmPlans.cacheEntries().values.toSet }
+      }
+      assert(first > 0)
+      assert(compiles.getCount - start - first === 0, OsmPlans.cacheEntries().values.toSet -- cached)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("one pyramidRekey zoom's final plan has exactly one hash exchange and no collecting aggregate") {
     var checked = Seq.empty[Int]
     TilePipeline.pyramidRekey(input, 5, 6) { (z, tiles) =>
