@@ -123,7 +123,6 @@ object FunctionTable {
     StateKernel("not_dropped", "keep", Seq(AnyArray), _ => BooleanType, _ => BucketFilter(None, 2),
       nullArgs = true),
     StateKernel("tile_keys_at", "keys", Seq(Geom), _ => TileKeys, passed("tile_keys_at")),
-    StateKernel("ancestor_tile_keys", "ancestors", Seq(TileKeys), _ => TileKeys, passed("ancestor_tile_keys")),
     StateKernel("simplified", "simplify", Seq(Geom), _ => Geom, passed("simplified")),
     StateKernel("in_tile_subset", "overlaps", Seq(Geom), _ => BooleanType, passed("in_tile_subset")),
     StateKernel("tile_in_subset", "contains", Seq(IntegerType, IntegerType), _ => BooleanType,

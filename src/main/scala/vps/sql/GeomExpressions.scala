@@ -623,14 +623,6 @@ final case class TileKeysAt(zoom: Int) {
   def keys(g: AnyRef): ArrayData = GeomOps.tileKeys(g, zoom)
 }
 
-/** The keys `levels` zooms up of a key array: `parent_tile_keys` applied
-  * `levels` times ([[GeomOps.parentTileKeys]]), so each ancestor once, in the
-  * order of its first descendant. Zero levels is the array as given.
-  */
-final case class AncestorKeys(levels: Int) {
-  def ancestors(keys: ArrayData): ArrayData = (0 until levels).foldLeft(keys)((k, _) => GeomOps.parentTileKeys(k))
-}
-
 /** `st_simplify` at a fixed tolerance ([[GeomOps.simplify]]). */
 final case class Simplification(tolerance: Double, preserveTopology: Boolean) {
   def simplify(g: AnyRef): Array[Byte] = GeomOps.simplify(g, tolerance, preserveTopology)
@@ -758,8 +750,6 @@ object functions {
 
   // the tile plans' calls, each with its per-call values in its state literal
   private[vps] def tile_keys_at(g: Column, zoom: Int): Column = callWith("tile_keys_at", TileKeysAt(zoom))(g)
-  private[vps] def ancestor_tile_keys(keys: Column, levels: Int): Column =
-    callWith("ancestor_tile_keys", AncestorKeys(levels))(keys)
   private[vps] def simplified(g: Column, tolerance: Double, preserveTopology: Boolean): Column =
     callWith("simplified", Simplification(tolerance, preserveTopology))(g)
   private[vps] def in_tile_subset(subset: TileSubset, g: Column): Column = callWith("in_tile_subset", subset)(g)

@@ -52,16 +52,24 @@ object DirtyTiles {
       maxDriverKeys: Int = 16384)
       : org.apache.spark.sql.Dataset[vps.tiling.TileRow] = {
     val dirty = fromDiffs(diffs, zoom).select(col("x"), col("y"))
-    // up to cap + 1 keys of each partition answer "does it exceed the cap"
-    // and yield the literal set in one job, the driver holding at most
-    // partitions x (cap + 1) keys. A limit operator would do it too, but its
-    // generated code names a counter that is new in every plan, so each
-    // batch would compile its stage again.
-    val head = dirty.queryExecution.toRdd
-      .mapPartitions(_.take(maxDriverKeys + 1).map(r => (r.getInt(0), r.getInt(1)))).collect()
+    val head = driverKeys(dirty, maxDriverKeys)
     if (head.length <= maxDriverKeys)
       vps.tiling.TilePipeline.tileZoomSubset(snapshot, zoom, head.toSet, opts)
     else
       vps.tiling.TilePipeline.tileZoomSubsetFrame(snapshot, zoom, dirty, opts)
   }
+
+  /** Up to `cap + 1` of the (x, y) keys of `dirty`, which answers "does it
+    * exceed the cap" and yields the literal set in one job: each partition
+    * keeps its first cap + 1 keys and a single task keeps the first cap + 1
+    * of those, so at most cap + 1 keys reach the driver. A limit operator
+    * would do the same, but its generated code names a counter that is new
+    * in every plan, so each batch would compile its stage again.
+    */
+  private[streaming] def driverKeys(dirty: DataFrame, cap: Int): Array[(Int, Int)] =
+    dirty.queryExecution.toRdd
+      .mapPartitions(_.take(cap + 1).map(r => (r.getInt(0), r.getInt(1))))
+      .coalesce(1, shuffle = true)
+      .mapPartitions(_.take(cap + 1))
+      .collect()
 }

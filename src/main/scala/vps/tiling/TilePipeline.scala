@@ -213,23 +213,22 @@ object TilePipeline {
 
   /** Pyramid via parent re-key (the reference's `reduceKeys` fold,
     * `VectorPipe.scala:118-122,195`): tile keys are computed from the input
-    * ONCE at maxZoom, into a frame persisted (MEMORY_AND_DISK) for the whole
-    * pyramid (the reference's optional persist, `VectorPipe.scala:188`);
-    * every coarser zoom derives its keys from them by halving (exact: the
-    * z-1 tiles intersecting an envelope are precisely the parents of the
-    * intersecting z tiles). The full-resolution input is scanned once, not
-    * once per zoom.
+    * ONCE at maxZoom; every coarser zoom derives its keys by halving the
+    * previous frame's keys (exact: the z-1 tiles intersecting an envelope are
+    * precisely the parents of the intersecting z tiles). The full-resolution
+    * input is scanned once, not once per zoom; frames persist
+    * (MEMORY_AND_DISK) between zooms (the reference's optional persist,
+    * `VectorPipe.scala:188`).
     *
     * Keys ride UNEXPLODED as `keys: array<struct<x,y>>` — one row per
-    * (id, layer) with the geometry stored once — and each zoom's re-key
-    * dedupes ancestors per row MAP-SIDE (the reference's per-row
-    * `reduceKeys`, as `parent_tile_keys` ([[vps.sql.GeomOps.parentTileKeys]])
-    * applied once per zoom up): zero shuffles between zooms, where an
-    * exploded frame would pay a full-row dropDuplicates exchange (WKB
-    * included) per zoom. The only exchange per zoom is packAndEncode's tile
-    * aggregation. Every zoom's plan is the same but for its state literals
-    * (zoom, levels up, tolerance), so all zooms run one set of generated
-    * classes.
+    * (id, layer) with the geometry stored once — and each re-key dedupes
+    * parents per row with `parent_tile_keys` ([[vps.sql.GeomOps.parentTileKeys]]) MAP-SIDE (the reference's
+    * per-row `reduceKeys`): zero shuffles between zooms, where an exploded
+    * frame would pay a full-row dropDuplicates exchange (WKB included) per
+    * zoom. The only exchange per zoom is packAndEncode's tile aggregation.
+    * A zoom's tile plan differs from the next one's only in its state
+    * literals (zoom, tolerance), and every re-key runs the same stage, so a
+    * pyramid compiles classes for its first zoom and its first re-key only.
     *
     * Output tiles are byte-identical to [[tileZoom]] per zoom — see
     * [[tileZoomKeyed]]. `reduce` receives ALL input columns plus (id cast
@@ -256,27 +255,34 @@ object TilePipeline {
     // keep EVERY input column (select/reduce hooks may reference them — the
     // rekey switch must not change the hook contract); "layer" and "keys" are
     // reserved names the fold overwrites
-    val frame = input
+    var frame = input
       .withColumn("id", col("id").cast("long"))
       .withColumn("layer", layerExpr)
       .withColumn("keys", tile_keys_at(col("geom"), maxZoom))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var prev: Option[DataFrame] = None
     var tiles: Option[Dataset[TileRow]] = None
+    val out = Seq.newBuilder[(Int, Long, Long)]
     try {
-      (maxZoom to minZoom by -1).map { z =>
-        val keyed = frame.withColumn("keys", ancestor_tile_keys(col("keys"), maxZoom - z))
+      for (z <- maxZoom to minZoom by -1) {
+        frame.persist(StorageLevel.MEMORY_AND_DISK)
         // tiles (encoded MVTs, small) are cached: sink and stats would
         // otherwise each run the tiling job
-        val t = tileZoomKeyed(reduce(keyed, z), z, opts).persist(StorageLevel.MEMORY_AND_DISK)
+        val t = tileZoomKeyed(reduce(frame, z), z, opts).persist(StorageLevel.MEMORY_AND_DISK)
         tiles = Some(t)
         sink(z, t)
         val (n, features) = counts(t)
+        out += ((z, n, features))
         t.unpersist()
         tiles = None
-        (z, n, features)
+        prev.foreach(_.unpersist())
+        prev = Some(frame)
+        // re-key: halve + dedupe the key array per row — no shuffle
+        if (z > minZoom) frame = frame.withColumn("keys", parent_tile_keys(col("keys")))
       }
+      out.result()
     } finally {
       tiles.foreach(_.unpersist())
+      prev.foreach(_.unpersist())
       frame.unpersist()
     }
   }

@@ -128,7 +128,6 @@ class FunctionTableSpec extends AnyFunSuite {
       "probe_ids" -> t.select(explode(functions.probe_ids(IndexProbe.ofIds(boxes, "id", "poly"), col("g")))),
       "probe_names" -> t.select(functions.probe_names(IndexProbe.ofNames(boxes, "txt", "poly"), col("g"))),
       "tile_keys_at" -> t.select(functions.tile_keys_at(col("poly"), 6)),
-      "ancestor_tile_keys" -> t.select(functions.ancestor_tile_keys(functions.tile_keys(col("poly"), 8), 2)),
       "simplified" -> t.select(functions.simplified(col("poly"), 0.1, preserveTopology = true)),
       "in_tile_subset" -> t.where(functions.in_tile_subset(TileSubset.of(6, Set((31, 24))), col("poly"))),
       "tile_in_subset" -> t.where(functions.tile_in_subset(TileSubset.of(6, Set((31, 24))), col("id").cast("int"),

@@ -107,4 +107,16 @@ class StreamingTilesSpec extends AnyFunSuite {
   test("refreshTiles of a diff batch whose geometries are all null gives no tiles") {
     refreshNothing(Seq((1L, null, null), (2L, null, null)))
   }
+
+  test("at most maxDriverKeys + 1 dirty keys reach the driver, whatever the partition count") {
+    import org.apache.spark.sql.functions.col
+    // eight partitions of five keys each: every partition alone reaches the cap
+    val dirty = spark.range(0, 40, 1, 8)
+      .select(col("id").cast("int").as("x"), (col("id") * 2).cast("int").as("y"))
+    val all = (0 until 40).map(i => (i, 2 * i)).toSet
+    val capped = DirtyTiles.driverKeys(dirty, 4)
+    assert(capped.length === 5)
+    assert(capped.toSet.size === 5 && capped.toSet.subsetOf(all))
+    assert(DirtyTiles.driverKeys(dirty, 40).toSet === all)
+  }
 }

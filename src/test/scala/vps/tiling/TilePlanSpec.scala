@@ -106,22 +106,30 @@ class TilePlanSpec extends AnyFunSuite {
     assertOneTileExchange(tiles)
   }
 
-  test("a pyramidRekey's second zoom compiles no class its first zoom did not") {
-    // the zoom, the levels up and the tolerance ride in state literals, so both
-    // zooms run one set of generated classes; the stats read the sink's plan
+  test("a pyramidRekey compiles no tile class after its first zoom, and no class after its first re-key") {
+    // the zoom and the tolerance ride in state literals, so every zoom runs one
+    // set of tile classes; each re-key after the first runs the first one's
+    // stage, and the stats read the sink's plan
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val dir = java.nio.file.Files.createTempDirectory("tile-plan-spec")
     try OsmPlans.withoutAqe(spark) {
       OsmPlans.emptyCodegenCache()
-      val start = compiles.getCount
-      var first = -1L
+      var counts = Map.empty[Int, Long]
+      var added = Map.empty[Int, Set[String]]
       var cached = Set.empty[String]
-      TilePipeline.pyramidRekey(input, 5, 6) { (z, tiles) =>
+      var last = compiles.getCount
+      TilePipeline.pyramidRekey(input, 4, 6) { (z, tiles) =>
         TileSink.write(tiles, dir.toString)
-        if (z == 6) { first = compiles.getCount - start; cached = OsmPlans.cacheEntries().values.toSet }
+        val now = OsmPlans.cacheEntries().values.toSet
+        counts += z -> (compiles.getCount - last)
+        added += z -> (now -- cached)
+        cached = now
+        last = compiles.getCount
       }
-      assert(first > 0)
-      assert(compiles.getCount - start - first === 0, OsmPlans.cacheEntries().values.toSet -- cached)
+      assert(counts(6) > 0)
+      assert(counts(5) === added(5).size && added(5).exists(_.contains("GeomOps.parentTileKeys")), added(5))
+      assert(!added(5).exists(_.contains("TileFragments")), added(5))
+      assert(counts(4) === 0, added(4))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
